@@ -160,27 +160,8 @@ object Bench {
           gcSec() - g0)
       }
     }
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        // let the planner pick shuffled-hash over sort-merge when its
-        // size conditions hold (guide §9 baseline; §3.1: often faster
-        // when one side is moderately small per partition — skips both
-        // sorts). Not scale-dependent: the build side must still fit
-        // its per-partition memory, which AQE's size checks gate.
-        // Overridable for A/B runs.
-        .config("spark.sql.join.preferSortMergeJoin",
-          sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      GraftSession.quietKnownWarnings()
-      s
-    }
+    def newSession(): SparkSession =
+      GraftSession.local(cpus.toInt, "graft-bench")
 
     // Throughput anchors in their OWN SparkContext, measured first: they
     // are the longest-running measurements (3.2M-row pipelines) and the
@@ -282,40 +263,15 @@ object Bench {
     // and task counts makes that attributable from the artifact: a
     // query whose runtime ≈ jobs × per-job overhead cannot demonstrate
     // parallelism at this SF no matter how many cores it gets.)
-    val jobCtr = new java.util.concurrent.atomic.AtomicInteger()
-    val taskCtr = new java.util.concurrent.atomic.AtomicInteger()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          { jobCtr.incrementAndGet(); () }
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          { taskCtr.incrementAndGet(); () }
-      })
-    // listener events post asynchronously: snapshot only once the
-    // counters are stable (two reads 30 ms apart agree, bounded wait)
-    def settledCounts(): (Int, Int) = {
-      var last = (jobCtr.get(), taskCtr.get())
-      var waited = 0
-      while (waited < 1000) {
-        Thread.sleep(30); waited += 30
-        val now = (jobCtr.get(), taskCtr.get())
-        if (now == last) return now
-        last = now
-      }
-      last
-    }
+    val jobCtr = JobCounter.attach(spark.sparkContext)
     // per-query MIN job count across passes (AQE can add a stray job
     // on a contended pass; the min is the plan's deterministic floor)
     // and the matching task count
     val queryJobs =
-      scala.collection.mutable.Map[String, (Int, Int)]()
-    def recordCounts(name: String, jobs: Int, tasks: Int): Unit =
-      if (jobs >= 0) queryJobs.get(name) match {
-        case Some((j, _)) if j <= jobs => ()
-        case _ => queryJobs(name) = (jobs, tasks)
-      }
+      scala.collection.mutable.Map[String, JobCounter.Counts]()
+    def recordCounts(name: String, c: JobCounter.Counts): Unit =
+      if (c.jobs >= 0 && queryJobs.get(name).forall(_.jobs > c.jobs))
+        queryJobs(name) = c
     val qs = SparkEntry.queries
     // Per-query warmup at the smallest SF: identical plan shapes generate
     // identical code, so the janino compile + JIT cost is paid outside the
@@ -347,7 +303,7 @@ object Bench {
     // comparisons and variance stay auditable against the pre-r12
     // median rounds (r12 advice).
     def timeOne(name: String): Double = {
-      val (j0, k0) = settledCounts()
+      val c0 = jobCtr.settled()
       val t0 = System.nanoTime()
       val ok = try {
         qs(name)(spark, sfDir).write.format("noop").mode("overwrite")
@@ -357,11 +313,8 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           false }
       val sec = (System.nanoTime() - t0) / 1e9
-      // job/task counts OUTSIDE the timed region (settledCounts sleeps)
-      if (ok) {
-        val (j1, k1) = settledCounts()
-        recordCounts(name, j1 - j0, k1 - k0)
-      }
+      // job/task counts OUTSIDE the timed region (settled() sleeps)
+      if (ok) recordCounts(name, jobCtr.settled() - c0)
       // operators that persist intermediates (minhash shingles, bm25
       // term base) register with the CacheManager; without this the
       // blocks accumulate across the ~40 bench queries and later
@@ -526,14 +479,14 @@ object Bench {
       case (n, v, _) if v >= 0 => n -> v
     }.toMap
     val jobsJson = queryJobs.toSeq.sortBy(_._1)
-      .map { case (n, (j, _)) => "\"" + n + s"\":$j" }
+      .map { case (n, c) => "\"" + n + s"\":${c.jobs}" }
       .mkString("{", ",", "}")
     val tasksJson = queryJobs.toSeq.sortBy(_._1)
-      .map { case (n, (_, t)) => "\"" + n + s"\":$t" }
+      .map { case (n, c) => "\"" + n + s"\":${c.tasks}" }
       .mkString("{", ",", "}")
     val overheadJson = queryJobs.toSeq.sortBy(_._1)
-      .flatMap { case (n, (j, _)) => allMins.get(n).map { sec =>
-        "\"" + n + s"""\":${j * 0.1 >= 0.5 * sec}""" } }
+      .flatMap { case (n, c) => allMins.get(n).map { sec =>
+        "\"" + n + s"""\":${c.jobs * 0.1 >= 0.5 * sec}""" } }
       .mkString("{", ",", "}")
     val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","quiet":{"total":$totalQuiet},"queries":$qJson,"queries_quiet":${quietJson(results)},"sf":"$sfDir","derived":$derived,"sf1_anchor":$sf1Json,"extra":$extraJson,"extra_quiet":${quietJson(extraResults)},"queries_reps":${repsJson(headlineReps)},"extra_reps":${repsJson(extraReps)},"queries_jobs":$jobsJson,"queries_tasks":$tasksJson,"queries_overhead_bound":$overheadJson,"headline_pass_load":${passLoadsJsonFor("headline", nHeadlinePasses)},"extra_pass_load":${passLoadsJsonFor("extra", nExtraPasses)},"quiet_load_threshold":$quietLoad%.1f,"quiet_cpu_threshold":$quietCpuWall%.1f,$loadSummary,"load_passes":$loadPassesJson}"""
     try {

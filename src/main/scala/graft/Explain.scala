@@ -1,112 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
 /** Plan-inspection utility: `runMain graft.Explain <sfDir> [query...]`
   * prints the formatted physical plan per query (checking pushdown /
-  * broadcast / codegen spans); `-minhash` times each stage of the
-  * minhash pipeline; `-time <sfDir> [query...]` times each query
-  * (bench-identical noop sink, min of 3 after a small-SF warm pass) at
-  * local[32] — the profiling twin of Bench's extras block.
+  * broadcast / codegen spans) under the engine configuration every other
+  * entry point runs. To time queries use `tools.QueryBench`; for the
+  * minhash pipeline's per-stage costs use `tools.MinhashPhaseBench`.
   *
   * Caveat for the EAGER queries (q_minhash_pairs and the CC/PageRank
   * compositions): building the frame materializes the pipeline
   * (localCheckpoint), so plan mode pays the full run at the requested
-  * SF and prints only the post-materialization checkpoint scan. Use
-  * `-minhash` for the pipeline's internal stage shapes, and run plan
-  * mode for those queries at sf0.001.
+  * SF and prints only the post-materialization checkpoint scan. Run
+  * plan mode for those queries at sf0.001.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val timing = args.headOption.contains("-time")
-    val rest = if (timing) args.tail else args
-    val sfDir = rest.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (rest.length > 1) rest.tail.toSeq else Seq("q1_agg")
-    val cores = if (timing) 32 else 8
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    if (names == Seq("-minhash")) { minhashBreakdown(spark, sfDir); return }
-
-    if (timing) {
-      val qs = SparkEntry.queries
-      names.filterNot(qs.contains)
-        .foreach(n => println(s"[time] $n UNKNOWN QUERY"))
-      names.filter(qs.contains).foreach { n =>
-        // warm pass in its OWN try: a missing warm dataset (or a query
-        // without sf0.001 inputs) must not mark the real timed runs at
-        // the requested sfDir as FAILED
-        try {
-          qs(n)(spark, "/root/testdata/sf0.001")
-            .write.format("noop").mode("overwrite").save()
-          spark.catalog.clearCache(); graft.operators.Caches.clear()
-        } catch { case scala.util.control.NonFatal(_) => () }
-        try {
-          val runs = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            qs(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-            val sec = (System.nanoTime() - t0) / 1e9
-            spark.catalog.clearCache(); graft.operators.Caches.clear()
-            sec
-          }
-          println(f"[time] $n min=${runs.min}%.3f reps=" +
-            runs.map(x => f"$x%.3f").mkString(","))
-        } catch { case scala.util.control.NonFatal(e) =>
-          println(s"[time] $n FAILED: ${e.getMessage}")
-        }
-      }
-      spark.stop(); return
-    }
-
+    require(args.nonEmpty, "usage: graft.Explain <sfDir> [query...]")
+    val sfDir = args(0)
+    val names = if (args.length > 1) args.tail.toSeq else Seq("q1_agg")
+    val spark = GraftSession.local(8, "graft-explain")
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")
     }
-    spark.stop()
-  }
-
-  private def minhashBreakdown(spark: SparkSession, sfDir: String): Unit = {
-    import graft.functions.TextFunctions
-    import graft.operators.Dedup
-    val docs = graft.queries.DocQueries.docsWithDupsPublic(spark, sfDir)
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"$label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-    time("count docs")(docs.count())
-    val sh = docs.select(col("doc_id").as("id"),
-      TextFunctions.wordShingles(col("text"), 3).as("sh"))
-      .where(size(col("sh")) > 0)
-    time("shingles")(sh.count())
-    val sigs = sh.select(col("id"),
-      Dedup.minhashSignature(col("sh"), 32).as("sig"))
-    time("signatures")(sigs.count())
-    val bandsDf = sigs.select(col("id"),
-      explode(Dedup.bandKeys(col("sig"), 8, 4)).as("bk"))
-      .select(col("id"), col("bk.band"), col("bk.bh"))
-    time("bands")(bandsDf.count())
-    val cands = bandsDf.select(col("id").as("id_a"), col("band"), col("bh"))
-      .join(bandsDf.select(col("id").as("id_b"), col("band"), col("bh")),
-        Seq("band", "bh"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-    time("candidates")(cands.count())
-    val verified = cands
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard", Dedup.jaccard(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= 0.5)
-    time("verified")(verified.count())
     spark.stop()
   }
 }

@@ -19,12 +19,18 @@ object GraftSession {
 
   /** Silence the benign `WindowExec: No Partition Defined` warning flood.
     * Every unpartitioned window in this library sits behind the bounded
-    * three-site whitelist that GlobalWindowGateSpec enforces (provably
-    * ≤50 k-row frames) — the spec, not this log line, is the protection.
+    * three-site whitelist that CoreQueriesSpec's window gate enforces
+    * (provably ≤50 k-row frames) — the spec, not this log line, is the
+    * protection.
     * The driver records only the stdout TAIL of bench/verify runs, and
     * thousands of repeats of this known-benign line would bury any NEW
-    * warning class in that window (r10 verdict #3). */
-  def quietKnownWarnings(): Unit = {
+    * warning class in that window (r10 verdict #3).
+    *
+    * Idempotent: the filters install once per JVM, so calling this on
+    * every [[local]] session costs nothing after the first. */
+  def quietKnownWarnings(): Unit = quieted
+
+  private lazy val quieted: Unit = {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
@@ -35,7 +41,8 @@ object GraftSession {
     // operator). Benign BY CONSTRUCTION: a result is only released
     // after everything derived from it is itself materialized, so the
     // truncated lineage is never re-executed; the hygiene specs
-    // (StorageHygiene/Soak), not this log line, are the protection.
+    // (StorageHygiene, CoreQueriesSpec's soak sweep), not this log
+    // line, are the protection.
     // A MESSAGE-level filter, deliberately not a logger-level cut:
     // RDD warnings key by concrete class, so silencing the whole
     // MapPartitionsRDD logger would also hide any FUTURE warning that
@@ -76,7 +83,9 @@ object GraftSession {
   }
 
   /** Shared tuning: adaptive execution (coalescing + skew-join split),
-    * UTC timestamps (oracle/Postgres parity), extensions registered. */
+    * UTC timestamps (oracle/Postgres parity), extensions registered.
+    * The one engine configuration: tests, Verify, Bench, Explain and the
+    * tools all build their sessions through [[local]], which applies it. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .withExtensions(new graft.plans.GraftExtensions)
     .config("spark.sql.adaptive.enabled", "true")
@@ -86,9 +95,8 @@ object GraftSession {
     // scale-dependent: the build side must still fit its per-partition
     // memory, which the planner/AQE size checks gate. Promoted here
     // from the bench-only session (r17) so the engine users get IS the
-    // engine that is measured; env-overridable for A/B runs.
-    .config("spark.sql.join.preferSortMergeJoin",
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
+    // engine that is measured.
+    .config("spark.sql.join.preferSortMergeJoin", "false")
     .config("spark.sql.session.timeZone", "UTC")
     // timezone-less parquet timestamps read as TimestampType (UTC), not
     // NTZ — keeps unix_micros/oracle parity independent of writer quirks
@@ -108,6 +116,7 @@ object GraftSession {
     // extensions never applied — make function registration unconditional
     graft.plans.GraftExtensions.register(s)
     s.sparkContext.setLogLevel("WARN")
+    quietKnownWarnings()
     s
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,20 +12,9 @@ object Verify {
       System.err.println(s"[verify] unknown query name: $bad")
     })
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same join-strategy default as GraftSession.configure and Bench
-      // (r17 verdict #2): the oracle must verify the plans the bench
-      // measures and product sessions run, not a stock-config variant
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietKnownWarnings()
+    // the one engine configuration (GraftSession.configure): the oracle
+    // verifies the plans the bench measures and product sessions run
+    val spark = GraftSession.local(cpus.toInt, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // Queries are independent; run a few concurrently so the driver's
     // per-round verify doesn't serialize 40+ small Spark jobs (Spark's

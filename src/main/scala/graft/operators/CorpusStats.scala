@@ -35,7 +35,7 @@ object CorpusStats {
     // without the persist each branch re-runs the corpus-sized explode +
     // agg — an extra full corpus pass at scale. Registered with
     // [[Caches]]: consumers release via Caches.clear() after their
-    // action (Bench/Explain do per query; StorageHygieneSpec gates it).
+    // action (Bench does per query; StorageHygieneSpec gates it).
     val freq = Tokenizer.wordFreq(docs, textCol)
       .persistTracked
     val total = freq.agg(sum("freq").as("_total"))

@@ -851,7 +851,7 @@ object DedupIndex {
     * `partitionBy("epoch", "band")` write still opens one parquet file
     * PER BAND VALUE inside that task — |bands| sequential writer
     * open/flush/close cycles dominated the measured append wall
-    * (IdxJobTrace r18: the bands job was ~430 ms of a ~1 s append, 1
+    * (r18 job trace: the bands job was ~430 ms of a ~1 s append, 1
     * task, 16 files). Hash-partitioning on the partition columns (the
     * range tiebreaker `bh` dropped) into `bands` partitions writes the
     * SAME ≤ |bands|-files-per-epoch layout with the per-file costs in

@@ -175,18 +175,10 @@ object Pelt {
     * ruptures' prune rule loses Killick's optimality guarantee under
     * min_size; [[detectExact]]'s grace-window prune restores it at
     * pruned speed (the features+CPD anchor measures within ~2% of the
-    * ruptures-parity kernel). GRAFT_PELT_FORCE_PRUNED is the A/B
-    * measurement probe (tools.CpdAnchorBench) — it forces the
-    * ruptures-parity path so anchor movement can be attributed to the
-    * kernel without a code edit. LOCAL-MODE ONLY by design: the env is
-    * read in the kernel, which executes on executors, and a cluster's
-    * executor JVMs do not inherit the driver's environment — a
-    * deployment-grade switch would be a propagated spark conf, which
-    * this deliberately is not (it gates a bench probe, not behavior). */
+    * ruptures-parity kernel). */
   def detectAuto(signal: Array[Double], penalty: Double, minSize: Int,
       jump: Int = 1): Array[Int] =
-    if (!sys.env.contains("GRAFT_PELT_FORCE_PRUNED") &&
-        evalCount(signal.length, minSize, jump) <= ExactSafeEvals)
+    if (evalCount(signal.length, minSize, jump) <= ExactSafeEvals)
       detectExact(signal, penalty, minSize, jump)
     else detect(signal, penalty, minSize, jump)
 

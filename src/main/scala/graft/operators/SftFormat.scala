@@ -59,17 +59,6 @@ object SftFormat {
     * rendered elements, so the SQL oracle replays offsets exactly. */
   def renderConversation(df: DataFrame, idCol: String,
       turnsCol: Column): DataFrame = {
-    // graft.sft.skipNullGuard: A/B measurement probe (the
-    // GRAFT_PELT_FORCE_PRUNED convention, tools.SftGuardBench) — drops
-    // the null fail-fast so its cost can be attributed without a code
-    // edit. A session CONF rather than an env var because the gate is
-    // a driver-side plan choice and the probe interleaves guarded/
-    // unguarded reps in ONE JVM to dodge box-load spikes (an env is
-    // frozen at JVM start). Measurement only, never a deployment
-    // switch: skipping the guard reintroduces the cross-engine
-    // render/offset drift documented above.
-    val guardOn = !df.sparkSession.conf
-      .getOption("graft.sft.skipNullGuard").contains("true")
     // The null fail-fast rides the spans transform's role field — the
     // pass the projection ALREADY pays — instead of a separate filter
     // scan. Why this is both safe and free:
@@ -88,14 +77,12 @@ object SftFormat {
     //    array twice, and because filter predicates are pushed below
     //    the projection that names the array, EACH reference re-ran
     //    the whole turns construction per input row: measured +126%
-    //    on q_sft_render / +42% on q_sft_render_n
-    //    (tools.SftGuardBench). Fused into the role field the guard
-    //    measures ~0% on both — the filter below reverts to the plain
-    //    size(turns) > 0 (constant-folded away entirely on
+    //    on q_sft_render / +42% on q_sft_render_n (r14 A/B). Fused
+    //    into the role field the guard measures ~0% on both — the
+    //    filter below reverts to the plain size(turns) > 0 (constant-folded away entirely on
     //    literal-length conversations like the two-turn path).
     def checkedRole(t: Column): Column =
-      if (!guardOn) t("role")
-      else when(t("role").isNull || t("content").isNull,
+      when(t("role").isNull || t("content").isNull,
         raise_error(concat(
           lit("renderConversation: null role/content in conversation "),
           coalesce(col(idCol).cast("string"), lit("null"))))

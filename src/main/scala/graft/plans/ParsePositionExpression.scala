@@ -90,23 +90,15 @@ object ParsePositionExpression {
 }
 
 /** Session extensions registering graft's native expressions for both the
-  * SQL surface (`SELECT parse_position(col)`) and the Column API:
+  * SQL surface (`SELECT parse_position(col)`) and the Column API. Apply
+  * them through [[graft.GraftSession.configure]]:
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
+  * val spark = GraftSession.configure(builder).getOrCreate()
   * }}}
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction(GraftExtensions.parsePositionDescriptor)
-    e.injectFunction(GraftExtensions.pointInPolygonDescriptor)
-    e.injectFunction(GraftExtensions.vecCosineDescriptor)
-    e.injectFunction(GraftExtensions.vecDotDescriptor)
-    e.injectFunction(GraftExtensions.lshSignatureDescriptor)
-    e.injectFunction(GraftExtensions.unicodeNormalizeDescriptor)
-    e.injectFunction(GraftExtensions.charNgramMatchesDescriptor)
-    e.injectFunction(GraftExtensions.arrayClippedMatchesDescriptor)
-    e.injectFunction(GraftExtensions.arrayLcsLengthDescriptor)
-  }
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    GraftExtensions.descriptors.foreach(e.injectFunction)
 }
 
 object GraftExtensions {
@@ -211,6 +203,17 @@ object GraftExtensions {
       (exprs: Seq[Expression]) =>
         SentenceUnionLcsExpression(exprs(0), exprs(1)))
 
+  /** Every native function, in one list: the builder extensions
+    * ([[GraftExtensions.apply]]) and [[register]] both install exactly
+    * these. */
+  val descriptors
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(parsePositionDescriptor, pointInPolygonDescriptor,
+      vecCosineDescriptor, vecDotDescriptor, lshSignatureDescriptor,
+      unicodeNormalizeDescriptor, charNgramMatchesDescriptor,
+      arrayClippedMatchesDescriptor, arrayLcsLengthDescriptor,
+      sentenceUnionLcsDescriptor)
+
   /** Register into an already-built session (builder extensions only apply
     * to sessions constructed with `withExtensions`; `getOrCreate` on an
     * existing session ignores them). */
@@ -218,11 +221,7 @@ object GraftExtensions {
     val registry = spark
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
-    Seq(parsePositionDescriptor, pointInPolygonDescriptor,
-        vecCosineDescriptor, vecDotDescriptor, lshSignatureDescriptor,
-        unicodeNormalizeDescriptor, charNgramMatchesDescriptor,
-        arrayClippedMatchesDescriptor, arrayLcsLengthDescriptor,
-        sentenceUnionLcsDescriptor).foreach {
+    descriptors.foreach {
       case (id, info, builder) => registry.registerFunction(id, info, builder)
     }
   }

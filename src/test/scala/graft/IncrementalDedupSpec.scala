@@ -187,14 +187,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val n = 20L
     val vertices = (1L to n).toDF("id")
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val stages = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        stages.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val counter = graft.JobCounter.attach(spark.sparkContext)
     try {
       val comp = graft.operators.Dedup
         .connectedComponents(vertices, pairs, "id", maxIter = 25)
@@ -211,14 +204,10 @@ class IncrementalDedupSpec extends AnyFunSuite {
       // ~3·i stages at round i, ~600 total on this graph — while each
       // persisted round costs a constant handful; 12/round is 2x headroom
       // over the measured cost, far under the quadratic blowup.
-      var last = -1
-      var settle = 0
-      while (settle < 10 && stages.get() != last) { // let the bus drain
-        last = stages.get(); Thread.sleep(100); settle += 1
-      }
-      assert(stages.get() <= 12 * 21,
-        s"stage count ${stages.get()} suggests per-iteration lineage replay")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      val stages = counter.settled().stages
+      assert(stages <= 12 * 21,
+        s"stage count $stages suggests per-iteration lineage replay")
+    } finally counter.detach()
   }
 
   test("registeredDomain reduces hosts to their last two labels") {

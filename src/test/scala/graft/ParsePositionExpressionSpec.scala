@@ -91,4 +91,29 @@ class ParsePositionExpressionSpec extends AnyFunSuite {
     assert(nat.sameElements(viaUdf))
     assert(nat.count(identity) > 0) // some points do land in pits
   }
+
+  test("builder extensions inject exactly the functions register installs") {
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val injected = scala.collection.mutable.ListBuffer.empty[String]
+    new GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    })
+    // a fresh session stripped to the built-ins, so the registry then
+    // holds exactly what register adds
+    val fresh = spark.newSession()
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val registry = fresh.sessionState.functionRegistry
+    val builtin = FunctionRegistry.builtin.listFunction().toSet
+    registry.listFunction().filterNot(builtin).foreach(registry.dropFunction)
+    GraftExtensions.register(fresh)
+    val registered = registry.listFunction().filterNot(builtin)
+      .map(_.funcName).toSet
+    assert(injected.size == injected.toSet.size, s"duplicates in $injected")
+    assert(injected.toSet == registered,
+      s"apply-only: ${injected.toSet -- registered}, " +
+        s"register-only: ${registered -- injected.toSet}")
+  }
 }

@@ -8,7 +8,7 @@ import graft.operators._
 /** Storage-ownership contract: no operator leaks persisted blocks across
   * calls in a long-running session. Every operator-internal
   * multi-consumer cache is registered with [[graft.operators.Caches]]
-  * (released by `Caches.clear()`, which Bench/Explain call between
+  * (released by `Caches.clear()`, which Bench calls between
   * queries), iterative operators release their own caches before
   * returning, and checkpoint-backed RESULTS are freed deterministically
   * by `Caches.releaseResult`. Each test snapshots

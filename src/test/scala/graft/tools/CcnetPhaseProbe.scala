@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Optimization-round diagnostics for q_ccnet_bands: decompose
@@ -11,35 +10,8 @@ object CcnetPhaseProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.quietKnownWarnings()
-
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-      })
-    def t[T](label: String)(body: => T): T = {
-      val j0 = jobs.get
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"PHASE $label%-22s ${(System.nanoTime() - t0) / 1e9}%8.3f s" +
-        f"  jobs=${jobs.get - j0}%3d")
-      r
-    }
+    val spark = graft.GraftSession.local(cpus.toInt, "graft-ccnet-phase")
+    val jc = graft.JobCounter.attach(spark.sparkContext)
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
@@ -51,7 +23,7 @@ object CcnetPhaseProbe {
       val docs = graft.Tables.ensureParallelism(
         graft.Tables.documents(spark, sfDir))
       // mirror perplexityBands internals
-      val scored = t("scored_build+mat") {
+      val scored = jc.phase("scored_build+mat") {
         val s0 = graft.operators.CorpusStats
           .kn5LogProb(docs, "doc_id", "text")
           .select(col("doc_id"),
@@ -67,7 +39,7 @@ object CcnetPhaseProbe {
       // r18 single-pass bounds shape (sort_array over the collected
       // bounded sample — one job where the r17 shape ran a window, a
       // second TakeOrdered and a crossJoin)
-      val bounds = t("bounds_agg") {
+      val bounds = jc.phase("bounds_agg") {
         val b = sample
           .agg(sort_array(collect_list(col("avg_q6")), asc = false)
             .as("_arr"), count(lit(1)).as("_n"))
@@ -80,7 +52,7 @@ object CcnetPhaseProbe {
         noop(b)
         b
       }
-      t("label+orderBy") {
+      jc.phase("label+orderBy") {
         noop(scored.crossJoin(broadcast(bounds))
           .select(col("doc_id"), col("avg_q6"),
             when(col("avg_q6") >= col("_b_head"), lit("head"))
@@ -88,7 +60,7 @@ object CcnetPhaseProbe {
               .otherwise(lit("tail")).as("band"))
           .orderBy("doc_id"))
       }
-      t("full_operator") {
+      jc.phase("full_operator") {
         noop(graft.operators.CorpusStats.perplexityBands(docs, "doc_id",
           "text").orderBy("doc_id"))
       }

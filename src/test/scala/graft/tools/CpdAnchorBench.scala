@@ -10,15 +10,7 @@ import org.apache.spark.sql.functions._
 object CpdAnchorBench {
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.map(_.toInt).getOrElse(2)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32, "graft-cpd-anchor")
     import graft.operators.{Cpd, FeatureEngineering}
     // the EXACT frames the bench anchors use — shared builders, so this
     // probe cannot drift from what Bench measures (r11 review)

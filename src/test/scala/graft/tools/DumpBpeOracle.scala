@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generator for the q_bpe_encode pinned-rule oracle
@@ -18,11 +17,7 @@ import org.apache.spark.sql.functions._
 object DumpBpeOracle {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(4, "graft-dump-bpe")
 
     val docs = graft.Tables.documents(spark, sfDir)
     val rules = Tokenizer.bpeTrain(docs, "text",

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generator for the q_ann_ivfpq pinned-quantizer oracle
@@ -20,11 +19,7 @@ import org.apache.spark.sql.functions._
 object DumpIvfPqOracle {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(4, "graft-dump-ivfpq")
 
     // EXACT replay of ivfPqTopK's training-sample selection
     val maxTrain = 50000

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Generator for the q_ann_pq pinned-codebook oracle
@@ -17,11 +16,7 @@ import org.apache.spark.sql.functions._
 object DumpPqOracle {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(4, "graft-dump-pq")
 
     // EXACT replay of pqTopK's training-sample selection
     val maxTrain = 50000

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off phase-timing probe for the DedupIndex lifecycle queries
@@ -11,44 +10,9 @@ object IdxPhaseBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.quietKnownWarnings()
+    val spark = graft.GraftSession.local(cpus.toInt, "graft-idx-phase")
     import graft.operators.DedupIndex
-
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val stages = new java.util.concurrent.atomic.AtomicInteger()
-    val tasks = new java.util.concurrent.atomic.AtomicInteger()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          stages.incrementAndGet()
-          tasks.addAndGet(s.stageInfo.numTasks); ()
-        }
-      })
-
-    def t[T](label: String)(body: => T): T = {
-      val (j0, s0, k0) = (jobs.get, stages.get, tasks.get)
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"PHASE $label%-22s ${(System.nanoTime() - t0) / 1e9}%8.3f s" +
-        f"  jobs=${jobs.get - j0}%3d stages=${stages.get - s0}%3d " +
-        f"tasks=${tasks.get - k0}%4d")
-      r
-    }
+    val jc = graft.JobCounter.attach(spark.sparkContext)
 
     (1 to 2).foreach { round =>
       println(s"== round $round ==")
@@ -65,25 +29,25 @@ object IdxPhaseBench {
       val tmp = java.nio.file.Files
         .createTempDirectory("graft_idx_phase_").toString
       try {
-        t("build") {
+        jc.phase("build") {
           DedupIndex.build(docs.where(col("doc_id") % 2 === 0),
             "doc_id", "text", tmp, bands = 16, rowsPerBand = 2)
         }
         Seq(1, 3, 5, 7, 9).foreach { r =>
-          t(s"append_$r") {
+          jc.phase(s"append_$r") {
             DedupIndex.append(docs.where(col("doc_id") % 10 === r),
               "doc_id", "text", tmp)
           }
         }
-        t("compact") { DedupIndex.compact(spark, tmp) }
+        jc.phase("compact") { DedupIndex.compact(spark, tmp) }
         val batch = docs.where(col("doc_id") % 5 === 0)
           .select((col("doc_id") + 300000L).as("doc_id"),
             concat(col("text"), lit(" crawl extra tail")).as("text"))
-        val probed = t("probe_plan") {
+        val probed = jc.phase("probe_plan") {
           DedupIndex.probe(spark, tmp, batch, "doc_id", "text",
             threshold = 0.5)
         }
-        t("probe_materialize") {
+        jc.phase("probe_materialize") {
           probed
             .select(col("id"), col("batch_id"),
               (floor(col("jaccard") * 1e6) / 1e6).as("jaccard"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Optimization-round diagnostics for the KN 5-gram family: wall time +
@@ -10,46 +9,8 @@ object KnPhaseBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // match the Bench/GraftSession join preference so phase numbers
-      // attribute the engine the bench actually measures
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.quietKnownWarnings()
-
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val stages = new java.util.concurrent.atomic.AtomicInteger()
-    val tasks = new java.util.concurrent.atomic.AtomicInteger()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          stages.incrementAndGet()
-          tasks.addAndGet(s.stageInfo.numTasks); ()
-        }
-      })
-    def t[T](label: String)(body: => T): T = {
-      val (j0, s0, k0) = (jobs.get, stages.get, tasks.get)
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"PHASE $label%-22s ${(System.nanoTime() - t0) / 1e9}%8.3f s" +
-        f"  jobs=${jobs.get - j0}%3d stages=${stages.get - s0}%3d " +
-        f"tasks=${tasks.get - k0}%4d")
-      r
-    }
+    val spark = graft.GraftSession.local(cpus.toInt, "graft-kn-phase")
+    val jc = graft.JobCounter.attach(spark.sparkContext)
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
@@ -57,16 +18,16 @@ object KnPhaseBench {
       println(s"== round $round ==")
       val docs = graft.Tables.ensureParallelism(
         graft.Tables.documents(spark, sfDir))
-      t("kn5LogProb") {
+      jc.phase("kn5LogProb") {
         noop(graft.operators.CorpusStats.kn5LogProb(docs, "doc_id", "text"))
       }
       spark.catalog.clearCache(); graft.operators.Caches.clear()
-      t("perplexityBands") {
+      jc.phase("perplexityBands") {
         noop(graft.operators.CorpusStats.perplexityBands(docs, "doc_id",
           "text"))
       }
       spark.catalog.clearCache(); graft.operators.Caches.clear()
-      t("kn3LogProb") {
+      jc.phase("kn3LogProb") {
         noop(graft.operators.CorpusStats.kn3LogProb(docs, "doc_id", "text"))
       }
       spark.catalog.clearCache(); graft.operators.Caches.clear()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Optimization-round diagnostics: job/stage/task counts and wall time
@@ -10,61 +9,27 @@ object MinhashPhaseBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.quietKnownWarnings()
-
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val stages = new java.util.concurrent.atomic.AtomicInteger()
-    val tasks = new java.util.concurrent.atomic.AtomicInteger()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          stages.incrementAndGet()
-          tasks.addAndGet(s.stageInfo.numTasks); ()
-        }
-      })
-    def t[T](label: String)(body: => T): T = {
-      val (j0, s0, k0) = (jobs.get, stages.get, tasks.get)
-      val t0 = System.nanoTime()
-      val r = body
-      println(f"PHASE $label%-22s ${(System.nanoTime() - t0) / 1e9}%8.3f s" +
-        f"  jobs=${jobs.get - j0}%3d stages=${stages.get - s0}%3d " +
-        f"tasks=${tasks.get - k0}%4d")
-      r
-    }
+    val spark = graft.GraftSession.local(cpus.toInt, "graft-minhash-phase")
+    val jc = graft.JobCounter.attach(spark.sparkContext)
 
     (1 to 2).foreach { round =>
       println(s"== round $round ==")
       val docs = graft.queries.DocQueries.docsWithDupsPublic(spark, sfDir)
-      val pairs = t("minhashDupPairs") {
+      val pairs = jc.phase("minhashDupPairs") {
         graft.operators.Dedup.minhashDupPairs(docs, "doc_id", "text",
           threshold = 0.5).select("id_a", "id_b")
       }
-      t("pairs_noop") {
+      jc.phase("pairs_noop") {
         pairs.write.format("noop").mode("overwrite").save()
       }
-      val comp = t("connectedComponents") {
+      val comp = jc.phase("connectedComponents") {
         graft.operators.Dedup.connectedComponents(
           docs.select("doc_id"), pairs, "doc_id")
       }
-      val pr = t("pageRankNanos") {
+      val pr = jc.phase("pageRankNanos") {
         graft.operators.Graph.pageRankNanos(pairs, iters = 5)
       }
-      t("canonical_tail") {
+      jc.phase("canonical_tail") {
         import org.apache.spark.sql.expressions.Window
         comp.join(pr, comp("doc_id") === pr("node"))
           .select(col("component"), col("doc_id"), col("pr_nanos"))

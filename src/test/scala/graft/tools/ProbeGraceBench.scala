@@ -26,14 +26,7 @@ object ProbeGraceBench {
   def main(args: Array[String]): Unit = {
     val copies = args.headOption.map(_.toInt).getOrElse(10)
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32, "graft-probe-grace")
     import graft.operators.{AnnIndex, DedupIndex}
 
     def minOf(body: => Double): Double =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): time named driver
   * queries in isolation with the noop sink and dump their
@@ -28,19 +27,7 @@ object QueryBench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warmDir = "/root/testdata/sf0.001"
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror Bench.newSession (comparable numbers)
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.quietKnownWarnings()
+    val spark = graft.GraftSession.local(cpus.toInt, "graft-querybench")
 
     val qs = graft.SparkEntry.queries
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(plansDir))

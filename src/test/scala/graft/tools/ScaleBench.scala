@@ -335,13 +335,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val copies = args.headOption.map(_.toInt).getOrElse(10)
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-scalebench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32, "graft-scalebench")
     val scaledDir = synthesize(spark, copies)
     val qs = graft.SparkEntry.queries
     println(s"| query | sf0.1 (s) | ${copies}x (s) | ratio | verdict |")

@@ -10,13 +10,7 @@ object SemDedupRecallBench {
       .getOrElse(Seq(4, 8, 16, 32))
     val probes = args.drop(1).headOption
       .map(_.split(",").toSeq.map(_.toInt)).getOrElse(Seq(1, 2))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(32, "graft-semdedup-recall")
     ScaleBench.boundaryRecall(spark, ks, probes)
     spark.stop()
   }
