@@ -19,9 +19,8 @@ object GraftSession {
 
   /** Silence the benign `WindowExec: No Partition Defined` warning flood.
     * Every unpartitioned window in this library sits behind the bounded
-    * three-site whitelist that CoreQueriesSpec's window gate enforces
-    * (provably ≤50 k-row frames) — the spec, not this log line, is the
-    * protection.
+    * three-site whitelist that GlobalWindowGateSpec enforces (provably
+    * ≤50 k-row frames) — the spec, not this log line, is the protection.
     * The driver records only the stdout TAIL of bench/verify runs, and
     * thousands of repeats of this known-benign line would bury any NEW
     * warning class in that window (r10 verdict #3).
@@ -41,8 +40,7 @@ object GraftSession {
     // operator). Benign BY CONSTRUCTION: a result is only released
     // after everything derived from it is itself materialized, so the
     // truncated lineage is never re-executed; the hygiene specs
-    // (StorageHygiene, CoreQueriesSpec's soak sweep), not this log
-    // line, are the protection.
+    // (StorageHygiene/Soak), not this log line, are the protection.
     // A MESSAGE-level filter, deliberately not a logger-level cut:
     // RDD warnings key by concrete class, so silencing the whole
     // MapPartitionsRDD logger would also hide any FUTURE warning that

@@ -20,7 +20,7 @@ object Validation {
     // the (tiny, |labels|²-row) aggregated matrix — the scalar-total
     // pattern everywhere else in the library; the former
     // Window.partitionBy(lit(1)) planned as an unpartitioned WindowExec
-    // (a window-gate offender in CoreQueriesSpec's sweep) for the same one pass
+    // (GlobalWindowGateSpec offender) for the same one pass
     val m = joined
       .groupBy(predictedCol, actualCol)
       .agg(count(lit(1)).as("n"))

@@ -536,7 +536,7 @@ object DocQueries {
         "doc_id")
       // comp is eagerly checkpointed with flat lineage: the pair
       // frame's checkpoint blocks are orphaned now — release them
-      // deterministically (the soak contract in CoreQueriesSpec's sweep)
+      // deterministically (SoakSpec's session contract)
       graft.operators.Caches.releaseResult(pairs)
       comp
         .groupBy("component")
@@ -716,7 +716,7 @@ object DocQueries {
       // comp and pr are BOTH eagerly checkpointed with flat lineage, so
       // the pair frame's checkpoint blocks are no longer referenced by
       // anything downstream — release them NOW instead of waiting for
-      // the ContextCleaner (the soak sweep caught exactly this residue)
+      // the ContextCleaner (SoakSpec caught exactly this residue)
       graft.operators.Caches.releaseResult(pairs)
       // every member of a >1 cluster has an edge, so the inner join
       // keeps exactly the multi-doc clusters' members
@@ -1413,7 +1413,7 @@ object DocQueries {
       // append, probe batch) and every consumer otherwise re-runs the
       // scan + ensureParallelism exchange as its own AQE job — one
       // fixed-cost job per consumer at bench scale (guide §5
-      // multi-consumer persist; measured in plans/r18).
+      // multi-consumer persist; measured in plans/r18, IdxJobTrace).
       // Released in the finally; timed-region-internal, so nothing
       // survives the query.
       val docs = docsPar(s, d).select("doc_id", "text")
@@ -1484,7 +1484,7 @@ object DocQueries {
         // keyed path already returns an eagerly-checkpointed frame, so
         // the index tree can be deleted, and a second checkpoint would
         // bury the inner one where Caches.releaseResult's leaf walk
-        // cannot free it (the soak sweep caught exactly that)
+        // cannot free it (SoakSpec caught exactly that)
         DedupIndex
           .probe(s, tmp, batch, "doc_id", "text", threshold = 0.5)
           .select(col("id"), col("batch_id"),

@@ -1,10 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.{Window, WindowGroupLimit}
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.operators.Caches
 
 object SparkTestSession {
   lazy val spark: SparkSession = GraftSession.local(4, "graft-test")
@@ -14,107 +11,19 @@ object SparkTestSession {
 class CoreQueriesSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  /** Queries allowed to carry an unpartitioned window, with the bound
-    * that justifies each (see the sweep below). */
-  private val boundedWindows: Set[String] = Set(
-    "q_epoch_plan", // per-source agg rows (group cardinality)
-    "q_mixture_temperature" // per-source rate rows (group cardinality)
-  )
-
-  /** One pass over EVERY driver query — the whole SparkEntry surface —
-    * through one shared session, checking three contracts per query:
-    *
-    *  - it builds a frame with columns and executes (noop sink, which
-    *    forces every output column to materialize);
-    *  - window gate: a `Window.partitionBy()` (empty partition spec)
-    *    funnels ALL rows through one task — fatal at 100 TB — so every
-    *    occurrence in a query's plan must be one of the documented
-    *    BOUNDED sites, where the window input is provably small:
-    *    `DataPrep.epochPlan` / `DataPrep.mixtureSample` scalar-total
-    *    windows and `DataPrep.temperatureSample`'s rate window all run
-    *    over the per-SOURCE aggregate (group-cardinality rows, not
-    *    corpus rows). (`CorpusStats.perplexityBands` was whitelisted
-    *    through r17 for its maxSample-capped rank window; the r18
-    *    single-pass bounds agg removed the window outright, so the entry
-    *    was pruned per the drift guard.) Any OTHER query whose plan
-    *    picks up an empty-partition Window / WindowGroupLimit — e.g. an
-    *    accidental global `row_number()` on a corpus-sized frame — fails
-    *    by name. Limitation: operators that eagerly materialize
-    *    (`localCheckpoint`) replace their upstream plan with a
-    *    `LogicalRDD` leaf, so windows INSIDE the materialized stage are
-    *    invisible here; those stages are plan-gated by their own specs
-    *    (PLANS.md shapes);
-    *  - soak: the 100 TB-session contract end to end. With the
-    *    Bench/Verify hygiene protocol (`clearCache` + `Caches.clear`
-    *    between queries, plus a deterministic `Caches.releaseResult` of
-    *    checkpoint-backed results) not one persistent RDD may survive
-    *    any query, and the session must end with the storage memory it
-    *    started with; an operator that slips an unregistered persist
-    *    into its returned plan fails with its name attached.
-    *    StorageHygieneSpec pins per-family cache ownership on fixture
-    *    data; this is the whole-surface check.
-    *
-    * sf0.001 keeps the sweep fast; cache REGISTRATION is scale-invariant
-    * (every persist/localCheckpoint site runs at any SF), so the leak
-    * surface tested is identical to the bench's sf0.1 runs. */
+  /** Runs and columns of every driver query, read from the shared
+    * all-query sweep (`QuerySweep`); `SoakSpec` and
+    * `GlobalWindowGateSpec` check the same pass. */
   test("every declared query runs and oracle coverage is complete") {
     val qs = SparkEntry.queries
     assert(qs.nonEmpty)
     // every oracle entry refers to a declared query
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs.keySet))
-    val sc = spark.sparkContext
-    spark.catalog.clearCache(); Caches.clear()
-    val before = sc.getPersistentRDDs.keySet
-    val failures = scala.collection.mutable.ListBuffer.empty[String]
-    val windowed = scala.collection.mutable.ListBuffer.empty[(String, Seq[String])]
-    qs.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sf)
-        assert(df.columns.nonEmpty, s"$name has no columns")
-        // optimized LOGICAL plan, not executedPlan: AQE wraps the
-        // physical tree in AdaptiveSparkPlanExec, whose children are
-        // invisible to collect(); the logical Window nodes carry the
-        // same partitionSpec
-        val hits = df.queryExecution.optimizedPlan.collect {
-          case w: Window if w.partitionSpec.isEmpty => "Window"
-          case w: WindowGroupLimit if w.partitionSpec.isEmpty =>
-            "WindowGroupLimit"
-        }
-        if (hits.nonEmpty) windowed += name -> hits
-        df.write.format("noop").mode("overwrite").save()
-        // deterministic release of checkpoint-backed results (the
-        // Bench protocol relies on ContextCleaner GC for these; a
-        // session-lifetime contract must not)
-        Caches.releaseResult(df)
-      } catch {
-        case e: org.scalatest.exceptions.TestFailedException => throw e
-        case e: Throwable =>
-          failures += s"$name: ${Option(e.getMessage).getOrElse(e.toString).take(120)}"
-      }
-      spark.catalog.clearCache(); Caches.clear()
-      val leaked = sc.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty,
-        s"$name leaked persistent RDD ids ${leaked.toSeq.sorted}")
-    }
-    assert(failures.isEmpty,
-      s"${failures.size} queries failed in the soak session:\n" +
-        failures.mkString("\n"))
-    val rogue = windowed.filterNot { case (name, _) => boundedWindows(name) }
-    assert(rogue.isEmpty,
-      "unpartitioned window outside the bounded whitelist: " +
-        rogue.map { case (n, h) => s"$n(${h.mkString(",")})" }
-          .mkString(", "))
-    // drift guard the other way: if a whitelisted query no longer has a
-    // global window, the whitelist entry is stale — prune it
-    val stale = boundedWindows -- windowed.map(_._1)
-    assert(stale.isEmpty,
-      s"whitelist entries with no global window in the plan: $stale")
-    // end-of-session storage state: nothing this sweep created remains
-    val residualStorage = sc.getRDDStorageInfo
-      .filterNot(i => before.contains(i.id))
-    assert(residualStorage.isEmpty,
-      "storage memory not restored: " +
-        residualStorage.map(i => s"rdd ${i.id} (${i.memSize} B)").mkString(", "))
+    val r = QuerySweep.result
+    assert(r.noColumns.isEmpty, r.noColumns.mkString("\n"))
+    assert(r.failures.isEmpty,
+      s"${r.failures.size} queries failed in the sweep:\n" +
+        r.failures.mkString("\n"))
   }
 
   test("q1_agg groups to the 6 returnflag/linestatus combos with positive sums") {

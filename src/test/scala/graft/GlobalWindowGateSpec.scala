@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.{Window, WindowGroupLimit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** CI gate on unpartitioned windows: a `Window.partitionBy()` (empty
   * partition spec) funnels ALL rows through one task — fatal at 100 TB —
-  * so every occurrence in a query's physical plan must be one of the
-  * documented BOUNDED sites, where the window input is provably small:
+  * so every occurrence in a query's optimized plan (recorded by the
+  * shared all-query sweep, `QuerySweep`) must be one of the documented
+  * BOUNDED sites, where the window input is provably small:
   *
   *  - `DataPrep.epochPlan` / `DataPrep.mixtureSample` scalar-total
   *    windows run over the per-SOURCE aggregate (group-cardinality
@@ -17,11 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * maxSample-capped rank window; the r18 single-pass bounds agg removed
   * the window outright, so the entry is pruned per the drift guard.)
   *
-  * Any OTHER query whose plan picks up an empty-partition WindowExec /
-  * WindowGroupLimitExec — e.g. an accidental global `row_number()` on a
-  * corpus-sized frame — fails this spec by name. The whitelist is the
-  * promotion of the `graft.tools.FindGlobalWindows` diagnostic into a
-  * hard gate (VERDICT r9 §wrong-4).
+  * Any OTHER query whose plan picks up an empty-partition Window /
+  * WindowGroupLimit — e.g. an accidental global `row_number()` on a
+  * corpus-sized frame — fails this spec by name.
   *
   * Limitation (documented): operators that eagerly materialize
   * (`localCheckpoint`) replace their upstream plan with a `LogicalRDD`
@@ -29,8 +27,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * those stages are plan-gated by their own specs (PLANS.md shapes).
   */
 class GlobalWindowGateSpec extends AnyFunSuite {
-  private lazy val spark = SparkTestSession.spark
-
   /** Queries allowed to carry an unpartitioned window, with the bound
     * that justifies each. Keep in sync with the scaladoc above. */
   private val bounded: Set[String] = Set(
@@ -39,34 +35,15 @@ class GlobalWindowGateSpec extends AnyFunSuite {
   )
 
   test("no query grows an unpartitioned window outside the bounded whitelist") {
-    // optimized LOGICAL plan, not executedPlan: AQE wraps the physical
-    // tree in AdaptiveSparkPlanExec, whose children are invisible to
-    // collect(); the logical Window nodes carry the same partitionSpec
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, q) =>
-        val df = q(spark, SparkTestSession.sf)
-        val plan = df.queryExecution.optimizedPlan
-        val hits = plan.collect {
-          case w: Window if w.partitionSpec.isEmpty => "Window"
-          case w: WindowGroupLimit if w.partitionSpec.isEmpty =>
-            "WindowGroupLimit"
-        }
-        // eager queries materialize while BUILDING the frame — free
-        // their checkpoint blocks so the shared session carries nothing
-        // into later suites (registry caches swept after the loop)
-        graft.operators.Caches.releaseResult(df)
-        if (hits.nonEmpty) Some(name -> hits) else None
-    }
-    graft.operators.Caches.clear() // eager queries register caches
-    val rogue = offenders.filterNot { case (name, _) => bounded(name) }
+    val windowed = QuerySweep.result.windowed
+    val rogue = windowed.filterNot { case (name, _) => bounded(name) }
     assert(rogue.isEmpty,
       "unpartitioned window outside the bounded whitelist: " +
         rogue.map { case (n, h) => s"$n(${h.mkString(",")})" }
           .mkString(", "))
     // drift guard the other way: if a whitelisted query no longer has a
     // global window, the whitelist entry is stale — prune it
-    val present = offenders.map(_._1).toSet
-    val stale = bounded -- present
+    val stale = bounded -- windowed.map(_._1)
     assert(stale.isEmpty,
       s"whitelist entries with no global window in the plan: $stale")
   }

@@ -2,58 +2,27 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Caches
-
 /** The 100 TB-session contract proven END-TO-END (r10 verdict #7):
   * StorageHygieneSpec pins per-family cache ownership on fixture data;
-  * this spec runs EVERY driver query — the whole SparkEntry surface —
-  * through one shared session with the Bench/Verify hygiene protocol
-  * (`clearCache` + `Caches.clear` between queries) and asserts, after
-  * every single query, that not one persistent RDD survived. A
-  * long-running production session executing the full operator family
-  * in sequence must end with the storage memory it started with; an
-  * operator that slips an unregistered persist into its returned plan
-  * fails here with its name attached.
-  *
-  * sf0.001 keeps the sweep fast; cache REGISTRATION is scale-invariant
-  * (every persist/localCheckpoint site runs at any SF), so the leak
-  * surface tested is identical to the bench's sf0.1 runs.
+  * this spec reads the shared all-query sweep (`QuerySweep`), which runs
+  * EVERY driver query — the whole SparkEntry surface — through one
+  * session with the Bench/Verify hygiene protocol (`clearCache` +
+  * `Caches.clear` between queries) and records, after every single
+  * query, any persistent RDD that survived. A long-running production
+  * session executing the full operator family in sequence must end with
+  * the storage memory it started with; an operator that slips an
+  * unregistered persist into its returned plan fails here with its name
+  * attached.
   */
 class SoakSpec extends AnyFunSuite {
-  private lazy val spark = SparkTestSession.spark
-
   test("all driver queries, one session: zero persistent-RDD growth " +
       "and empty storage after each query") {
-    val sc = spark.sparkContext
-    val dir = "/root/testdata/sf0.001"
-    spark.catalog.clearCache(); Caches.clear()
-    val before = sc.getPersistentRDDs.keySet
-    val failures = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, dir)
-        df.write.format("noop").mode("overwrite").save()
-        // deterministic release of checkpoint-backed results (the
-        // Bench protocol relies on ContextCleaner GC for these; a
-        // session-lifetime contract must not)
-        Caches.releaseResult(df)
-      } catch {
-        case e: Throwable =>
-          failures += s"$name: ${Option(e.getMessage).getOrElse(e.toString).take(120)}"
-      }
-      spark.catalog.clearCache(); Caches.clear()
-      val leaked = sc.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty,
-        s"$name leaked persistent RDD ids ${leaked.toSeq.sorted}")
-    }
-    assert(failures.isEmpty,
-      s"${failures.size} queries failed in the soak session:\n" +
-        failures.mkString("\n"))
-    // end-of-session storage state: nothing this sweep created remains
-    val residualStorage = sc.getRDDStorageInfo
-      .filterNot(i => before.contains(i.id))
-    assert(residualStorage.isEmpty,
-      "storage memory not restored: " +
-        residualStorage.map(i => s"rdd ${i.id} (${i.memSize} B)").mkString(", "))
+    val r = QuerySweep.result
+    assert(r.leaks.isEmpty, r.leaks.mkString("\n"))
+    assert(r.failures.isEmpty,
+      s"${r.failures.size} queries failed in the soak session:\n" +
+        r.failures.mkString("\n"))
+    assert(r.residualStorage.isEmpty,
+      "storage memory not restored: " + r.residualStorage.mkString(", "))
   }
 }
