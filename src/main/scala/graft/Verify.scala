@@ -22,14 +22,13 @@ object Verify {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val futures = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val futures = SparkEntry.all.filter(q => only.forall(_.contains(q.name)))
+      .map { q =>
       scala.concurrent.Future {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${q.name}")
         catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
         }
       }
     }
@@ -49,18 +48,12 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // The q_ann_ivf / q_ann_pq oracles replay centroids/codebooks PINNED
-    // at the gate SF; at any other SF the Spark side retrains per-corpus
-    // and the pinned replay would false-fail, so off-gate dumps fall back
-    // to rows-only for them. q_semdedup_planned pins the PLANNED k the
-    // same way (the Spark side recounts the corpus per-SF).
+    // Gate-pinned oracles replay state trained at the gate SF; off-gate
+    // dumps fall back to rows-only for them (see graft.queries.Query).
     val oracles =
       if (sfDir.stripSuffix("/").endsWith(graft.queries.IvfOracle.gateSfSuffix))
         SparkEntry.oracleSql
-      else SparkEntry.oracleSql - "q_ann_ivf" - "q_ann_pq" -
-        "q_ann_ivfpq" - "q_ann_ivfpq_res" - "q_ann_index_compact" -
-        "q_ann_retrain" - "q_semdedup_planned" -
-        "q_semdedup_probe2_planned"
+      else SparkEntry.oracleSql -- SparkEntry.all.filter(_.gatePinned).map(_.name)
     val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

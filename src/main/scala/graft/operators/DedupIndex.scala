@@ -102,13 +102,9 @@ object DedupIndex {
     * so 250 k docs ≈ 0.5–2 GB serialized — the upper edge of a sane
     * broadcast (the [[Tokenizer.joinByWord]] sizing argument; its 5 M
     * threshold is per-WORD rows, these are per-DOCUMENT set rows).
-    * Overridable per session via `graft.dedupIndex.maxBroadcastBatch`
-    * (specs use it to force the keyed path at test scale). */
+    * Overridable per call through [[probe]]'s `maxBroadcastBatch`
+    * (specs pass 1 to force the keyed path at test scale). */
   val MaxBroadcastBatchDefault: Long = 250000L
-
-  private def maxBroadcastBatch(spark: SparkSession): Long =
-    spark.conf.getOption("graft.dedupIndex.maxBroadcastBatch")
-      .map(_.toLong).getOrElse(MaxBroadcastBatchDefault)
 
   /** Build the index over `corpus` at `path` (overwrites). Banding
     * parameters AND the probe contract — shingler identity and the
@@ -996,7 +992,7 @@ object DedupIndex {
     * count() over the raw batch frame at plan-construction time — the
     * [[Tokenizer.joinByWord]] convention):
     *
-    *  - batch ≤ `graft.dedupIndex.maxBroadcastBatch` (a crawl
+    *  - batch ≤ `maxBroadcastBatch` rows (a crawl
     *    increment, the common case): the batch's bands, the candidate
     *    ids, and the batch gram sets all ship as broadcasts — the
     *    index side streams through BroadcastHashJoins and NEVER
@@ -1009,7 +1005,8 @@ object DedupIndex {
     */
   def probe(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.5,
-      shingler: Shingler = Shingler.word(3)): DataFrame = {
+      shingler: Shingler = Shingler.word(3),
+      maxBroadcastBatch: Long = MaxBroadcastBatchDefault): DataFrame = {
     val meta = readMeta(spark, path)
     meta.requireShingler(shingler, path, "probe")
     meta.designThreshold.foreach { t0 =>
@@ -1038,10 +1035,9 @@ object DedupIndex {
     // the per-partition LocalLimit stops each scan task after max+1
     // rows — a 100 TB backfill batch no longer pays one extra FULL
     // pass just to learn it is too big to broadcast (guide §1.2)
-    val maxB = maxBroadcastBatch(spark)
-    val probeLimit = if (maxB >= Int.MaxValue - 1) Int.MaxValue
-      else (maxB + 1).toInt
-    if (batch.select(lit(1)).limit(probeLimit).count() <= maxB)
+    val probeLimit = if (maxBroadcastBatch >= Int.MaxValue - 1) Int.MaxValue
+      else (maxBroadcastBatch + 1).toInt
+    if (batch.select(lit(1)).limit(probeLimit).count() <= maxBroadcastBatch)
       probeBroadcast(gramsT, bandsT, batch, idCol, textCol, threshold,
         shingler, meta)
     else

@@ -1,21 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
 
-/** Relational operator coverage queries (SURVEY.md §2.1–§2.8) over the
-  * driver testdata, each with a DuckDB-oracle SQL twin in [[oracle]].
-  *
-  * Conventions shared with the oracle side (the driver hash-compares):
-  *  - every computed column is aliased identically in Spark and SQL;
-  *  - floating aggregates are rounded (sum order differs between engines,
-  *    last-bit drift is expected — rounding makes the comparison stable);
-  *  - timestamps leave the query as epoch microseconds (BIGINT) or
-  *    formatted strings, never raw timestamps (parquet ns vs µs physical
-  *    types would otherwise make schema comparison flaky);
-  *  - results carry an ORDER BY on a unique key so row order is total.
+/** Core relational and telemetry-window operator queries (SURVEY.md
+  * §2.1–§2.8) over the driver testdata: joins, windows, OLAP grouping,
+  * sketches, scalar functions. Oracle conventions: [[Query]].
   *
   * Scale notes (100 TB design): every query here is a single declarative
   * plan — scans prune columns/partitions, joins against the small dims
@@ -26,10 +17,10 @@ import graft.Tables._
   */
 object CoreQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val all: Seq[Query] = Seq(
     // ---- A1/A3-style global + grouped aggregation (TPC-H Q1 shape) ----
     // SURVEY §2.4 A1/A3: grouped sum/avg/count over the fact table.
-    "q1_agg" -> ((s, d) => {
+    Query("q1_agg", (s, d) => {
       lineitem(s, d)
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -40,10 +31,19 @@ object CoreQueries {
           round(avg("l_discount"), 4).as("avg_disc"),
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus")
-    }),
+    },
+      Some("""SELECT l_returnflag, l_linestatus,
+        |  round(CAST(sum(l_quantity) AS DOUBLE), 2) AS sum_qty,
+        |  round(CAST(sum(l_extendedprice) AS DOUBLE), 2) AS sum_base_price,
+        |  round(CAST(sum(l_extendedprice * (1.0 - l_discount)) AS DOUBLE), 2) AS sum_disc_price,
+        |  round(avg(l_quantity), 4) AS avg_qty,
+        |  round(avg(l_discount), 4) AS avg_disc,
+        |  count(*) AS count_order
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
     // ---- J5 equi joins through the dimension chain + grouped agg ----
-    "q_join_agg" -> ((s, d) => {
+    Query("q_join_agg", (s, d) => {
       val o = orders(s, d); val c = customer(s, d)
       val n = nation(s, d); val r = region(s, d)
       o.join(c, o("o_custkey") === c("c_custkey"))
@@ -54,20 +54,32 @@ object CoreQueries {
           count(lit(1)).as("n_orders"),
           round(sum("o_totalprice"), 2).as("total_revenue"))
         .orderBy("r_name")
-    }),
+    },
+      Some("""SELECT r_name, count(*) AS n_orders,
+        |  round(CAST(sum(o_totalprice) AS DOUBLE), 2) AS total_revenue
+        |FROM orders
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation ON c_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |GROUP BY r_name ORDER BY r_name""".stripMargin)),
 
     // ---- J3 anti join: customers that never ordered ----
-    "q_anti_join" -> ((s, d) => {
+    Query("q_anti_join", (s, d) => {
       customer(s, d)
         .join(orders(s, d).where(col("o_totalprice") > 450000),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_customers"))
         .orderBy("c_mktsegment")
-    }),
+    },
+      Some("""SELECT c_mktsegment, count(*) AS n_customers
+        |FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders
+        |                  WHERE o_custkey = c_custkey AND o_totalprice > 450000)
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
 
     // ---- J7 semi join: suppliers with shipped lineitems ----
-    "q_semi_join" -> ((s, d) => {
+    Query("q_semi_join", (s, d) => {
       supplier(s, d)
         .join(lineitem(s, d).where(col("l_quantity") > 25),
           col("s_suppkey") === col("l_suppkey"), "left_semi")
@@ -75,7 +87,12 @@ object CoreQueries {
         .groupBy("n_name")
         .agg(count(lit(1)).as("n_suppliers"))
         .orderBy("n_name")
-    }),
+    },
+      Some("""SELECT n_name, count(*) AS n_suppliers
+        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
+        |WHERE EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_suppkey = s_suppkey AND l_quantity > 25)
+        |GROUP BY n_name ORDER BY n_name""".stripMargin)),
 
     // ---- declarative bloom-filter membership: the filter is a bit
     // TABLE (word_idx, word) built over orders.o_custkey with
@@ -83,7 +100,7 @@ object CoreQueries {
     // exact semi-join twin sits beside it so the no-false-negative
     // guarantee (has_orders ⇒ in_bloom) is visible in the output and
     // the few false positives are data, not error ----
-    "q_bloom" -> ((s, d) => {
+    Query("q_bloom", (s, d) => {
       import graft.operators.Bloom
       val cust = customer(s, d)
         .select(col("c_custkey").cast("long").as("c_custkey"))
@@ -98,1042 +115,10 @@ object CoreQueries {
         .select(col("c_custkey"), col("in_bloom"),
           coalesce(col("has_orders"), lit(false)).as("has_orders"))
         .orderBy("c_custkey")
-    }),
-
-    // ---- J2 interval join (point-in-range, per key): the reference's
-    // label recombine join (02.1.2_...label_recombine.py:358-398) shape,
-    // expressed on orders×lineitem: ship within 90 days of order date.
-    "q_interval_join" -> ((s, d) => {
-      val l = lineitem(s, d); val o = orders(s, d)
-      l.join(o, l("l_orderkey") === o("o_orderkey") &&
-          l("l_shipdate") >= o("o_orderdate") &&
-          l("l_shipdate") <= date_add(o("o_orderdate"), 90))
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_lines"),
-          round(sum("l_extendedprice"), 2).as("sum_price"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // ---- W1/W2/W5: lag + inter-row delta (04_worker_script.sql:23-24) ----
-    "q_window_lag" -> ((s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      events(s, d)
-        .withColumn("prev_value", lag("value", 1).over(w))
-        .withColumn("delta_us", unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))
-        .select(col("event_id"), col("user_id"), col("value"),
-          coalesce(col("prev_value"), lit(-1.0)).as("prev_value"),
-          coalesce(col("delta_us"), lit(-1L)).as("delta_us"))
-        .orderBy("event_id")
-    }),
-
-    // ---- W3: centered 5-row rolling mean (04_worker_script.sql:25,59) ----
-    "q_window_rolling" -> ((s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      events(s, d)
-        .withColumn("value_smoothed", round(avg("value").over(w.rowsBetween(-2, 2)), 4))
-        .select("event_id", "user_id", "value_smoothed")
-        .orderBy("event_id")
-    }),
-
-    // ---- W4+W7: gaps-and-islands block id + running dwell time
-    // (04_worker_script.sql:23-34,63-66). is_active plays is_stationary.
-    "q_gaps_islands" -> ((s, d) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      // dwell accumulates in EXACT integer microseconds and divides once at
-      // the end — no float running sum, so the result is bit-identical on
-      // any engine (the round()-on-accumulated-floats hash hazard is gone)
-      val base = events(s, d)
-        .withColumn("is_active", col("value") >= 50.0)
-        .withColumn("prev_active",
-          coalesce(lag("is_active", 1).over(w), lit(false)))
-        .withColumn("delta_us",
-          coalesce(unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w), lit(0L)))
-        .withColumn("block_id",
-          sum(when(col("is_active") =!= col("prev_active"), 1).otherwise(0)).over(w))
-      val wb = Window.partitionBy("user_id", "block_id").orderBy("ts", "event_id")
-      base
-        .withColumn("dwell_s",
-          sum(when(col("is_active"), col("delta_us")).otherwise(0L)).over(wb) / 1e6)
-        .select("event_id", "user_id", "is_active", "block_id", "dwell_s")
-        .orderBy("event_id")
-    }),
-
-    // ---- A6: tumbling time-bucket aggregation (5s in the reference's CPD
-    // downsample, 05_cpd_orchestrator_polars.py:263-276; 1h here to match
-    // the events cadence). window() is streaming-compatible as-is.
-    "q_time_bucket" -> ((s, d) => {
-      events(s, d)
-        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
-        .agg((sum(round(col("value") * 100).cast("long")) / lit(100.0) /
-          count(lit(1))).as("avg_value"), count(lit(1)).as("n"))
-        .select(unix_micros(col("w.start")).as("bucket_start_us"), col("event_type"),
-          col("avg_value"), col("n"))
-        .orderBy("bucket_start_us", "event_type")
-    }),
-
-    // ---- OLAP rollup: hierarchical subtotals (event_type, day) + grand
-    // total — the grouping-sets family SURVEY §2.4 notes as headroom ----
-    "q_rollup" -> ((s, d) => {
-      events(s, d)
-        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-        .rollup("event_type", "day")
-        .agg(count(lit(1)).as("n"),
-          round(sum("value"), 2).as("sum_value"))
-        .select(coalesce(col("event_type"), lit("<all>")).as("event_type"),
-          coalesce(col("day"), lit("<all>")).as("day"),
-          col("n"), col("sum_value"))
-        .orderBy("event_type", "day")
-    }),
-
-    // ---- SCD Type-2 dimension versioning: change stream → versioned
-    // rows with [effective_from, effective_to) validity ----
-    "q_scd2" -> ((s, d) => {
-      import graft.operators.TelemetryTransform
-      val changes = events(s, d).where(col("event_id") % 40 === 0)
-        .select(
-          concat(lit("t"), (col("user_id") % 20).cast("string")).as("truck_id"),
-          col("ts"),
-          floor(col("value") * 10).cast("long").as("config_version"))
-      TelemetryTransform.scd2(changes, "truck_id", "ts")
-        .select(col("truck_id"),
-          unix_micros(col("effective_from")).as("from_us"),
-          unix_micros(col("effective_to")).as("to_us"),
-          col("config_version"), col("is_current"))
-        .orderBy("truck_id", "from_us")
-    }),
-
-    // ---- frequent items via Misra-Gries sketch + exact verify: skewed
-    // key space (7 hot keys ≫ support, long cold tail); the sketch
-    // guarantees every ≥-support key is a candidate, the verify pass makes
-    // the output exact — so the plain GROUP BY/HAVING oracle applies ----
-    "q_heavy_hitters" -> ((s, d) => {
-      import graft.operators.HeavyHitters
-      // split-starvation guard: the sketch's partial phase is per-row
-      // CPU (string build + map upkeep) and merges cheaply — it wants
-      // cores, not one scan split
-      val keyed = graft.Tables.ensureParallelism(events(s, d)).select(
-        when(col("user_id") % 3 === 0,
-          concat(lit("hot-"), (col("user_id") % 7).cast("string")))
-          .otherwise(concat(lit("cold-"), col("user_id").cast("string")))
-          .as("k"))
-      HeavyHitters.topFrequent(keyed, "k", support = 0.02, capacity = 64)
-    }),
-
-    // ---- PER-GROUP frequent items (keyed Misra-Gries — the
-    // q_hll_groups story for frequent keys): one sketch per event
-    // type via groupBy + udaf, candidates broadcast back for the
-    // exact verify, integer ceil-rank thresholds. The oracle is the
-    // plain per-group frequency threshold — proving per-group sketch
-    // completeness ----
-    "q_hh_groups" -> ((s, d) => {
-      import graft.operators.HeavyHitters
-      val keyed = graft.Tables.ensureParallelism(events(s, d)).select(
-        col("event_type").as("g"),
-        when(col("user_id") % 3 === 0,
-          concat(lit("hot-"), (col("user_id") % 7).cast("string")))
-          .otherwise(concat(lit("cold-"), col("user_id").cast("string")))
-          .as("k"))
-      HeavyHitters.topFrequentByGroup(keyed, "g", "k",
-        supportNum = 2L, supportDen = 100L, capacity = 64)
-    }),
-
-    // ---- as-of join (nearest prior state per truck — the kdb/DuckDB
-    // ASOF LEFT JOIN, an operator Spark lacks natively): union +
-    // carry-forward window, one shuffle, big-big safe ----
-    "q_asof" -> ((s, d) => {
-      import graft.operators.IntervalJoin
-      val ev = events(s, d).select(col("event_id"),
-        concat(lit("t"), (col("user_id") % 20).cast("string"))
-          .as("truck_id"),
-        col("ts"))
-      val st = events(s, d).where(col("event_id") % 50 === 0)
-        .select(
-          concat(lit("t"), (col("user_id") % 20).cast("string"))
-            .as("truck_id"),
-          col("ts").as("sts"),
-          floor(col("value") * 100).cast("long").as("state_val"))
-      IntervalJoin.asofJoin(ev, st, "truck_id", "ts", "sts",
-          payload = Seq("state_val"))
-        .select("event_id", "truck_id", "state_val")
-        .orderBy("event_id")
-    }),
-
-    // ---- OLAP cube: all grouping-set combinations of (event_type,
-    // user-parity) — completes the grouping-sets family next to q_rollup --
-    "q_cube" -> ((s, d) => {
-      events(s, d)
-        .withColumn("parity",
-          when(col("user_id") % 2 === 0, "even").otherwise("odd"))
-        .cube("event_type", "parity")
-        .agg(count(lit(1)).as("n"),
-          (sum(round(col("value") * 100).cast("long")) / 100.0)
-            .as("sum_value"))
-        .select(coalesce(col("event_type"), lit("<all>")).as("event_type"),
-          coalesce(col("parity"), lit("<all>")).as("parity"),
-          col("n"), col("sum_value"))
-        .orderBy("event_type", "parity")
-    }),
-
-    // ---- gap filling (inverse of A6 downsampling): per-user daily grid
-    // over each user's own extent, last observation carried forward into
-    // empty days; carried values are copied bits, never recomputed ----
-    "q_gap_fill" -> ((s, d) => {
-      import graft.operators.Downsample
-      Downsample.gapFill(
-          events(s, d).select("user_id", "ts", "value", "event_id"),
-          "user_id", "ts", "value", stepUs = 86400000000L,
-          tieBreak = Seq("event_id"))
-        .orderBy("user_id", "bucket_start_us")
-    }),
-
-    // ---- set operations (EXCEPT / INTERSECT / UNION distinct) over
-    // user cohorts — §2.7 completed beyond the union-only coverage ----
-    "q_set_ops" -> ((s, d) => {
-      val e = events(s, d)
-      val high = e.where(col("value") > 50).select("user_id").distinct()
-      val clickers = e.where(col("event_type") === "click")
-        .select("user_id").distinct()
-      high.intersect(clickers).agg(count(lit(1)).as("n"))
-        .select(lit("both").as("cohort"), col("n"))
-        .unionByName(high.except(clickers).agg(count(lit(1)).as("n"))
-          .select(lit("high_only").as("cohort"), col("n")))
-        .unionByName(high.union(clickers).distinct()
-          .agg(count(lit(1)).as("n"))
-          .select(lit("either").as("cohort"), col("n")))
-        .orderBy("cohort")
-    }),
-
-    // ---- ranking-function family over grouped totals: dense_rank,
-    // percent_rank, cume_dist, first/last_value with explicit frames —
-    // ratios of small exact ints, engine-identical ----
-    "q_window_ranks" -> ((s, d) => {
-      val totals = events(s, d)
-        .groupBy(col("event_type"), (col("user_id") % 10).as("bucket"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("cents"))
-      val w = Window.partitionBy("event_type")
-        .orderBy(col("cents").desc, col("bucket"))
-      val wAll = w.rowsBetween(Window.unboundedPreceding,
-        Window.unboundedFollowing)
-      totals.select(
-          col("event_type"), col("bucket"),
-          (col("cents").cast("double") / 100.0).as("total_value"),
-          dense_rank().over(w).as("drank"),
-          percent_rank().over(w).as("prank"),
-          cume_dist().over(w).as("cdist"),
-          first_value(col("bucket")).over(wAll).as("top_bucket"),
-          last_value(col("bucket")).over(wAll).as("bottom_bucket"))
-        .orderBy("event_type", "bucket")
-    }),
-
-    // ---- unpivot/melt (Dataset.unpivot — the inverse of q_pivot):
-    // wide per-bucket type counts back to long (bucket, event_type, n)
-    // rows ----
-    "q_unpivot" -> ((s, d) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val wide = events(s, d)
-        .withColumn("bucket", (col("user_id") % 10).cast("long"))
-        .groupBy("bucket")
-        .pivot("event_type", types)
-        .agg(count(lit(1)))
-        .na.fill(0L)
-      wide.unpivot(
-          Array(col("bucket")),
-          types.map(col).toArray,
-          "event_type", "n")
-        .orderBy("bucket", "event_type")
-    }),
-
-    // ---- true dynamic pivot (RelationalGroupedDataset.pivot with
-    // pinned value list — pinning keeps the schema deterministic AND
-    // avoids the extra distinct-values job): per-user-bucket counts by
-    // event type as columns ----
-    "q_pivot" -> ((s, d) => {
-      events(s, d)
-        .withColumn("bucket", (col("user_id") % 10).cast("long"))
-        .groupBy("bucket")
-        .pivot("event_type",
-          Seq("click", "error", "purchase", "signup", "view"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-        .orderBy("bucket")
-    }),
-
-    // ---- null semantics: null-safe equality (<=> / IS NOT DISTINCT
-    // FROM) join + NULLS LAST ordering — the semantics corner every
-    // engine must agree on exactly ----
-    "q_null_semantics" -> ((s, d) => {
-      val e = events(s, d).select(col("event_id"),
-        // value > 98 → null stripe, else a small key with nulls on %7
-        when(col("value") > 98, lit(null).cast("long"))
-          .otherwise((col("user_id") % 7).cast("long")).as("k"))
-      val dim = s.range(7).select(col("id").as("k"),
-          concat(lit("grp-"), col("id").cast("string")).as("grp"))
-        .unionByName(s.range(1).select(lit(null).cast("long").as("k"),
-          lit("grp-null").as("grp")))
-      e.join(dim, e("k") <=> dim("k"))
-        .groupBy("grp")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("grp")
-    }),
-
-    // ---- TPC-H Q3 (shippriority variant-less): segment-filtered
-    // customer ⋈ orders ⋈ lineitem, top revenue orders. Dim filters
-    // reach the scans; customer broadcasts; revenue is per-row
-    // quantized so the ranking is engine-exact ----
-    "q_tpch_q3" -> ((s, d) => {
-      val cust = customer(s, d)
-        .where(col("c_mktsegment") === "BUILDING")
-        .select("c_custkey")
-      val ord = orders(s, d)
-        .where(col("o_orderdate") < "1996-06-30")
-        .select("o_orderkey", "o_custkey", "o_orderdate")
-      val li = lineitem(s, d)
-        .where(col("l_shipdate") > "1996-06-30")
-        .select(col("l_orderkey"),
-          floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100).cast("long").as("rev_c"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .groupBy("l_orderkey", "o_orderdate")
-        .agg((sum("rev_c").cast("double") / 100.0).as("revenue"))
-        .select(col("l_orderkey"),
-          // parquet reads the date as TIMESTAMP_NTZ; session tz is UTC so
-          // the cast to TIMESTAMP is identity
-          unix_micros(col("o_orderdate").cast("timestamp"))
-            .as("o_orderdate_us"),
-          col("revenue"))
-        .orderBy(col("revenue").desc, col("l_orderkey"))
-        .limit(10)
-    }),
-
-    // ---- TPC-H Q5: the 6-table join (region→nation→supplier/customer,
-    // orders, lineitem) with the local-supplier predicate
-    // c_nationkey = s_nationkey; all dims broadcast, one fact agg ----
-    "q_tpch_q5" -> ((s, d) => {
-      val asiaNations = nation(s, d)
-        .join(broadcast(region(s, d).where(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select("n_nationkey", "n_name")
-      val supp = supplier(s, d).select("s_suppkey", "s_nationkey")
-      val cust = customer(s, d).select("c_custkey", "c_nationkey")
-      val ord = orders(s, d)
-        .where(col("o_orderdate") >= "1996-01-01" &&
-          col("o_orderdate") < "1997-01-01")
-        .select("o_orderkey", "o_custkey")
-      val li = lineitem(s, d).select(col("l_orderkey"), col("l_suppkey"),
-        floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * 100).cast("long").as("rev_c"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey") &&
-          col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(asiaNations),
-          col("s_nationkey") === col("n_nationkey"))
-        .groupBy("n_name")
-        .agg((sum("rev_c").cast("double") / 100.0).as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name"))
-    }),
-
-    // ---- TPC-H Q6: the forecasting-revenue-change scan — a pure
-    // filter+agg with NO join: every predicate (shipdate year, discount
-    // band, quantity cap) pushes to the parquet scan, and the whole plan
-    // is one WholeStageCodegen over a cents-quantized running sum ----
-    "q_tpch_q6" -> ((s, d) => {
-      lineitem(s, d)
-        .where(col("l_shipdate") >= "1996-01-01" &&
-          col("l_shipdate") < "1997-01-01" &&
-          col("l_discount").between(0.05, 0.07) &&
-          col("l_quantity") < 24)
-        .agg((sum(floor(col("l_extendedprice") * col("l_discount") * 100)
-          .cast("long")).cast("double") / 100.0).as("revenue"))
-    }),
-
-    // ---- TPC-H Q14: promotion-effect ratio — one month of lineitem
-    // broadcast-joined to part, promo share as a ratio of two exact
-    // cents sums (identical BIGINTs → identical IEEE quotient) ----
-    "q_tpch_q14" -> ((s, d) => {
-      val li = lineitem(s, d)
-        .where(col("l_shipdate") >= "1996-03-01" &&
-          col("l_shipdate") < "1996-04-01")
-        .select(col("l_partkey"),
-          floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100).cast("long").as("rev_c"))
-      li.join(broadcast(part(s, d).select("p_partkey", "p_type")),
-          col("l_partkey") === col("p_partkey"))
-        .agg((lit(100.0) *
-          sum(when(col("p_type") === "PROMO", col("rev_c"))
-            .otherwise(0L)).cast("double") /
-          sum(col("rev_c")).cast("double")).as("promo_revenue"))
-    }),
-
-    // ---- TPC-H Q10: returned-item reporting — top customers by revenue
-    // lost to returns. Fact filter (l_returnflag = 'R') reaches the scan;
-    // customer/nation broadcast; cents-quantized revenue → engine-exact
-    // ranking; distributed top-k ----
-    "q_tpch_q10" -> ((s, d) => {
-      val cust = customer(s, d)
-        .select("c_custkey", "c_name", "c_acctbal", "c_nationkey")
-      val nat = nation(s, d).select("n_nationkey", "n_name")
-      val ord = orders(s, d)
-        .where(col("o_orderdate") >= "1996-01-01" &&
-          col("o_orderdate") < "1997-01-01")
-        .select("o_orderkey", "o_custkey")
-      val li = lineitem(s, d)
-        .where(col("l_returnflag") === "R")
-        .select(col("l_orderkey"),
-          floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100).cast("long").as("rev_c"))
-      li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(nat), col("c_nationkey") === col("n_nationkey"))
-        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg((sum("rev_c").cast("double") / 100.0).as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey"))
-        .limit(20)
-        .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
-    }),
-
-    // ---- TPC-H Q18 (large-volume customers): orders whose total
-    // quantity exceeds a threshold — the aggregate-filtered semi-join
-    // shape. The qualifying-order set is computed once from lineitem
-    // (two-phase agg + HAVING) and semi-joins back; integer quantities
-    // → engine-exact threshold ----
-    "q_tpch_q18" -> ((s, d) => {
-      val li = lineitem(s, d)
-        .select(col("l_orderkey"),
-          round(col("l_quantity")).cast("long").as("qty"))
-      val big = li.groupBy("l_orderkey")
-        .agg(sum("qty").as("total_qty"))
-        .where(col("total_qty") > 80)
-      val ord = orders(s, d).select("o_orderkey", "o_custkey")
-      val cust = customer(s, d).select("c_custkey", "c_name")
-      big.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .select(col("c_custkey"), col("c_name"), col("l_orderkey"),
-          col("total_qty"))
-        .orderBy(col("total_qty").desc, col("l_orderkey"))
-        .limit(50)
-    }),
-
-    // ---- TPC-H Q19 (discounted-revenue, adapted to this schema's
-    // columns: shipmode/shipinstruct/container don't exist, so the
-    // OR-of-conjunctive-bands runs over brand × size × quantity): the
-    // disjunctive-predicate-pushdown shape. The union bounds derivable
-    // from the OR (brand IN set, size ≤ 15, qty ≤ 30) are applied at
-    // the scans explicitly — the constraint-propagation a TPC-H-grade
-    // optimizer derives — so the broadcast join sees pre-shrunk sides
-    // and the OR only arbitrates survivors ----
-    "q_tpch_q19" -> ((s, d) => {
-      val p = part(s, d)
-        .where(col("p_brand").isin("Brand#12", "Brand#23", "Brand#3") &&
-          col("p_size").between(1, 15))
-        .select("p_partkey", "p_brand", "p_size")
-      val li = lineitem(s, d)
-        .where(col("l_quantity").between(1, 30))
-        .select(col("l_partkey"), col("l_quantity"),
-          floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100).cast("long").as("rev_c"))
-      li.join(broadcast(p), col("l_partkey") === col("p_partkey") && (
-          (col("p_brand") === "Brand#12" && col("p_size").between(1, 5) &&
-            col("l_quantity").between(1, 11)) ||
-          (col("p_brand") === "Brand#23" && col("p_size").between(1, 10) &&
-            col("l_quantity").between(10, 20)) ||
-          (col("p_brand") === "Brand#3" && col("p_size").between(1, 15) &&
-            col("l_quantity").between(20, 30))))
-        .agg((sum("rev_c").cast("double") / 100.0).as("revenue"))
-    }),
-
-    // ---- TPC-H Q21 (suppliers who kept orders waiting, adapted: no
-    // receipt/commit dates in this schema, so "late" = shipped > 60
-    // days after the order date): the exists + not-exists double
-    // correlated self-join shape — a keyed semi-join against any other
-    // supplier on the order, then a keyed anti-join against any OTHER
-    // late supplier, leaving the sole blamable supplier per late
-    // order ----
-    "q_tpch_q21" -> ((s, d) => {
-      val late = col("l_shipdate") >
-        col("o_orderdate") + expr("INTERVAL 60 DAYS")
-      val li = lineitem(s, d).select("l_orderkey", "l_suppkey",
-        "l_shipdate")
-      val l1 = li
-        .join(orders(s, d).where(col("o_orderstatus") === "F")
-          .select("o_orderkey", "o_orderdate"),
-          col("l_orderkey") === col("o_orderkey"))
-        .where(late)
-        .select("l_orderkey", "l_suppkey")
-      val withOther = l1.join(
-        li.select(col("l_orderkey").as("l2_orderkey"),
-          col("l_suppkey").as("l2_suppkey")),
-        col("l2_orderkey") === col("l_orderkey") &&
-          col("l2_suppkey") =!= col("l_suppkey"), "left_semi")
-      val sole = withOther.join(
-        l1.select(col("l_orderkey").as("l3_orderkey"),
-          col("l_suppkey").as("l3_suppkey")),
-        col("l3_orderkey") === col("l_orderkey") &&
-          col("l3_suppkey") =!= col("l_suppkey"), "left_anti")
-      sole
-        .join(broadcast(supplier(s, d)
-          .select("s_suppkey", "s_name", "s_nationkey")),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(nation(s, d).where(col("n_name").isin(
-          "NATION_1", "NATION_5", "NATION_9", "NATION_13", "NATION_21"))),
-          col("s_nationkey") === col("n_nationkey"))
-        .groupBy("s_name")
-        .agg(count(lit(1)).as("numwait"))
-        .orderBy(col("numwait").desc, col("s_name"))
-        .limit(20)
-    }),
-
-    // ---- TPC-H Q22 (global-sales-opportunity, adapted: no phone
-    // column, so the country code is c_nationkey, and since every
-    // customer here has orders the anti-join is against RECENT orders —
-    // lapsed rich customers): scalar-subquery threshold via integer
-    // cross-multiply (bal·n > Σbal dodges the avg float), broadcast
-    // 1-row total, keyed anti-join ----
-    "q_tpch_q22" -> ((s, d) => {
-      val cust = customer(s, d)
-        .where(col("c_nationkey").isin(0, 3, 7, 12, 17, 21, 24))
-        .select(col("c_custkey"), col("c_nationkey"),
-          floor(col("c_acctbal") * 100 + 0.5).cast("long").as("bal_c"))
-      val pos = cust.where(col("bal_c") > 0)
-        .agg(sum("bal_c").as("_sum_c"), count(lit(1)).as("_n_pos"))
-      cust.crossJoin(broadcast(pos))
-        .where(col("bal_c") * col("_n_pos") > col("_sum_c"))
-        .join(orders(s, d).where(col("o_orderdate") >= "2000-01-01")
-          .select("o_custkey"),
-          col("c_custkey") === col("o_custkey"), "left_anti")
-        .groupBy(col("c_nationkey").as("cntrycode"))
-        .agg(count(lit(1)).as("numcust"),
-          (sum("bal_c").cast("double") / 100.0).as("totacctbal"))
-        .orderBy("cntrycode")
-    }),
-
-    // ---- TPC-H Q2 (minimum-cost supplier, adapted: the schema subset
-    // has no partsupp, so the supplier "offer" table is synthesized from
-    // shipping history — per (part, supplier) the MIN quantized unit
-    // price ever shipped; floor(ep·100/qty) is the same IEEE value in
-    // both engines). Keeps Q2's correlated-min structure: the per-part
-    // regional minimum is a groupBy + broadcast join-back (the A9
-    // discipline — no second window shuffle), dims broadcast ----
-    "q_tpch_q2" -> ((s, d) => {
-      val offers = lineitem(s, d)
-        .select(col("l_partkey"), col("l_suppkey"),
-          floor(col("l_extendedprice") * 100 / col("l_quantity"))
-            .cast("long").as("cost_c"))
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(min("cost_c").as("cost_c"))
-      val eurNations = nation(s, d)
-        .join(broadcast(region(s, d).where(col("r_name") === "EUROPE")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select("n_nationkey", "n_name")
-      val supp = supplier(s, d)
-        .join(broadcast(eurNations),
-          col("s_nationkey") === col("n_nationkey"))
-        .select("s_suppkey", "s_name", "s_acctbal", "n_name")
-      val pts = part(s, d)
-        .where(col("p_size") === 10 && col("p_type") === "LARGE")
-        .select("p_partkey", "p_name")
-      val regional = offers
-        .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(pts), col("l_partkey") === col("p_partkey"))
-      val minCost = regional.groupBy(col("p_partkey").as("_mpk"))
-        .agg(min("cost_c").as("_min_c"))
-      regional.join(broadcast(minCost),
-          col("p_partkey") === col("_mpk") &&
-            col("cost_c") === col("_min_c"))
-        .select(col("s_acctbal"), col("s_name"), col("n_name"),
-          col("p_partkey"), col("p_name"),
-          (col("cost_c").cast("double") / 100.0).as("supply_cost"))
-        .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"),
-          col("p_partkey"))
-        .limit(20)
-    }),
-
-    // ---- TPC-H Q9 (product-type profit, adapted: no partsupp →
-    // profit is revenue over the 'red' part family; the 5-table star
-    // keeps Q9's join-ordering exercise): one fact scan through four
-    // broadcasts + one keyed orders join, per-(nation, year) agg ----
-    "q_tpch_q9" -> ((s, d) => {
-      lineitem(s, d)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-          floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100).cast("long").as("rev_c"))
-        .join(broadcast(part(s, d)
-          .where(col("p_name").like("%red%")).select("p_partkey")),
-          col("l_partkey") === col("p_partkey"))
-        .join(broadcast(supplier(s, d)
-          .select("s_suppkey", "s_nationkey")),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(nation(s, d)
-          .select("n_nationkey", "n_name")),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(orders(s, d).select("o_orderkey", "o_orderdate"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("n_name").as("nation"),
-          year(col("o_orderdate")).as("o_year"))
-        .agg((sum("rev_c").cast("double") / 100.0).as("sum_profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    }),
-
-    // ---- TPC-H Q11 (important inventory, adapted: no partsupp →
-    // per-part "stock value" is the revenue shipped by NATION_7's
-    // suppliers). Keeps Q11's scalar-subquery HAVING: the global
-    // total+count ride a 1-row broadcast crossJoin and the threshold
-    // compare is exact-integer. The cut is AVERAGE-relative (value·n >
-    // 2·total ⇔ value > 2× the mean part value) rather than TPC-H's
-    // fixed fraction: the spec itself scales its fraction by 1/SF, and
-    // a fixed 0.1 % cut empties at sf0.1 (measured) — the mean-relative
-    // form selects "important" parts at every SF ----
-    "q_tpch_q11" -> ((s, d) => {
-      val natSupp = supplier(s, d)
-        .join(broadcast(nation(s, d).where(col("n_name") === "NATION_7")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select("s_suppkey")
-      val vals = lineitem(s, d)
-        .select(col("l_partkey"), col("l_suppkey"),
-          floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100).cast("long").as("rev_c"))
-        .join(broadcast(natSupp), col("l_suppkey") === col("s_suppkey"))
-        .groupBy("l_partkey")
-        .agg(sum("rev_c").as("value_c"))
-      val tot = vals.agg(sum("value_c").as("_tot_c"),
-        count(lit(1)).as("_n"))
-      vals.crossJoin(broadcast(tot))
-        .where(col("value_c") * col("_n") > col("_tot_c") * 2)
-        .select(col("l_partkey").as("p_partkey"),
-          (col("value_c").cast("double") / 100.0).as("value"))
-        .orderBy(col("value").desc, col("p_partkey"))
-    }),
-
-    // ---- TPC-H Q16 (supplier counts by part attributes, adapted: the
-    // (part, supplier) relation comes from shipping history and the
-    // "complaints" exclusion is the negative-balance suppliers).
-    // Keeps Q16's shape: NOT-IN as a broadcast anti-join, multi-NOT
-    // part predicates at the scan, count(DISTINCT) two-phase agg ----
-    "q_tpch_q16" -> ((s, d) => {
-      val complaints = supplier(s, d).where(col("s_acctbal") < 0)
-        .select("s_suppkey")
-      lineitem(s, d).select("l_partkey", "l_suppkey").distinct()
-        .join(broadcast(part(s, d)
-          .where(col("p_brand") =!= "Brand#9" &&
-            !col("p_type").startsWith("MEDIUM") &&
-            col("p_size").isin(3, 9, 14, 19, 23, 36, 45, 49))
-          .select("p_partkey", "p_brand", "p_type", "p_size")),
-          col("l_partkey") === col("p_partkey"))
-        .join(broadcast(complaints),
-          col("l_suppkey") === col("s_suppkey"), "left_anti")
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(countDistinct("l_suppkey").as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
-          col("p_size"))
-    }),
-
-    // ---- TPC-H Q20 (excess-stock suppliers, adapted: no partsupp
-    // availqty → a supplier "holds excess stock" of a part when it
-    // shipped MORE THAN HALF of the part's 1997 volume). Keeps Q20's
-    // nested-IN structure: dominant (part, supplier) pairs from two
-    // stacked aggs with an exact-integer share compare (qty·2 > total),
-    // then a semi-join onto the nation-filtered supplier dim ----
-    "q_tpch_q20" -> ((s, d) => {
-      val shipped = lineitem(s, d)
-        .where(col("l_shipdate") >= "1997-01-01" &&
-          col("l_shipdate") < "1998-01-01")
-        .select(col("l_partkey"), col("l_suppkey"),
-          col("l_quantity").cast("long").as("qty"))
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(sum("qty").as("qty"))
-      val partTotals = shipped.groupBy("l_partkey")
-        .agg(sum("qty").as("_tot_qty"))
-      val dominant = shipped
-        .join(broadcast(part(s, d).where(col("p_name").like("small%"))
-          .select("p_partkey")),
-          col("l_partkey") === col("p_partkey"))
-        .join(partTotals.withColumnRenamed("l_partkey", "_pk"),
-          col("l_partkey") === col("_pk"))
-        .where(col("qty") * 2 > col("_tot_qty"))
-        .select("l_suppkey")
-      supplier(s, d)
-        .join(broadcast(nation(s, d).where(col("n_name") === "NATION_3")),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(dominant, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select("s_suppkey", "s_name", "s_acctbal")
-        .orderBy("s_name")
-    }),
-
-    // ---- TPC-H Q4 (order-priority checking, adapted: the schema subset
-    // has no commit/receipt dates, so "late" is shipped > 30 days after
-    // the order date): EXISTS over the fact table → left-semi join with
-    // a non-equi conjunct; the orders-side date window prunes first ----
-    "q_tpch_q4" -> ((s, d) => {
-      val ord = orders(s, d)
-        .where(col("o_orderdate") >= "1996-07-01" &&
-          col("o_orderdate") < "1996-10-01")
-        .select("o_orderkey", "o_orderpriority", "o_orderdate")
-      ord.join(lineitem(s, d).select("l_orderkey", "l_shipdate"),
-          col("l_orderkey") === col("o_orderkey") &&
-            col("l_shipdate") >
-              col("o_orderdate") + expr("INTERVAL 30 DAYS"),
-          "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("order_count"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // ---- TPC-H Q7 (volume shipping): the two-aliased-nation pattern —
-    // the same dim joined twice under different roles, with a symmetric
-    // nation-pair predicate and per-year revenue ----
-    "q_tpch_q7" -> ((s, d) => {
-      val n1 = nation(s, d).select(col("n_nationkey").as("s_nk"),
-        col("n_name").as("supp_nation"))
-      val n2 = nation(s, d).select(col("n_nationkey").as("c_nk"),
-        col("n_name").as("cust_nation"))
-      lineitem(s, d)
-        .where(col("l_shipdate") >= "1996-01-01" &&
-          col("l_shipdate") < "1998-01-01")
-        .select(col("l_orderkey"), col("l_suppkey"),
-          year(col("l_shipdate")).as("l_year"),
-          floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100).cast("long").as("rev_c"))
-        .join(orders(s, d).select("o_orderkey", "o_custkey"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(supplier(s, d).select("s_suppkey", "s_nationkey")),
-          col("l_suppkey") === col("s_suppkey"))
-        .join(broadcast(customer(s, d).select("c_custkey", "c_nationkey")),
-          col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n1), col("s_nationkey") === col("s_nk"))
-        .join(broadcast(n2), col("c_nationkey") === col("c_nk"))
-        .where((col("supp_nation") === "NATION_3" &&
-            col("cust_nation") === "NATION_7") ||
-          (col("supp_nation") === "NATION_7" &&
-            col("cust_nation") === "NATION_3"))
-        .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg((sum("rev_c").cast("double") / 100.0).as("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    }),
-
-    // ---- TPC-H Q8 (national market share): conditional-share agg —
-    // sum(case)/sum over exact cents, so the ratio divides two exact
-    // longs and rounds once; region restriction rides the customer dim,
-    // part/supplier dims broadcast against the one fact scan ----
-    "q_tpch_q8" -> ((s, d) => {
-      val asiaCust = customer(s, d).select("c_custkey", "c_nationkey")
-        .join(broadcast(nation(s, d)
-          .select("n_nationkey", "n_regionkey")),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(region(s, d).where(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select("c_custkey")
-      lineitem(s, d)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-          floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100).cast("long").as("vol_c"))
-        .join(broadcast(part(s, d).where(col("p_type") === "PROMO")
-          .select("p_partkey")),
-          col("l_partkey") === col("p_partkey"))
-        .join(orders(s, d)
-          .where(col("o_orderdate") >= "1996-01-01" &&
-            col("o_orderdate") < "1998-01-01")
-          .select("o_orderkey", "o_custkey", "o_orderdate"),
-          col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(asiaCust), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(supplier(s, d).select("s_suppkey", "s_nationkey")),
-          col("l_suppkey") === col("s_suppkey"))
-        .groupBy(year(col("o_orderdate")).as("o_year"))
-        .agg(round(
-          sum(when(col("s_nationkey") === 9, col("vol_c")).otherwise(0L))
-            .cast("double") / sum("vol_c").cast("double"), 6)
-          .as("mkt_share"))
-        .orderBy("o_year")
-    }),
-
-    // ---- TPC-H Q12 (shipping-mode priority, adapted: no l_shipmode in
-    // the schema subset, so the mode-like dimension is l_returnflag):
-    // the two-bucket conditional count over a date-windowed fact join ----
-    "q_tpch_q12" -> ((s, d) => {
-      val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      lineitem(s, d)
-        .where(col("l_shipdate") >= "1996-01-01" &&
-          col("l_shipdate") < "1997-01-01")
-        .select("l_orderkey", "l_returnflag")
-        .join(orders(s, d).select("o_orderkey", "o_orderpriority"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy("l_returnflag")
-        .agg(sum(when(high, 1L).otherwise(0L)).as("high_line_count"),
-          sum(when(!high, 1L).otherwise(0L)).as("low_line_count"))
-        .orderBy("l_returnflag")
-    }),
-
-    // ---- TPC-H Q13 (customer order-count distribution): the
-    // group-by-of-a-group-by with a LEFT join so zero-order customers
-    // land in the c_count=0 bucket; the order filter (adapted: priority
-    // stands in for the comment NOT LIKE) sits in the join, not after it,
-    // so it cannot turn the outer join inner ----
-    "q_tpch_q13" -> ((s, d) => {
-      customer(s, d).select("c_custkey")
-        .join(orders(s, d)
-          .where(col("o_orderpriority") =!= "4-NOT SPECIFIED")
-          .select("o_custkey"),
-          col("c_custkey") === col("o_custkey"), "left")
-        .groupBy("c_custkey")
-        .agg(count(col("o_custkey")).as("c_count"))
-        .groupBy("c_count")
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-
-    // ---- TPC-H Q15 (top supplier): agg-then-argmax — the revenue CTE
-    // feeds both the max (1-row broadcast) and the equality probe, so
-    // the quarter's per-supplier revenue is computed once; cents keep
-    // the max/equality comparison exact where doubles could tie-break
-    // differently across engines ----
-    "q_tpch_q15" -> ((s, d) => {
-      val rev = lineitem(s, d)
-        .where(col("l_shipdate") >= "1996-01-01" &&
-          col("l_shipdate") < "1996-04-01")
-        .groupBy(col("l_suppkey").as("supplier_no"))
-        .agg(sum(floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-          * 100).cast("long")).as("rev_c"))
-      val mx = rev.agg(max("rev_c").as("_max_c"))
-      rev.crossJoin(broadcast(mx))
-        .where(col("rev_c") === col("_max_c"))
-        .join(broadcast(supplier(s, d).select("s_suppkey", "s_name")),
-          col("supplier_no") === col("s_suppkey"))
-        .select(col("s_suppkey"), col("s_name"),
-          (col("rev_c").cast("double") / 100.0).as("total_revenue"))
-        .orderBy("s_suppkey")
-    }),
-
-    // ---- TPC-H Q17 (small-quantity-order revenue, adapted: no
-    // p_container, so the part class is the brand alone): the correlated
-    // per-part AVG subquery becomes a grouped (sum, count) joined back,
-    // with the 0.2·avg threshold as an integer cross-multiply
-    // (5·qty·n < Σqty) so no float average is ever compared ----
-    "q_tpch_q17" -> ((s, d) => {
-      val li = lineitem(s, d)
-        .select(col("l_partkey"), col("l_quantity").cast("long").as("qty"),
-          floor(col("l_extendedprice") * 100).cast("long").as("price_c"))
-        .join(broadcast(part(s, d).where(col("p_brand") === "Brand#23")
-          .select("p_partkey")),
-          col("l_partkey") === col("p_partkey"))
-      val perPart = li.groupBy("l_partkey")
-        .agg(sum("qty").as("_sum_q"), count(lit(1)).as("_n_q"))
-      li.join(perPart, Seq("l_partkey"))
-        .where(col("qty") * 5 * col("_n_q") < col("_sum_q"))
-        .agg((sum("price_c").cast("double") / 100.0 / 7.0).as("avg_yearly"))
-    }),
-
-    // ---- time-RANGE window: trailing 1-hour per-user mean — the
-    // interval-frame capability (RANGE BETWEEN x PRECEDING) that row
-    // frames can't express on irregular event times ----
-    "q_range_window" -> ((s, d) => {
-      val w = Window.partitionBy("user_id")
-        .orderBy(unix_micros(col("ts")))
-        .rangeBetween(-3600000000L, 0)
-      events(s, d).select(
-          col("event_id"), col("user_id"),
-          (sum(round(col("value") * 100).cast("long")).over(w)
-            .cast("double") / 100.0 / count(lit(1)).over(w))
-            .as("trail_avg_1h"),
-          count(lit(1)).over(w).as("n_trail"))
-        .orderBy("event_id")
-    }),
-
-    // ---- arbitrary GROUPING SETS (the general form behind rollup/cube):
-    // by-type, by-day, and grand total in one pass — Spark 4's native
-    // Dataset.groupingSets ----
-    "q_grouping_sets" -> ((s, d) => {
-      events(s, d)
-        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-        .groupingSets(
-          Seq(Seq(col("event_type")), Seq(col("day")), Seq()),
-          col("event_type"), col("day"))
-        .agg(count(lit(1)).as("n"),
-          (sum(round(col("value") * 100).cast("long")) / 100.0)
-            .as("sum_value"))
-        .select(coalesce(col("event_type"), lit("<all>")).as("event_type"),
-          coalesce(col("day"), lit("<all>")).as("day"),
-          col("n"), col("sum_value"))
-        .orderBy("event_type", "day")
-    }),
-
-    // ---- exact interpolated percentiles (percentile ≡ quantile_cont):
-    // computed over integer-quantized cents so both engines interpolate
-    // between identical exact integers (lower + (upper-lower)·frac on
-    // small ints is engine-identical; raw-double interpolation would
-    // expose internal op-order differences) ----
-    "q_percentiles" -> ((s, d) => {
-      events(s, d)
-        .withColumn("cents", round(col("value") * 100).cast("long"))
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n"),
-          percentile(col("cents"), lit(0.5)).as("_p50"),
-          percentile(col("cents"), lit(0.95)).as("_p95"))
-        .select(col("event_type"), col("n"),
-          (floor(col("_p50") * 1e4) / 1e6).as("p50"),
-          (floor(col("_p95") * 1e4) / 1e6).as("p95"))
-        .orderBy("event_type")
-    }),
-
-    // ---- sliding windows: window(ts, 2h, 1h) — each event lands in two
-    // overlapping buckets; oracle = join to the covering hour-starts ----
-    "q_sliding_window" -> ((s, d) => {
-      events(s, d)
-        .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"),
-          col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(unix_micros(col("w.start")).as("win_start_us"),
-          col("event_type"), col("n"))
-        .orderBy("win_start_us", "event_type")
-    }),
-
-    // ---- session windows: Spark's session_window vs the classic
-    // gaps-and-islands sessionization (new session when gap >= 30 min) —
-    // the streaming-native generalization of the reference's island logic.
-    "q_sessionize" -> ((s, d) => {
-      events(s, d)
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("w"))
-        .agg(count(lit(1)).as("n_events"),
-          unix_micros(min("ts")).as("first_us"),
-          unix_micros(max("ts")).as("last_us"))
-        .select(col("user_id"), col("first_us"), col("last_us"),
-          col("n_events"))
-        .orderBy("user_id", "first_us")
-    }),
-
-    // ---- A1: global stats aggregation (01_ingest_raw_telemetry.py:318-327) ----
-    "q_stats_global" -> ((s, d) => {
-      events(s, d).agg(
-        count(lit(1)).as("n_rows"),
-        countDistinct(col("user_id")).as("n_users"),
-        countDistinct(col("event_type")).as("n_types"),
-        unix_micros(min("ts")).as("min_ts_us"),
-        unix_micros(max("ts")).as("max_ts_us"),
-        round(sum("value"), 2).as("sum_value"))
-    }),
-
-    // ---- A4: conditional-count pivot by group (EDA notebook cell 8) ----
-    "q_cond_pivot" -> ((s, d) => {
-      events(s, d)
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n"),
-          count(when(col("user_id") % 2 === 0, 1)).as("n_even_users"),
-          count(when(col("value") > 50, 1)).as("n_high"),
-          (sum(when(col("value") > 50, round(col("value") * 100).cast("long")))
-            / lit(100.0) / count(when(col("value") > 50, 1))).as("avg_high"))
-        .orderBy("event_type")
-    }),
-
-    // ---- §2.8 string scalar functions + P6 LIKE predicate ----
-    "q_scalar_string" -> ((s, d) => {
-      customer(s, d)
-        .where(col("c_mktsegment").like("%BUILD%") || col("c_mktsegment").like("%AUTO%"))
-        .select(
-          col("c_custkey"),
-          lower(trim(col("c_name"))).as("name_lc"),
-          concat(col("c_mktsegment"), lit("_"), col("c_nationkey").cast("string")).as("seg_nation"),
-          substring(col("c_name"), 1, 8).as("name_prefix"),
-          length(col("c_name")).cast("long").as("name_len"))
-        .orderBy("c_custkey")
-    }),
-
-    // ---- §2.8 hash identity: sha2(key || '|' || ts_text) — the silver
-    // row id (02_raw_telemetry_transform.sql:39-47 semantics).
-    "q_hash_id" -> ((s, d) => {
-      events(s, d)
-        .select(col("event_id"),
-          sha2(concat(col("user_id").cast("string"), lit("|"),
-            date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")), 256).as("row_hash"))
-        .orderBy("event_id")
-    }),
-
-    // ---- §2.8 JSON extraction (extras JSONB semantics) ----
-    "q_json_extract" -> ((s, d) => {
-      events(s, d)
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-        .groupBy("k")
-        .agg(count(lit(1)).as("n"),
-          // integer-cents average: value has exactly 2 decimals, so the
-          // bigint sum is order-independent and the single division gives
-          // bit-identical doubles in Spark and DuckDB (a rounded float avg
-          // straddles decimal boundaries differently per engine)
-          (sum(round(col("value") * 100).cast("long")) / lit(100.0) /
-            count(lit(1))).as("avg_value"))
-        .orderBy("k")
-    }),
-
-    // ---- O4 top-k with total order (count desc, key tiebreak) ----
-    "q_topk" -> ((s, d) => {
-      events(s, d)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_value"))
-        .orderBy(col("n_events").desc, col("user_id"))
-        .limit(10)
-    }),
-
-    // ---- U1/U3: union + distinct ----
-    "q_distinct_union" -> ((s, d) => {
-      val e = events(s, d)
-      e.where(col("value") > 90).select(col("event_type"))
-        .union(e.where(col("user_id") < 5).select(col("event_type")))
-        .distinct()
-        .orderBy("event_type")
-    }),
-
-    // ---- P7/P8: threshold flags + clamping/sentinel cleaning
-    // (database_pipeline.py:299-327: speeds <0→0, >50→50; -99→NULL) ----
-    "q_clamp_flags" -> ((s, d) => {
-      events(s, d)
-        .select(
-          col("event_id"),
-          when(col("value") < 10, 0.0).when(col("value") > 90, 90.0)
-            .otherwise(col("value")).as("value_clamped"),
-          (col("value") < 0.5).as("is_stationary"),
-          when(col("value") === 6.55, null).otherwise(col("value")).as("value_desentineled"))
-        .orderBy("event_id")
-    }))
-
-  val oracle: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(CAST(sum(l_quantity) AS DOUBLE), 2) AS sum_qty,
-        |  round(CAST(sum(l_extendedprice) AS DOUBLE), 2) AS sum_base_price,
-        |  round(CAST(sum(l_extendedprice * (1.0 - l_discount)) AS DOUBLE), 2) AS sum_disc_price,
-        |  round(avg(l_quantity), 4) AS avg_qty,
-        |  round(avg(l_discount), 4) AS avg_disc,
-        |  count(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_join_agg" ->
-      """SELECT r_name, count(*) AS n_orders,
-        |  round(CAST(sum(o_totalprice) AS DOUBLE), 2) AS total_revenue
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-
-    "q_anti_join" ->
-      """SELECT c_mktsegment, count(*) AS n_customers
-        |FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders
-        |                  WHERE o_custkey = c_custkey AND o_totalprice > 450000)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q_semi_join" ->
-      """SELECT n_name, count(*) AS n_suppliers
-        |FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_suppkey = s_suppkey AND l_quantity > 25)
-        |GROUP BY n_name ORDER BY n_name""".stripMargin,
-
-    // full bloom replay: same depth-salted addressing, 32-bit words in
-    // BIGINTs via bit_or, min-over-depths membership; exact twin EXISTS
-    "q_bloom" ->
-      """WITH addr AS MATERIALIZED (
+    },
+      // full bloom replay: same depth-salted addressing, 32-bit words in
+      // BIGINTs via bit_or, min-over-depths membership; exact twin EXISTS
+      Some("""WITH addr AS MATERIALIZED (
         |  SELECT CAST(d.range AS INT) AS depth,
         |    CAST(md5_number_upper(CAST(d.range AS VARCHAR) || '|'
         |        || CAST(o_custkey AS VARCHAR))
@@ -1161,32 +146,82 @@ object CoreQueries {
         |SELECT pm.c_custkey, pm.in_bloom,
         |  EXISTS(SELECT 1 FROM orders o WHERE o.o_custkey = pm.c_custkey)
         |    AS has_orders
-        |FROM pm ORDER BY c_custkey""".stripMargin,
+        |FROM pm ORDER BY c_custkey""".stripMargin)),
 
-    "q_interval_join" ->
-      """SELECT o_orderpriority, count(*) AS n_lines,
+    // ---- J2 interval join (point-in-range, per key): the reference's
+    // label recombine join (02.1.2_...label_recombine.py:358-398) shape,
+    // expressed on orders×lineitem: ship within 90 days of order date.
+    Query("q_interval_join", (s, d) => {
+      val l = lineitem(s, d); val o = orders(s, d)
+      l.join(o, l("l_orderkey") === o("o_orderkey") &&
+          l("l_shipdate") >= o("o_orderdate") &&
+          l("l_shipdate") <= date_add(o("o_orderdate"), 90))
+        .groupBy("o_orderpriority")
+        .agg(count(lit(1)).as("n_lines"),
+          round(sum("l_extendedprice"), 2).as("sum_price"))
+        .orderBy("o_orderpriority")
+    },
+      Some("""SELECT o_orderpriority, count(*) AS n_lines,
         |  round(CAST(sum(l_extendedprice) AS DOUBLE), 2) AS sum_price
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |  AND l_shipdate >= o_orderdate
         |  AND l_shipdate <= o_orderdate + INTERVAL 90 DAY
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
-    "q_window_lag" ->
-      """SELECT event_id, user_id, value,
+    // ---- W1/W2/W5: lag + inter-row delta (04_worker_script.sql:23-24) ----
+    Query("q_window_lag", (s, d) => {
+      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      events(s, d)
+        .withColumn("prev_value", lag("value", 1).over(w))
+        .withColumn("delta_us", unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))
+        .select(col("event_id"), col("user_id"), col("value"),
+          coalesce(col("prev_value"), lit(-1.0)).as("prev_value"),
+          coalesce(col("delta_us"), lit(-1L)).as("delta_us"))
+        .orderBy("event_id")
+    },
+      Some("""SELECT event_id, user_id, value,
         |  coalesce(lag(value) OVER w, -1.0) AS prev_value,
         |  coalesce(epoch_us(ts) - lag(epoch_us(ts)) OVER w, -1) AS delta_us
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "q_window_rolling" ->
-      """SELECT event_id, user_id,
+    // ---- W3: centered 5-row rolling mean (04_worker_script.sql:25,59) ----
+    Query("q_window_rolling", (s, d) => {
+      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      events(s, d)
+        .withColumn("value_smoothed", round(avg("value").over(w.rowsBetween(-2, 2)), 4))
+        .select("event_id", "user_id", "value_smoothed")
+        .orderBy("event_id")
+    },
+      Some("""SELECT event_id, user_id,
         |  round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
         |    ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING), 4) AS value_smoothed
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin)),
 
-    "q_gaps_islands" ->
-      """WITH base AS (
+    // ---- W4+W7: gaps-and-islands block id + running dwell time
+    // (04_worker_script.sql:23-34,63-66). is_active plays is_stationary.
+    Query("q_gaps_islands", (s, d) => {
+      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      // dwell accumulates in EXACT integer microseconds and divides once at
+      // the end — no float running sum, so the result is bit-identical on
+      // any engine (the round()-on-accumulated-floats hash hazard is gone)
+      val base = events(s, d)
+        .withColumn("is_active", col("value") >= 50.0)
+        .withColumn("prev_active",
+          coalesce(lag("is_active", 1).over(w), lit(false)))
+        .withColumn("delta_us",
+          coalesce(unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w), lit(0L)))
+        .withColumn("block_id",
+          sum(when(col("is_active") =!= col("prev_active"), 1).otherwise(0)).over(w))
+      val wb = Window.partitionBy("user_id", "block_id").orderBy("ts", "event_id")
+      base
+        .withColumn("dwell_s",
+          sum(when(col("is_active"), col("delta_us")).otherwise(0L)).over(wb) / 1e6)
+        .select("event_id", "user_id", "is_active", "block_id", "dwell_s")
+        .orderBy("event_id")
+    },
+      Some("""WITH base AS (
         |  SELECT event_id, user_id, ts, value >= 50.0 AS is_active,
         |    coalesce(lag(value >= 50.0) OVER w, false) AS prev_active,
         |    coalesce(epoch_us(ts) - lag(epoch_us(ts)) OVER w, 0) AS delta_us
@@ -1205,27 +240,65 @@ object CoreQueries {
         |    OVER (PARTITION BY user_id, block_id ORDER BY ts, event_id
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
         |    / 1e6 AS dwell_s
-        |FROM blocks ORDER BY event_id""".stripMargin,
+        |FROM blocks ORDER BY event_id""".stripMargin)),
 
-    "q_time_bucket" ->
-      """SELECT epoch_us(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP))) AS bucket_start_us,
+    // ---- A6: tumbling time-bucket aggregation (5s in the reference's CPD
+    // downsample, 05_cpd_orchestrator_polars.py:263-276; 1h here to match
+    // the events cadence). window() is streaming-compatible as-is.
+    Query("q_time_bucket", (s, d) => {
+      events(s, d)
+        .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
+        .agg((sum(round(col("value") * 100).cast("long")) / lit(100.0) /
+          count(lit(1))).as("avg_value"), count(lit(1)).as("n"))
+        .select(unix_micros(col("w.start")).as("bucket_start_us"), col("event_type"),
+          col("avg_value"), col("n"))
+        .orderBy("bucket_start_us", "event_type")
+    },
+      Some("""SELECT epoch_us(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP))) AS bucket_start_us,
         |  event_type,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0
         |    / count(*) AS avg_value,
         |  count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
-    "q_rollup" ->
-      """SELECT coalesce(event_type, '<all>') AS event_type,
+    // ---- OLAP rollup: hierarchical subtotals (event_type, day) + grand
+    // total — the grouping-sets family SURVEY §2.4 notes as headroom ----
+    Query("q_rollup", (s, d) => {
+      events(s, d)
+        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+        .rollup("event_type", "day")
+        .agg(count(lit(1)).as("n"),
+          round(sum("value"), 2).as("sum_value"))
+        .select(coalesce(col("event_type"), lit("<all>")).as("event_type"),
+          coalesce(col("day"), lit("<all>")).as("day"),
+          col("n"), col("sum_value"))
+        .orderBy("event_type", "day")
+    },
+      Some("""SELECT coalesce(event_type, '<all>') AS event_type,
         |  coalesce(strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d'), '<all>') AS day,
         |  count(*) AS n,
         |  round(CAST(sum(value) AS DOUBLE), 2) AS sum_value
         |FROM events
         |GROUP BY ROLLUP (event_type, strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d'))
-        |ORDER BY event_type, day""".stripMargin,
+        |ORDER BY event_type, day""".stripMargin)),
 
-    "q_scd2" ->
-      """WITH changes AS (
+    // ---- SCD Type-2 dimension versioning: change stream → versioned
+    // rows with [effective_from, effective_to) validity ----
+    Query("q_scd2", (s, d) => {
+      import graft.operators.TelemetryTransform
+      val changes = events(s, d).where(col("event_id") % 40 === 0)
+        .select(
+          concat(lit("t"), (col("user_id") % 20).cast("string")).as("truck_id"),
+          col("ts"),
+          floor(col("value") * 10).cast("long").as("config_version"))
+      TelemetryTransform.scd2(changes, "truck_id", "ts")
+        .select(col("truck_id"),
+          unix_micros(col("effective_from")).as("from_us"),
+          unix_micros(col("effective_to")).as("to_us"),
+          col("config_version"), col("is_current"))
+        .orderBy("truck_id", "from_us")
+    },
+      Some("""WITH changes AS (
         |  SELECT 't' || CAST(user_id % 20 AS VARCHAR) AS truck_id,
         |    CAST(ts AS TIMESTAMP) AS ts,
         |    CAST(floor(value * 10) AS BIGINT) AS config_version
@@ -1238,10 +311,25 @@ object CoreQueries {
         |  config_version,
         |  lead(ts) OVER (PARTITION BY truck_id
         |    ORDER BY ts, config_version) IS NULL AS is_current
-        |FROM changes ORDER BY truck_id, from_us""".stripMargin,
+        |FROM changes ORDER BY truck_id, from_us""".stripMargin)),
 
-    "q_heavy_hitters" ->
-      """WITH keyed AS (
+    // ---- frequent items via Misra-Gries sketch + exact verify: skewed
+    // key space (7 hot keys ≫ support, long cold tail); the sketch
+    // guarantees every ≥-support key is a candidate, the verify pass makes
+    // the output exact — so the plain GROUP BY/HAVING oracle applies ----
+    Query("q_heavy_hitters", (s, d) => {
+      import graft.operators.HeavyHitters
+      // split-starvation guard: the sketch's partial phase is per-row
+      // CPU (string build + map upkeep) and merges cheaply — it wants
+      // cores, not one scan split
+      val keyed = graft.Tables.ensureParallelism(events(s, d)).select(
+        when(col("user_id") % 3 === 0,
+          concat(lit("hot-"), (col("user_id") % 7).cast("string")))
+          .otherwise(concat(lit("cold-"), col("user_id").cast("string")))
+          .as("k"))
+      HeavyHitters.topFrequent(keyed, "k", support = 0.02, capacity = 64)
+    },
+      Some("""WITH keyed AS (
         |  SELECT CASE WHEN user_id % 3 = 0
         |           THEN 'hot-' || CAST(user_id % 7 AS VARCHAR)
         |           ELSE 'cold-' || CAST(user_id AS VARCHAR) END AS k
@@ -1251,10 +339,26 @@ object CoreQueries {
         |FROM keyed GROUP BY k
         |HAVING count(*) >= CAST(ceil(0.02 * (SELECT count(*) FROM keyed))
         |  AS BIGINT)
-        |ORDER BY n DESC, k""".stripMargin,
+        |ORDER BY n DESC, k""".stripMargin)),
 
-    "q_hh_groups" ->
-      """WITH keyed AS (
+    // ---- PER-GROUP frequent items (keyed Misra-Gries — the
+    // q_hll_groups story for frequent keys): one sketch per event
+    // type via groupBy + udaf, candidates broadcast back for the
+    // exact verify, integer ceil-rank thresholds. The oracle is the
+    // plain per-group frequency threshold — proving per-group sketch
+    // completeness ----
+    Query("q_hh_groups", (s, d) => {
+      import graft.operators.HeavyHitters
+      val keyed = graft.Tables.ensureParallelism(events(s, d)).select(
+        col("event_type").as("g"),
+        when(col("user_id") % 3 === 0,
+          concat(lit("hot-"), (col("user_id") % 7).cast("string")))
+          .otherwise(concat(lit("cold-"), col("user_id").cast("string")))
+          .as("k"))
+      HeavyHitters.topFrequentByGroup(keyed, "g", "k",
+        supportNum = 2L, supportDen = 100L, capacity = 64)
+    },
+      Some("""WITH keyed AS (
         |  SELECT event_type AS g,
         |    CASE WHEN user_id % 3 = 0
         |      THEN 'hot-' || CAST(user_id % 7 AS VARCHAR)
@@ -1268,10 +372,29 @@ object CoreQueries {
         |)
         |SELECT g, k, n FROM cnt JOIN tot USING (g)
         |WHERE n >= (nr * 2 + 99) // 100
-        |ORDER BY g, n DESC, k""".stripMargin,
+        |ORDER BY g, n DESC, k""".stripMargin)),
 
-    "q_asof" ->
-      """WITH ev AS (
+    // ---- as-of join (nearest prior state per truck — the kdb/DuckDB
+    // ASOF LEFT JOIN, an operator Spark lacks natively): union +
+    // carry-forward window, one shuffle, big-big safe ----
+    Query("q_asof", (s, d) => {
+      import graft.operators.IntervalJoin
+      val ev = events(s, d).select(col("event_id"),
+        concat(lit("t"), (col("user_id") % 20).cast("string"))
+          .as("truck_id"),
+        col("ts"))
+      val st = events(s, d).where(col("event_id") % 50 === 0)
+        .select(
+          concat(lit("t"), (col("user_id") % 20).cast("string"))
+            .as("truck_id"),
+          col("ts").as("sts"),
+          floor(col("value") * 100).cast("long").as("state_val"))
+      IntervalJoin.asofJoin(ev, st, "truck_id", "ts", "sts",
+          payload = Seq("state_val"))
+        .select("event_id", "truck_id", "state_val")
+        .orderBy("event_id")
+    },
+      Some("""WITH ev AS (
         |  SELECT event_id, 't' || CAST(user_id % 20 AS VARCHAR) AS truck_id,
         |    CAST(ts AS TIMESTAMP) AS ts
         |  FROM events
@@ -1284,10 +407,24 @@ object CoreQueries {
         |SELECT e.event_id, e.truck_id, s.state_val
         |FROM ev e ASOF LEFT JOIN st s
         |  ON e.truck_id = s.truck_id AND e.ts >= s.sts
-        |ORDER BY e.event_id""".stripMargin,
+        |ORDER BY e.event_id""".stripMargin)),
 
-    "q_cube" ->
-      """SELECT coalesce(event_type, '<all>') AS event_type,
+    // ---- OLAP cube: all grouping-set combinations of (event_type,
+    // user-parity) — completes the grouping-sets family next to q_rollup --
+    Query("q_cube", (s, d) => {
+      events(s, d)
+        .withColumn("parity",
+          when(col("user_id") % 2 === 0, "even").otherwise("odd"))
+        .cube("event_type", "parity")
+        .agg(count(lit(1)).as("n"),
+          (sum(round(col("value") * 100).cast("long")) / 100.0)
+            .as("sum_value"))
+        .select(coalesce(col("event_type"), lit("<all>")).as("event_type"),
+          coalesce(col("parity"), lit("<all>")).as("parity"),
+          col("n"), col("sum_value"))
+        .orderBy("event_type", "parity")
+    },
+      Some("""SELECT coalesce(event_type, '<all>') AS event_type,
         |  coalesce(parity, '<all>') AS parity,
         |  count(*) AS n,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0
@@ -1296,10 +433,20 @@ object CoreQueries {
         |        CASE WHEN user_id % 2 = 0 THEN 'even' ELSE 'odd' END AS parity
         |      FROM events)
         |GROUP BY CUBE (event_type, parity)
-        |ORDER BY event_type, parity""".stripMargin,
+        |ORDER BY event_type, parity""".stripMargin)),
 
-    "q_gap_fill" ->
-      """WITH b AS (
+    // ---- gap filling (inverse of A6 downsampling): per-user daily grid
+    // over each user's own extent, last observation carried forward into
+    // empty days; carried values are copied bits, never recomputed ----
+    Query("q_gap_fill", (s, d) => {
+      import graft.operators.Downsample
+      Downsample.gapFill(
+          events(s, d).select("user_id", "ts", "value", "event_id"),
+          "user_id", "ts", "value", stepUs = 86400000000L,
+          tieBreak = Seq("event_id"))
+        .orderBy("user_id", "bucket_start_us")
+    },
+      Some("""WITH b AS (
         |  SELECT user_id,
         |    CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) AS bucket,
         |    value,
@@ -1324,10 +471,25 @@ object CoreQueries {
         |  last_value(raw_value IGNORE NULLS) OVER (
         |    PARTITION BY user_id ORDER BY bucket) AS value,
         |  raw_value IS NULL AS is_filled
-        |FROM j ORDER BY user_id, bucket""".stripMargin,
+        |FROM j ORDER BY user_id, bucket""".stripMargin)),
 
-    "q_set_ops" ->
-      """WITH high AS (
+    // ---- set operations (EXCEPT / INTERSECT / UNION distinct) over
+    // user cohorts — §2.7 completed beyond the union-only coverage ----
+    Query("q_set_ops", (s, d) => {
+      val e = events(s, d)
+      val high = e.where(col("value") > 50).select("user_id").distinct()
+      val clickers = e.where(col("event_type") === "click")
+        .select("user_id").distinct()
+      high.intersect(clickers).agg(count(lit(1)).as("n"))
+        .select(lit("both").as("cohort"), col("n"))
+        .unionByName(high.except(clickers).agg(count(lit(1)).as("n"))
+          .select(lit("high_only").as("cohort"), col("n")))
+        .unionByName(high.union(clickers).distinct()
+          .agg(count(lit(1)).as("n"))
+          .select(lit("either").as("cohort"), col("n")))
+        .orderBy("cohort")
+    },
+      Some("""WITH high AS (
         |  SELECT DISTINCT user_id FROM events WHERE value > 50
         |), clickers AS (
         |  SELECT DISTINCT user_id FROM events WHERE event_type = 'click'
@@ -1340,10 +502,30 @@ object CoreQueries {
         |UNION ALL
         |SELECT 'high_only',
         |  (SELECT count(*) FROM (SELECT * FROM high EXCEPT SELECT * FROM clickers))
-        |ORDER BY cohort""".stripMargin,
+        |ORDER BY cohort""".stripMargin)),
 
-    "q_window_ranks" ->
-      """WITH totals AS (
+    // ---- ranking-function family over grouped totals: dense_rank,
+    // percent_rank, cume_dist, first/last_value with explicit frames —
+    // ratios of small exact ints, engine-identical ----
+    Query("q_window_ranks", (s, d) => {
+      val totals = events(s, d)
+        .groupBy(col("event_type"), (col("user_id") % 10).as("bucket"))
+        .agg(sum(round(col("value") * 100).cast("long")).as("cents"))
+      val w = Window.partitionBy("event_type")
+        .orderBy(col("cents").desc, col("bucket"))
+      val wAll = w.rowsBetween(Window.unboundedPreceding,
+        Window.unboundedFollowing)
+      totals.select(
+          col("event_type"), col("bucket"),
+          (col("cents").cast("double") / 100.0).as("total_value"),
+          dense_rank().over(w).as("drank"),
+          percent_rank().over(w).as("prank"),
+          cume_dist().over(w).as("cdist"),
+          first_value(col("bucket")).over(wAll).as("top_bucket"),
+          last_value(col("bucket")).over(wAll).as("bottom_bucket"))
+        .orderBy("event_type", "bucket")
+    },
+      Some("""WITH totals AS (
         |  SELECT event_type, user_id % 10 AS bucket,
         |    sum(CAST(round(value * 100) AS BIGINT)) AS cents
         |  FROM events GROUP BY 1, 2
@@ -1359,10 +541,26 @@ object CoreQueries {
         |    AND UNBOUNDED FOLLOWING) AS BIGINT) AS bottom_bucket
         |FROM totals
         |WINDOW w AS (PARTITION BY event_type ORDER BY cents DESC, bucket)
-        |ORDER BY event_type, bucket""".stripMargin,
+        |ORDER BY event_type, bucket""".stripMargin)),
 
-    "q_unpivot" ->
-      """WITH wide AS (
+    // ---- unpivot/melt (Dataset.unpivot — the inverse of q_pivot):
+    // wide per-bucket type counts back to long (bucket, event_type, n)
+    // rows ----
+    Query("q_unpivot", (s, d) => {
+      val types = Seq("click", "error", "purchase", "signup", "view")
+      val wide = events(s, d)
+        .withColumn("bucket", (col("user_id") % 10).cast("long"))
+        .groupBy("bucket")
+        .pivot("event_type", types)
+        .agg(count(lit(1)))
+        .na.fill(0L)
+      wide.unpivot(
+          Array(col("bucket")),
+          types.map(col).toArray,
+          "event_type", "n")
+        .orderBy("bucket", "event_type")
+    },
+      Some("""WITH wide AS (
         |  SELECT CAST(user_id % 10 AS BIGINT) AS bucket,
         |    count(*) FILTER (event_type = 'click') AS click,
         |    count(*) FILTER (event_type = 'error') AS error,
@@ -1373,19 +571,48 @@ object CoreQueries {
         |)
         |SELECT bucket, event_type, n FROM wide
         |UNPIVOT (n FOR event_type IN (click, error, purchase, signup, view))
-        |ORDER BY bucket, event_type""".stripMargin,
+        |ORDER BY bucket, event_type""".stripMargin)),
 
-    "q_pivot" ->
-      """SELECT CAST(user_id % 10 AS BIGINT) AS bucket,
+    // ---- true dynamic pivot (RelationalGroupedDataset.pivot with
+    // pinned value list — pinning keeps the schema deterministic AND
+    // avoids the extra distinct-values job): per-user-bucket counts by
+    // event type as columns ----
+    Query("q_pivot", (s, d) => {
+      events(s, d)
+        .withColumn("bucket", (col("user_id") % 10).cast("long"))
+        .groupBy("bucket")
+        .pivot("event_type",
+          Seq("click", "error", "purchase", "signup", "view"))
+        .agg(count(lit(1)))
+        .na.fill(0L)
+        .orderBy("bucket")
+    },
+      Some("""SELECT CAST(user_id % 10 AS BIGINT) AS bucket,
         |  count(*) FILTER (event_type = 'click') AS click,
         |  count(*) FILTER (event_type = 'error') AS error,
         |  count(*) FILTER (event_type = 'purchase') AS purchase,
         |  count(*) FILTER (event_type = 'signup') AS signup,
         |  count(*) FILTER (event_type = 'view') AS view
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    "q_null_semantics" ->
-      """WITH e AS (
+    // ---- null semantics: null-safe equality (<=> / IS NOT DISTINCT
+    // FROM) join + NULLS LAST ordering — the semantics corner every
+    // engine must agree on exactly ----
+    Query("q_null_semantics", (s, d) => {
+      val e = events(s, d).select(col("event_id"),
+        // value > 98 → null stripe, else a small key with nulls on %7
+        when(col("value") > 98, lit(null).cast("long"))
+          .otherwise((col("user_id") % 7).cast("long")).as("k"))
+      val dim = s.range(7).select(col("id").as("k"),
+          concat(lit("grp-"), col("id").cast("string")).as("grp"))
+        .unionByName(s.range(1).select(lit(null).cast("long").as("k"),
+          lit("grp-null").as("grp")))
+      e.join(dim, e("k") <=> dim("k"))
+        .groupBy("grp")
+        .agg(count(lit(1)).as("n"))
+        .orderBy("grp")
+    },
+      Some("""WITH e AS (
         |  SELECT event_id,
         |    CASE WHEN value > 98 THEN NULL
         |         ELSE CAST(user_id % 7 AS BIGINT) END AS k
@@ -1397,358 +624,50 @@ object CoreQueries {
         |)
         |SELECT grp, count(*) AS n
         |FROM e JOIN dim ON e.k IS NOT DISTINCT FROM dim.k
-        |GROUP BY grp ORDER BY grp""".stripMargin,
+        |GROUP BY grp ORDER BY grp""".stripMargin)),
 
-    "q_tpch_q3" ->
-      """SELECT l_orderkey,
-        |  epoch_us(CAST(o_orderdate AS TIMESTAMP)) AS o_orderdate_us,
-        |  CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100)
-        |    AS BIGINT)) AS DOUBLE) / 100.0 AS revenue
-        |FROM customer, orders, lineitem
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND c_custkey = o_custkey
-        |  AND l_orderkey = o_orderkey
-        |  AND o_orderdate < TIMESTAMP '1996-06-30'
-        |  AND l_shipdate > TIMESTAMP '1996-06-30'
-        |GROUP BY l_orderkey, o_orderdate
-        |ORDER BY revenue DESC, l_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q_tpch_q5" ->
-      """SELECT n_name,
-        |  CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100)
-        |    AS BIGINT)) AS DOUBLE) / 100.0 AS revenue
-        |FROM customer, orders, lineitem, supplier, nation, region
-        |WHERE c_custkey = o_custkey
-        |  AND l_orderkey = o_orderkey
-        |  AND l_suppkey = s_suppkey
-        |  AND c_nationkey = s_nationkey
-        |  AND s_nationkey = n_nationkey
-        |  AND n_regionkey = r_regionkey
-        |  AND r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n_name
-        |ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "q_tpch_q6" ->
-      """SELECT CAST(sum(CAST(floor(l_extendedprice * l_discount * 100)
-        |    AS BIGINT)) AS DOUBLE) / 100.0 AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07
-        |  AND l_quantity < 24""".stripMargin,
-
-    "q_tpch_q14" ->
-      """SELECT 100.0 * CAST(sum(CASE WHEN p_type = 'PROMO'
-        |    THEN CAST(floor(l_extendedprice * (1.0 - l_discount) * 100)
-        |      AS BIGINT) ELSE 0 END) AS DOUBLE) /
-        |  CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100)
-        |    AS BIGINT)) AS DOUBLE) AS promo_revenue
-        |FROM lineitem, part
-        |WHERE l_partkey = p_partkey
-        |  AND l_shipdate >= TIMESTAMP '1996-03-01'
-        |  AND l_shipdate < TIMESTAMP '1996-04-01'""".stripMargin,
-
-    "q_tpch_q10" ->
-      """SELECT c_custkey, c_name,
-        |  CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100)
-        |    AS BIGINT)) AS DOUBLE) / 100.0 AS revenue,
-        |  c_acctbal, n_name
-        |FROM customer, orders, lineitem, nation
-        |WHERE c_custkey = o_custkey
-        |  AND l_orderkey = o_orderkey
-        |  AND c_nationkey = n_nationkey
-        |  AND l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-
-    "q_tpch_q18" ->
-      """WITH big AS (
-        |  SELECT l_orderkey,
-        |    CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT)
-        |      AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING total_qty > 80
-        |)
-        |SELECT c_custkey, c_name, l_orderkey, total_qty
-        |FROM big, orders, customer
-        |WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey
-        |ORDER BY total_qty DESC, l_orderkey
-        |LIMIT 50""".stripMargin,
-
-    "q_tpch_q19" ->
-      """SELECT CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount)
-        |    * 100) AS BIGINT)) AS DOUBLE) / 100.0 AS revenue
-        |FROM lineitem, part
-        |WHERE l_partkey = p_partkey AND (
-        |  (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-        |    AND l_quantity BETWEEN 1 AND 11) OR
-        |  (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-        |    AND l_quantity BETWEEN 10 AND 20) OR
-        |  (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 15
-        |    AND l_quantity BETWEEN 20 AND 30))""".stripMargin,
-
-    // "late" adapted as shipped > order date + 60 days (no
-    // receipt/commit dates in this schema)
-    "q_tpch_q21" ->
-      """WITH l1 AS (
-        |  SELECT l_orderkey, l_suppkey
-        |  FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-        |  WHERE o_orderstatus = 'F'
-        |    AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-        |)
-        |SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM l1 JOIN supplier ON s_suppkey = l1.l_suppkey
-        |JOIN nation ON n_nationkey = s_nationkey
-        |WHERE n_name IN ('NATION_1', 'NATION_5', 'NATION_9', 'NATION_13',
-        |    'NATION_21')
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |    WHERE l2.l_orderkey = l1.l_orderkey
-        |      AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM l1 l3
-        |    WHERE l3.l_orderkey = l1.l_orderkey
-        |      AND l3.l_suppkey <> l1.l_suppkey)
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 20""".stripMargin,
-
-    // threshold via integer cross-multiply (bal·n > Σbal), cents exact
-    "q_tpch_q22" ->
-      """WITH cust AS (
-        |  SELECT c_custkey, c_nationkey,
-        |    CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS bal_c
-        |  FROM customer
-        |  WHERE c_nationkey IN (0, 3, 7, 12, 17, 21, 24)
-        |), pos AS (
-        |  SELECT CAST(sum(bal_c) AS BIGINT) AS sum_c,
-        |    CAST(count(*) AS BIGINT) AS n_pos
-        |  FROM cust WHERE bal_c > 0
-        |)
-        |SELECT c_nationkey AS cntrycode,
-        |  CAST(count(*) AS BIGINT) AS numcust,
-        |  CAST(sum(bal_c) AS DOUBLE) / 100.0 AS totacctbal
-        |FROM cust, pos
-        |WHERE bal_c * n_pos > sum_c
-        |  AND NOT EXISTS (SELECT 1 FROM orders
-        |    WHERE o_custkey = c_custkey
-        |      AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY c_nationkey
-        |ORDER BY cntrycode""".stripMargin,
-
-    // offers synthesized from shipping history; per-part min via window
-    "q_tpch_q2" ->
-      """WITH offers AS (
-        |  SELECT l_partkey, l_suppkey,
-        |    CAST(min(floor(l_extendedprice * 100 / l_quantity))
-        |      AS BIGINT) AS cost_c
-        |  FROM lineitem GROUP BY l_partkey, l_suppkey
-        |), regional AS (
-        |  SELECT s_acctbal, s_name, n_name, p_partkey, p_name, cost_c,
-        |    min(cost_c) OVER (PARTITION BY p_partkey) AS min_c
-        |  FROM offers, supplier, nation, region, part
-        |  WHERE l_suppkey = s_suppkey
-        |    AND s_nationkey = n_nationkey
-        |    AND n_regionkey = r_regionkey
-        |    AND r_name = 'EUROPE'
-        |    AND l_partkey = p_partkey
-        |    AND p_size = 10 AND p_type = 'LARGE'
-        |)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, p_name,
-        |  CAST(cost_c AS DOUBLE) / 100.0 AS supply_cost
-        |FROM regional WHERE cost_c = min_c
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 20""".stripMargin,
-
-    "q_tpch_q9" ->
-      """SELECT n_name AS nation,
-        |  CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        |  CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100)
-        |    AS BIGINT)) AS DOUBLE) / 100.0 AS sum_profit
-        |FROM lineitem, part, supplier, nation, orders
-        |WHERE l_partkey = p_partkey AND p_name LIKE '%red%'
-        |  AND l_suppkey = s_suppkey
-        |  AND s_nationkey = n_nationkey
-        |  AND l_orderkey = o_orderkey
-        |GROUP BY n_name, year(o_orderdate)
-        |ORDER BY nation, o_year DESC""".stripMargin,
-
-    "q_tpch_q11" ->
-      """WITH vals AS (
-        |  SELECT l_partkey,
-        |    CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount)
-        |      * 100) AS BIGINT)) AS BIGINT) AS value_c
-        |  FROM lineitem, supplier, nation
-        |  WHERE l_suppkey = s_suppkey
-        |    AND s_nationkey = n_nationkey
-        |    AND n_name = 'NATION_7'
-        |  GROUP BY l_partkey
-        |), tot AS (SELECT CAST(sum(value_c) AS BIGINT) AS tot_c,
-        |  CAST(count(*) AS BIGINT) AS n FROM vals)
-        |SELECT l_partkey AS p_partkey,
-        |  CAST(value_c AS DOUBLE) / 100.0 AS value
-        |FROM vals, tot WHERE value_c * n > tot_c * 2
-        |ORDER BY value DESC, p_partkey""".stripMargin,
-
-    "q_tpch_q16" ->
-      """SELECT p_brand, p_type, p_size,
-        |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem), part
-        |WHERE l_partkey = p_partkey
-        |  AND p_brand <> 'Brand#9'
-        |  AND p_type NOT LIKE 'MEDIUM%'
-        |  AND p_size IN (3, 9, 14, 19, 23, 36, 45, 49)
-        |  AND l_suppkey NOT IN
-        |    (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_type, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-
-    "q_tpch_q20" ->
-      """WITH shipped AS (
-        |  SELECT l_partkey, l_suppkey,
-        |    CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |    AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  GROUP BY l_partkey, l_suppkey
-        |), totals AS (
-        |  SELECT l_partkey, CAST(sum(qty) AS BIGINT) AS tot_qty
-        |  FROM shipped GROUP BY l_partkey
-        |)
-        |SELECT s_suppkey, s_name, s_acctbal
-        |FROM supplier, nation
-        |WHERE s_nationkey = n_nationkey AND n_name = 'NATION_3'
-        |  AND s_suppkey IN (
-        |    SELECT sh.l_suppkey FROM shipped sh, totals t, part
-        |    WHERE sh.l_partkey = t.l_partkey
-        |      AND sh.l_partkey = p_partkey AND p_name LIKE 'small%'
-        |      AND sh.qty * 2 > t.tot_qty)
-        |ORDER BY s_name""".stripMargin,
-
-    "q_tpch_q4" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-07-01'
-        |  AND o_orderdate < TIMESTAMP '1996-10-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |    WHERE l_orderkey = o_orderkey
-        |      AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "q_tpch_q7" ->
-      """SELECT supp_nation, cust_nation, l_year,
-        |  CAST(sum(rev_c) AS DOUBLE) / 100.0 AS revenue
-        |FROM (
-        |  SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |    CAST(year(l_shipdate) AS INT) AS l_year,
-        |    CAST(floor(l_extendedprice * (1.0 - l_discount) * 100)
-        |      AS BIGINT) AS rev_c
-        |  FROM lineitem
-        |  JOIN orders ON o_orderkey = l_orderkey
-        |  JOIN supplier ON s_suppkey = l_suppkey
-        |  JOIN customer ON c_custkey = o_custkey
-        |  JOIN nation n1 ON n1.n_nationkey = s_nationkey
-        |  JOIN nation n2 ON n2.n_nationkey = c_nationkey
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1998-01-01'
-        |    AND ((n1.n_name = 'NATION_3' AND n2.n_name = 'NATION_7')
-        |      OR (n1.n_name = 'NATION_7' AND n2.n_name = 'NATION_3'))
-        |)
-        |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-
-    "q_tpch_q8" ->
-      """SELECT o_year,
-        |  round(CAST(sum(CASE WHEN s_nationkey = 9 THEN vol_c ELSE 0 END)
-        |      AS DOUBLE) / CAST(sum(vol_c) AS DOUBLE), 6) AS mkt_share
-        |FROM (
-        |  SELECT CAST(year(o_orderdate) AS INT) AS o_year, s_nationkey,
-        |    CAST(floor(l_extendedprice * (1.0 - l_discount) * 100)
-        |      AS BIGINT) AS vol_c
-        |  FROM lineitem
-        |  JOIN part ON p_partkey = l_partkey AND p_type = 'PROMO'
-        |  JOIN orders ON o_orderkey = l_orderkey
-        |  JOIN customer ON c_custkey = o_custkey
-        |  JOIN nation nc ON nc.n_nationkey = c_nationkey
-        |  JOIN region ON r_regionkey = nc.n_regionkey AND r_name = 'ASIA'
-        |  JOIN supplier ON s_suppkey = l_suppkey
-        |  WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-        |    AND o_orderdate < TIMESTAMP '1998-01-01'
-        |)
-        |GROUP BY o_year
-        |ORDER BY o_year""".stripMargin,
-
-    "q_tpch_q12" ->
-      """SELECT l_returnflag,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q_tpch_q13" ->
-      """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-        |FROM (
-        |  SELECT c_custkey, CAST(count(o_custkey) AS BIGINT) AS c_count
-        |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |    AND o_orderpriority <> '4-NOT SPECIFIED'
-        |  GROUP BY c_custkey
-        |)
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q_tpch_q15" ->
-      """WITH revenue AS (
-        |  SELECT l_suppkey AS supplier_no,
-        |    CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount) * 100)
-        |      AS BIGINT)) AS BIGINT) AS rev_c
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY l_suppkey
-        |)
-        |SELECT s_suppkey, s_name, CAST(rev_c AS DOUBLE) / 100.0
-        |  AS total_revenue
-        |FROM revenue JOIN supplier ON s_suppkey = supplier_no
-        |WHERE rev_c = (SELECT max(rev_c) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q_tpch_q17" ->
-      """WITH li AS (
-        |  SELECT l_partkey, CAST(l_quantity AS BIGINT) AS qty,
-        |    CAST(floor(l_extendedprice * 100) AS BIGINT) AS price_c
-        |  FROM lineitem JOIN part ON p_partkey = l_partkey
-        |  WHERE p_brand = 'Brand#23'
-        |), per_part AS (
-        |  SELECT l_partkey, CAST(sum(qty) AS BIGINT) AS sum_q,
-        |    CAST(count(*) AS BIGINT) AS n_q
-        |  FROM li GROUP BY l_partkey
-        |)
-        |SELECT CAST(sum(price_c) AS DOUBLE) / 100.0 / 7.0 AS avg_yearly
-        |FROM li JOIN per_part USING (l_partkey)
-        |WHERE qty * 5 * n_q < sum_q""".stripMargin,
-
-    "q_range_window" ->
-      """SELECT event_id, user_id,
+    // ---- time-RANGE window: trailing 1-hour per-user mean — the
+    // interval-frame capability (RANGE BETWEEN x PRECEDING) that row
+    // frames can't express on irregular event times ----
+    Query("q_range_window", (s, d) => {
+      val w = Window.partitionBy("user_id")
+        .orderBy(unix_micros(col("ts")))
+        .rangeBetween(-3600000000L, 0)
+      events(s, d).select(
+          col("event_id"), col("user_id"),
+          (sum(round(col("value") * 100).cast("long")).over(w)
+            .cast("double") / 100.0 / count(lit(1)).over(w))
+            .as("trail_avg_1h"),
+          count(lit(1)).over(w).as("n_trail"))
+        .orderBy("event_id")
+    },
+      Some("""SELECT event_id, user_id,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER w AS DOUBLE)
         |    / 100.0 / count(*) OVER w AS trail_avg_1h,
         |  count(*) OVER w AS n_trail
         |FROM events
         |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
         |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
+        |ORDER BY event_id""".stripMargin)),
 
-    "q_grouping_sets" ->
-      """SELECT coalesce(event_type, '<all>') AS event_type,
+    // ---- arbitrary GROUPING SETS (the general form behind rollup/cube):
+    // by-type, by-day, and grand total in one pass — Spark 4's native
+    // Dataset.groupingSets ----
+    Query("q_grouping_sets", (s, d) => {
+      events(s, d)
+        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+        .groupingSets(
+          Seq(Seq(col("event_type")), Seq(col("day")), Seq()),
+          col("event_type"), col("day"))
+        .agg(count(lit(1)).as("n"),
+          (sum(round(col("value") * 100).cast("long")) / 100.0)
+            .as("sum_value"))
+        .select(coalesce(col("event_type"), lit("<all>")).as("event_type"),
+          coalesce(col("day"), lit("<all>")).as("day"),
+          col("n"), col("sum_value"))
+        .orderBy("event_type", "day")
+    },
+      Some("""SELECT coalesce(event_type, '<all>') AS event_type,
         |  coalesce(day, '<all>') AS day,
         |  count(*) AS n,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0
@@ -1757,28 +676,68 @@ object CoreQueries {
         |        strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d') AS day
         |      FROM events)
         |GROUP BY GROUPING SETS ((event_type), (day), ())
-        |ORDER BY event_type, day""".stripMargin,
+        |ORDER BY event_type, day""".stripMargin)),
 
-    "q_percentiles" ->
-      """SELECT event_type, count(*) AS n,
+    // ---- exact interpolated percentiles (percentile ≡ quantile_cont):
+    // computed over integer-quantized cents so both engines interpolate
+    // between identical exact integers (lower + (upper-lower)·frac on
+    // small ints is engine-identical; raw-double interpolation would
+    // expose internal op-order differences) ----
+    Query("q_percentiles", (s, d) => {
+      events(s, d)
+        .withColumn("cents", round(col("value") * 100).cast("long"))
+        .groupBy("event_type")
+        .agg(
+          count(lit(1)).as("n"),
+          percentile(col("cents"), lit(0.5)).as("_p50"),
+          percentile(col("cents"), lit(0.95)).as("_p95"))
+        .select(col("event_type"), col("n"),
+          (floor(col("_p50") * 1e4) / 1e6).as("p50"),
+          (floor(col("_p95") * 1e4) / 1e6).as("p95"))
+        .orderBy("event_type")
+    },
+      Some("""SELECT event_type, count(*) AS n,
         |  floor(quantile_cont(CAST(round(value * 100) AS BIGINT), 0.5)
         |    * 1e4) / 1e6 AS p50,
         |  floor(quantile_cont(CAST(round(value * 100) AS BIGINT), 0.95)
         |    * 1e4) / 1e6 AS p95
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-    "q_sliding_window" ->
-      """WITH cov AS (
+    // ---- sliding windows: window(ts, 2h, 1h) — each event lands in two
+    // overlapping buckets; oracle = join to the covering hour-starts ----
+    Query("q_sliding_window", (s, d) => {
+      events(s, d)
+        .groupBy(window(col("ts"), "2 hours", "1 hour").as("w"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .select(unix_micros(col("w.start")).as("win_start_us"),
+          col("event_type"), col("n"))
+        .orderBy("win_start_us", "event_type")
+    },
+      Some("""WITH cov AS (
         |  SELECT e.event_type,
         |    epoch_us(time_bucket(INTERVAL 1 HOUR, CAST(e.ts AS TIMESTAMP)))
         |      - k.k * 3600000000 AS win_start_us
         |  FROM events e CROSS JOIN (SELECT unnest(range(2)) AS k) k
         |)
         |SELECT win_start_us, event_type, count(*) AS n
-        |FROM cov GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM cov GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
-    "q_sessionize" ->
-      """WITH g AS (
+    // ---- session windows: Spark's session_window vs the classic
+    // gaps-and-islands sessionization (new session when gap >= 30 min) —
+    // the streaming-native generalization of the reference's island logic.
+    Query("q_sessionize", (s, d) => {
+      events(s, d)
+        .groupBy(col("user_id"),
+          session_window(col("ts"), "30 minutes").as("w"))
+        .agg(count(lit(1)).as("n_events"),
+          unix_micros(min("ts")).as("first_us"),
+          unix_micros(max("ts")).as("last_us"))
+        .select(col("user_id"), col("first_us"), col("last_us"),
+          col("n_events"))
+        .orderBy("user_id", "first_us")
+    },
+      Some("""WITH g AS (
         |  SELECT user_id, ts,
         |    CASE WHEN epoch_us(CAST(ts AS TIMESTAMP)) -
         |      lag(epoch_us(CAST(ts AS TIMESTAMP)))
@@ -1796,65 +755,142 @@ object CoreQueries {
         |  epoch_us(CAST(max(ts) AS TIMESTAMP)) AS last_us,
         |  count(*) AS n_events
         |FROM s GROUP BY user_id, session_id
-        |ORDER BY user_id, first_us""".stripMargin,
+        |ORDER BY user_id, first_us""".stripMargin)),
 
-    "q_stats_global" ->
-      """SELECT count(*) AS n_rows,
+    // ---- A1: global stats aggregation (01_ingest_raw_telemetry.py:318-327) ----
+    Query("q_stats_global", (s, d) => {
+      events(s, d).agg(
+        count(lit(1)).as("n_rows"),
+        countDistinct(col("user_id")).as("n_users"),
+        countDistinct(col("event_type")).as("n_types"),
+        unix_micros(min("ts")).as("min_ts_us"),
+        unix_micros(max("ts")).as("max_ts_us"),
+        round(sum("value"), 2).as("sum_value"))
+    },
+      Some("""SELECT count(*) AS n_rows,
         |  count(DISTINCT user_id) AS n_users,
         |  count(DISTINCT event_type) AS n_types,
         |  epoch_us(CAST(min(ts) AS TIMESTAMP)) AS min_ts_us,
         |  epoch_us(CAST(max(ts) AS TIMESTAMP)) AS max_ts_us,
         |  round(CAST(sum(value) AS DOUBLE), 2) AS sum_value
-        |FROM events""".stripMargin,
+        |FROM events""".stripMargin)),
 
-    "q_cond_pivot" ->
-      """SELECT event_type, count(*) AS n,
+    // ---- A4: conditional-count pivot by group (EDA notebook cell 8) ----
+    Query("q_cond_pivot", (s, d) => {
+      events(s, d)
+        .groupBy("event_type")
+        .agg(
+          count(lit(1)).as("n"),
+          count(when(col("user_id") % 2 === 0, 1)).as("n_even_users"),
+          count(when(col("value") > 50, 1)).as("n_high"),
+          (sum(when(col("value") > 50, round(col("value") * 100).cast("long")))
+            / lit(100.0) / count(when(col("value") > 50, 1))).as("avg_high"))
+        .orderBy("event_type")
+    },
+      Some("""SELECT event_type, count(*) AS n,
         |  count(CASE WHEN user_id % 2 = 0 THEN 1 END) AS n_even_users,
         |  count(CASE WHEN value > 50 THEN 1 END) AS n_high,
         |  CAST(sum(CASE WHEN value > 50 THEN CAST(round(value * 100) AS BIGINT) END)
         |    AS DOUBLE) / 100.0 / count(CASE WHEN value > 50 THEN 1 END) AS avg_high
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-    "q_scalar_string" ->
-      """SELECT c_custkey,
+    // ---- §2.8 string scalar functions + P6 LIKE predicate ----
+    Query("q_scalar_string", (s, d) => {
+      customer(s, d)
+        .where(col("c_mktsegment").like("%BUILD%") || col("c_mktsegment").like("%AUTO%"))
+        .select(
+          col("c_custkey"),
+          lower(trim(col("c_name"))).as("name_lc"),
+          concat(col("c_mktsegment"), lit("_"), col("c_nationkey").cast("string")).as("seg_nation"),
+          substring(col("c_name"), 1, 8).as("name_prefix"),
+          length(col("c_name")).cast("long").as("name_len"))
+        .orderBy("c_custkey")
+    },
+      Some("""SELECT c_custkey,
         |  lower(trim(c_name)) AS name_lc,
         |  c_mktsegment || '_' || CAST(c_nationkey AS VARCHAR) AS seg_nation,
         |  substring(c_name, 1, 8) AS name_prefix,
         |  CAST(length(c_name) AS BIGINT) AS name_len
         |FROM customer
         |WHERE c_mktsegment LIKE '%BUILD%' OR c_mktsegment LIKE '%AUTO%'
-        |ORDER BY c_custkey""".stripMargin,
+        |ORDER BY c_custkey""".stripMargin)),
 
-    "q_hash_id" ->
-      """SELECT event_id,
+    // ---- §2.8 hash identity: sha2(key || '|' || ts_text) — the silver
+    // row id (02_raw_telemetry_transform.sql:39-47 semantics).
+    Query("q_hash_id", (s, d) => {
+      events(s, d)
+        .select(col("event_id"),
+          sha2(concat(col("user_id").cast("string"), lit("|"),
+            date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS")), 256).as("row_hash"))
+        .orderBy("event_id")
+    },
+      Some("""SELECT event_id,
         |  sha256(CAST(user_id AS VARCHAR) || '|' ||
         |    strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d %H:%M:%S.%f')) AS row_hash
-        |FROM events ORDER BY event_id""".stripMargin,
+        |FROM events ORDER BY event_id""".stripMargin)),
 
-    "q_json_extract" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
+    // ---- §2.8 JSON extraction (extras JSONB semantics) ----
+    Query("q_json_extract", (s, d) => {
+      events(s, d)
+        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
+        .groupBy("k")
+        .agg(count(lit(1)).as("n"),
+          // integer-cents average: value has exactly 2 decimals, so the
+          // bigint sum is order-independent and the single division gives
+          // bit-identical doubles in Spark and DuckDB (a rounded float avg
+          // straddles decimal boundaries differently per engine)
+          (sum(round(col("value") * 100).cast("long")) / lit(100.0) /
+            count(lit(1))).as("avg_value"))
+        .orderBy("k")
+    },
+      Some("""SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
         |  count(*) AS n,
         |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0
         |    / count(*) AS avg_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)),
 
-    "q_topk" ->
-      """SELECT user_id, count(*) AS n_events,
+    // ---- O4 top-k with total order (count desc, key tiebreak) ----
+    Query("q_topk", (s, d) => {
+      events(s, d)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_value"))
+        .orderBy(col("n_events").desc, col("user_id"))
+        .limit(10)
+    },
+      Some("""SELECT user_id, count(*) AS n_events,
         |  round(CAST(sum(value) AS DOUBLE), 2) AS sum_value
         |FROM events GROUP BY user_id
-        |ORDER BY n_events DESC, user_id LIMIT 10""".stripMargin,
+        |ORDER BY n_events DESC, user_id LIMIT 10""".stripMargin)),
 
-    "q_distinct_union" ->
-      """SELECT DISTINCT event_type FROM (
+    // ---- U1/U3: union + distinct ----
+    Query("q_distinct_union", (s, d) => {
+      val e = events(s, d)
+      e.where(col("value") > 90).select(col("event_type"))
+        .union(e.where(col("user_id") < 5).select(col("event_type")))
+        .distinct()
+        .orderBy("event_type")
+    },
+      Some("""SELECT DISTINCT event_type FROM (
         |  SELECT event_type FROM events WHERE value > 90
         |  UNION ALL
         |  SELECT event_type FROM events WHERE user_id < 5
-        |) ORDER BY event_type""".stripMargin,
+        |) ORDER BY event_type""".stripMargin)),
 
-    "q_clamp_flags" ->
-      """SELECT event_id,
+    // ---- P7/P8: threshold flags + clamping/sentinel cleaning
+    // (database_pipeline.py:299-327: speeds <0→0, >50→50; -99→NULL) ----
+    Query("q_clamp_flags", (s, d) => {
+      events(s, d)
+        .select(
+          col("event_id"),
+          when(col("value") < 10, 0.0).when(col("value") > 90, 90.0)
+            .otherwise(col("value")).as("value_clamped"),
+          (col("value") < 0.5).as("is_stationary"),
+          when(col("value") === 6.55, null).otherwise(col("value")).as("value_desentineled"))
+        .orderBy("event_id")
+    },
+      Some("""SELECT event_id,
         |  CASE WHEN value < 10 THEN 0.0 WHEN value > 90 THEN 90.0 ELSE value END AS value_clamped,
         |  value < 0.5 AS is_stationary,
         |  CASE WHEN value = 6.55 THEN NULL ELSE value END AS value_desentineled
-        |FROM events ORDER BY event_id""".stripMargin)
+        |FROM events ORDER BY event_id""".stripMargin)))
 }

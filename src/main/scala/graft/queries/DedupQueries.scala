@@ -1,0 +1,1569 @@
+package graft.queries
+
+import org.apache.spark.sql.functions._
+import graft.operators.Caches.Persisted
+import graft.Tables._
+import graft.functions.TextFunctions
+import graft.operators.{Dedup, Graph, Winnow}
+import DocFixtures._
+
+/** Document dedup and the persisted dedup index: exact, n-gram, MinHash,
+  * SimHash and bag-of-words near-dup pairs, the near-dup graph (clusters,
+  * PageRank, triangles, label propagation, canonical pick), substring and
+  * line dedup, decontamination, sketches, and the DedupIndex ingest
+  * cycles. Fixtures shared with other families: [[DocFixtures]].
+  */
+object DedupQueries {
+
+  /** All-pairs word-trigram Jaccard >= 0.5 pairs over `docs` — the
+    * truth twin of the minhash pair generator (the q_minhash_pairs
+    * pinned property), shared by the graph-oracle queries. Emits
+    * `pairs`. */
+  private val trigramPairsCte: String =
+    """, toks AS (
+      |  SELECT doc_id,
+      |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
+      |      ' ') AS t
+      |  FROM docs
+      |), g AS (
+      |  SELECT doc_id,
+      |    list_distinct(list_transform(range(1, len(t) - 1),
+      |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS grams
+      |  FROM toks WHERE len(t) >= 3
+      |), pairs AS (
+      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+      |  FROM g a JOIN g b ON a.doc_id < b.doc_id
+      |  WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
+      |    (len(a.grams) + len(b.grams)
+      |      - len(list_intersect(a.grams, b.grams))) >= 0.5
+      |)""".stripMargin
+
+  /** [[graft.operators.Graph.pageRankNanos]]'s integer recurrence,
+    * unrolled: deg/nn/it0..it5 over the symmetric edge CTE `edges`
+    * (src, dst). Every op is integer division/multiplication, so the
+    * replay is exact on both engines. */
+  private def pageRankCtes(edges: String): String =
+    s""", deg AS (
+       |  SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+       |  FROM $edges GROUP BY src
+       |), nn AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM deg
+       |), it0 AS (
+       |  SELECT node, deg,
+       |    CAST(1000000000 // (SELECT n_nodes FROM nn) AS BIGINT) AS pr
+       |  FROM deg
+       |)""".stripMargin +
+    (1 to 5).map { k =>
+      s""", it$k AS (
+         |  SELECT d.node, d.deg,
+         |    CAST(150000000 // (SELECT n_nodes FROM nn)
+         |      + (17 * coalesce(m.s, 0)) // 20 AS BIGINT) AS pr
+         |  FROM deg d LEFT JOIN (
+         |    SELECT e.dst AS node,
+         |      CAST(sum(p.pr // p.deg) AS BIGINT) AS s
+         |    FROM $edges e JOIN it${k - 1} p ON e.src = p.node
+         |    GROUP BY e.dst) m ON d.node = m.node
+         |)""".stripMargin
+    }.mkString
+
+  /** [[graft.operators.Graph.labelPropagation]]'s deterministic sync
+    * update, unrolled: lp0 = identity labels over the symmetric edge
+    * CTE `e0`; each round every node takes the most frequent neighbor
+    * label, ties to the smallest (min over the max-count labels —
+    * exactly the operator's max(struct(c, -lbl)) argmax). */
+  private def lpCtes(iters: Int): String =
+    """, lp0 AS MATERIALIZED (
+      |  SELECT DISTINCT src AS node, src AS lbl FROM e0
+      |)""".stripMargin +
+    (1 to iters).map { k =>
+      s""", lp$k AS MATERIALIZED (
+         |  SELECT src AS node, min(lbl) AS lbl FROM (
+         |    SELECT e.src, l.lbl, count(*) AS c,
+         |      max(count(*)) OVER (PARTITION BY e.src) AS mx
+         |    FROM e0 e JOIN lp${k - 1} l ON e.dst = l.node
+         |    GROUP BY e.src, l.lbl)
+         |  WHERE c = mx GROUP BY src
+         |)""".stripMargin
+    }.mkString
+
+  /** All-pairs SimHash truth in SQL: recomputes each doc's 64-bit
+    * signature from the same distinct 5-char shingles over the portable
+    * md5 hash (DuckDB `md5_number_upper` == Dedup.hash64Md5 bits), then
+    * takes every pair with Hamming <= 7. Spark must emit exactly this set
+    * — which also proves the chunk blocking dropped nothing.
+    *
+    * Known limit: shingle offsets count UTF-16 units in the JVM and
+    * codepoints in DuckDB, so the twins diverge on astral-plane (non-BMP)
+    * characters — fine on this corpus (ASCII), flagged for real-world
+    * text (normalize or shingle on codepoints before relying on the SQL
+    * twin there). */
+  private val simhashOracle: String = {
+    val bitSums = (0 until 64).map(j =>
+      s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS c$j")
+      .mkString(",\n    ")
+    // two's complement assembly in plain BIGINT: bit 63 contributes the
+    // sign term, bits 0..62 their positive powers
+    val sigExpr = ((0 until 63).map(j =>
+      s"CASE WHEN c$j > 0 THEN (CAST(1 AS BIGINT) << $j) ELSE CAST(0 AS BIGINT) END") :+
+      "CASE WHEN c63 > 0 THEN (CAST(-9223372036854775807 AS BIGINT) - 1) ELSE CAST(0 AS BIGINT) END")
+      .mkString(" +\n    ")
+    docsWithDupsCte + s""", norm AS (
+  SELECT doc_id,
+    regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS t
+  FROM docs
+), sh AS (
+  SELECT doc_id,
+    unnest(list_distinct(list_transform(range(1, length(t) - 5 + 2),
+      i -> substr(t, i, 5)))) AS g
+  FROM norm WHERE length(t) >= 5
+), hs AS (
+  SELECT doc_id, md5_number_upper(g) AS h FROM sh
+), bits AS (
+  SELECT doc_id,
+    $bitSums
+  FROM hs GROUP BY doc_id
+), sigagg AS (
+  SELECT doc_id,
+    $sigExpr AS sig
+  FROM bits
+), sig AS (
+  -- docs with no shingles (text shorter than 5 after normalization) get
+  -- the empty-input signature 0, matching the Spark kernel
+  SELECT d.doc_id, coalesce(s.sig, 0) AS sig
+  FROM docs d LEFT JOIN sigagg s USING (doc_id)
+)
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+  CAST(bit_count(xor(a.sig, b.sig)) AS INTEGER) AS hamming
+FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+WHERE bit_count(xor(a.sig, b.sig)) <= 7
+ORDER BY id_a, id_b"""
+  }
+
+  val all: Seq[Query] = Seq(
+
+    // ---- exact dedup via fingerprint groupBy ----
+    Query("q_dedup_exact", (s, d) => {
+      Dedup.exactDupGroups(docsWithDups(s, d), "doc_id", "text")
+        .select(col("canonical_id"), col("n_dups"))
+        .orderBy("canonical_id")
+    },
+      Some((docsWithDupsCte +
+      """
+        |SELECT min(doc_id) AS canonical_id, count(*) AS n_dups
+        |FROM docs
+        |GROUP BY regexp_replace(lower(trim(text)), '\s+', ' ', 'g')
+        |HAVING count(*) > 1
+        |ORDER BY canonical_id""".stripMargin))),
+
+    // ---- n-gram Jaccard near-dup pairs (blocked by source).
+    // VERIFICATION-ONLY: the self-join is all-pairs within each source
+    // block — O(n²/blocks) — and exists as the exact-Jaccard truth twin
+    // for the minhash/simhash operators, which are the production near-dup
+    // paths at scale. Never run this shape on a full-size corpus; use
+    // Dedup.minhashDupPairs / simhashDupPairs instead. ----
+    Query("q_jaccard_pairs", (s, d) => {
+      val g = docsWithDups(s, d).select(
+        col("doc_id"), col("source"),
+        TextFunctions.shingles(col("text"), 5).as("grams"))
+      val a = g.select(col("doc_id").as("id_a"), col("source"),
+        col("grams").as("g_a"))
+      val b = g.select(col("doc_id").as("id_b"), col("source"),
+        col("grams").as("g_b"))
+      a.join(b, Seq("source"))
+        .where(col("id_a") < col("id_b"))
+        .withColumn("jaccard", Dedup.jaccard(col("g_a"), col("g_b")))
+        .where(col("jaccard") >= 0.5)
+        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+        .orderBy("id_a", "id_b")
+    },
+      Some((docsWithDupsCte +
+      """, g AS (
+        |  SELECT doc_id, source,
+        |    list_distinct(list_transform(
+        |      range(1, length(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) - 3),
+        |      i -> regexp_replace(lower(trim(text)), '\s+', ' ', 'g')[i:i+4]
+        |    )) AS grams
+        |  FROM docs
+        |  WHERE length(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) >= 5
+        |)
+        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
+        |    (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))), 6)
+        |    AS jaccard
+        |FROM g a JOIN g b ON a.source = b.source AND a.doc_id < b.doc_id
+        |WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
+        |  (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))) >= 0.5
+        |ORDER BY id_a, id_b""".stripMargin))),
+
+    // ---- MinHash-LSH near-dup pairs, oracle-checked against the ALL-PAIRS
+    // word-trigram Jaccard truth: the signature internals are
+    // hash-library-specific, but the OUTPUT contract (every pair above
+    // threshold, with its exact verified jaccard) is engine-independent.
+    // Banding recall is exact on the fixed verify corpus (measured: the
+    // 171 truth pairs == the 171 banded candidates that verify); at other
+    // scales recall < 1 is possible — measured 1685/1686 at sf0.1 (one
+    // j=0.69 pair missed, P(miss)≈0.13 at 8 bands × 4 rows) — the
+    // property is pinned to the gate's data, the probabilistic guarantee
+    // is covered in KernelSpec. ----
+    Query("q_minhash_pairs", (s, d) => {
+      Dedup.minhashDupPairs(docsWithDups(s, d), "doc_id", "text",
+          threshold = 0.5)
+        .select(col("id_a"), col("id_b"),
+          (floor(col("jaccard") * 1e6) / 1e6).as("jaccard"))
+        .orderBy("id_a", "id_b")
+    },
+      Some((docsWithDupsCte +
+      """, toks AS (
+        |  SELECT doc_id,
+        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
+        |      ' ') AS t
+        |  FROM docs
+        |), g AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(range(1, len(t) - 1),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS grams
+        |  FROM toks WHERE len(t) >= 3
+        |)
+        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |  floor(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
+        |    (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)))
+        |    * 1e6) / 1e6 AS jaccard
+        |FROM g a JOIN g b ON a.doc_id < b.doc_id
+        |WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
+        |  (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))) >= 0.5
+        |ORDER BY id_a, id_b""".stripMargin))),
+
+    // ---- near-dup CLUSTERS: transitive closure over the minhash pairs →
+    // canonical id per cluster (min id) — the production dedup capstone;
+    // oracle recomputes components with a recursive CTE over the same
+    // all-pairs trigram truth the pair gate is pinned to ----
+    Query("q_dedup_clusters", (s, d) => {
+      val docs = docsWithDups(s, d)
+      val pairs = Dedup.minhashDupPairs(docs, "doc_id", "text",
+        threshold = 0.5)
+      val comp = Dedup.connectedComponents(docs.select("doc_id"), pairs,
+        "doc_id")
+      // comp is eagerly checkpointed with flat lineage: the pair
+      // frame's checkpoint blocks are orphaned now — release them
+      // deterministically (SoakSpec's session contract)
+      graft.operators.Caches.releaseResult(pairs)
+      comp
+        .groupBy("component")
+        .agg(count(lit(1)).as("n_members"))
+        .where(col("n_members") > 1)
+        .select(col("component").as("canonical_id"), col("n_members"))
+        .orderBy("canonical_id")
+    },
+      Some((docsWithDupsCte
+      .replace("WITH docs AS (", "WITH RECURSIVE docs AS (") +
+      """, toks AS (
+        |  SELECT doc_id,
+        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
+        |      ' ') AS t
+        |  FROM docs
+        |), g AS (
+        |  SELECT doc_id,
+        |    list_distinct(list_transform(range(1, len(t) - 1),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS grams
+        |  FROM toks WHERE len(t) >= 3
+        |), pairs AS (
+        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM g a JOIN g b ON a.doc_id < b.doc_id
+        |  WHERE CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
+        |    (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams)))
+        |    >= 0.5
+        |), sym AS (
+        |  SELECT id_a AS src, id_b AS dst FROM pairs
+        |  UNION ALL
+        |  SELECT id_b AS src, id_a AS dst FROM pairs
+        |), reach(id, label) AS (
+        |  SELECT doc_id, doc_id FROM docs
+        |  UNION
+        |  SELECT s.dst, r.label FROM reach r JOIN sym s ON r.id = s.src
+        |), comp AS (
+        |  SELECT id, min(label) AS component FROM reach GROUP BY id
+        |)
+        |SELECT component AS canonical_id, count(*) AS n_members
+        |FROM comp GROUP BY component HAVING count(*) > 1
+        |ORDER BY canonical_id""".stripMargin))),
+
+    // ---- PageRank centrality over the near-dup graph: the
+    // "pick the authoritative copy" policy one rung above min(id)
+    // canonicalization (and the CommonCrawl-style host-authority
+    // primitive). Edges are the minhash near-dup pairs; the rank is
+    // [[Graph.pageRankNanos]]'s integer nano-probability recurrence, so
+    // the oracle can replay all five iterations exactly — it rebuilds
+    // the edge set from the ALL-PAIRS trigram Jaccard truth (the
+    // q_minhash_pairs pinned property: banded candidates == truth at
+    // the gate) and unrolls the recurrence in SQL. ----
+    Query("q_pagerank", (s, d) => {
+      // minhashDupPairs returns an eagerly-materialized (checkpointed)
+      // pair frame, so pageRankNanos' symmetric edge union — which
+      // reads it TWICE in its first job — scans the checkpoint instead
+      // of racing the bands+verify pipeline once per direction (the
+      // lazy-persist version measured ~2× pair-gen cost at sf0.1).
+      val pairs = Dedup.minhashDupPairs(docsWithDups(s, d), "doc_id",
+          "text", threshold = 0.5)
+        .select("id_a", "id_b")
+      val pr = Graph.pageRankNanos(pairs, iters = 5)
+      // pr is eagerly checkpointed flat — free the orphaned pair
+      // checkpoint now rather than at ContextCleaner GC time
+      graft.operators.Caches.releaseResult(pairs)
+      pr
+        .select(col("node").as("doc_id"), col("deg"), col("pr_nanos"))
+        .orderBy("doc_id")
+    },
+      // rebuilds the edge set from the all-pairs trigram truth (the
+      // q_minhash_pairs pinned property), then replays pageRankNanos'
+      // integer recurrence with all five iterations unrolled — every op
+      // is integer division/multiplication, so the replay is exact
+      Some((docsWithDupsCte + trigramPairsCte +
+      """, e0 AS (
+        |  SELECT id_a AS src, id_b AS dst FROM pairs
+        |  UNION ALL SELECT id_b, id_a FROM pairs
+        |)""".stripMargin +
+      pageRankCtes("e0") +
+      """
+        |SELECT node AS doc_id, deg, pr AS pr_nanos
+        |FROM it5 ORDER BY doc_id""".stripMargin))),
+
+    // ---- triangle counts + local clustering coefficient over the
+    // near-dup graph: near-clique clusters (shared template,
+    // clustering → 1) vs chained drift (low clustering) — the dedup-QA
+    // signal that tells the two apart before choosing a canonical-pick
+    // policy. Exact integers; the oracle rebuilds the edge set from
+    // the all-pairs trigram truth and replays the same a<b<c wedge
+    // closure ----
+    Query("q_triangles", (s, d) => {
+      val pairs = Dedup.minhashDupPairs(docsWithDups(s, d), "doc_id",
+          "text", threshold = 0.5)
+        .select("id_a", "id_b")
+      Graph.triangleStats(pairs)
+        .select(col("node").as("doc_id"), col("deg"), col("n_tri"),
+          col("clustering_ppm"))
+        .orderBy("doc_id")
+    },
+      // same truth-pair edges as q_pagerank; a<b<c wedge closure,
+      // per-node counts off the 3-way union, integer ppm clustering
+      Some((docsWithDupsCte + trigramPairsCte +
+      """, ce AS (
+        |  SELECT DISTINCT least(id_a, id_b) AS u,
+        |    greatest(id_a, id_b) AS v
+        |  FROM pairs WHERE id_a <> id_b
+        |), tri AS (
+        |  SELECT ab.u AS a, ab.v AS b, bc.v AS c
+        |  FROM ce ab
+        |  JOIN ce bc ON ab.v = bc.u
+        |  JOIN ce ac ON ab.u = ac.u AND bc.v = ac.v
+        |), tn AS (
+        |  SELECT node, count(*) AS n_tri FROM (
+        |    SELECT a AS node FROM tri
+        |    UNION ALL SELECT b FROM tri
+        |    UNION ALL SELECT c FROM tri)
+        |  GROUP BY 1
+        |), dg AS (
+        |  SELECT node, count(*) AS deg FROM (
+        |    SELECT u AS node FROM ce UNION ALL SELECT v FROM ce)
+        |  GROUP BY 1
+        |)
+        |SELECT dg.node AS doc_id, CAST(dg.deg AS BIGINT) AS deg,
+        |  CAST(coalesce(tn.n_tri, 0) AS BIGINT) AS n_tri,
+        |  CAST(CASE WHEN dg.deg >= 2 THEN
+        |    coalesce(tn.n_tri, 0) * 2 * 1000000 // (dg.deg * (dg.deg - 1))
+        |    ELSE 0 END AS BIGINT) AS clustering_ppm
+        |FROM dg LEFT JOIN tn USING (node)
+        |ORDER BY doc_id""".stripMargin))),
+
+    // ---- label-propagation communities over the near-dup graph:
+    // where CC answers "transitively linked at all", LPA answers
+    // "densely linked" — two template clusters joined by one bridge
+    // pair stay separate communities. Deterministic integer argmax,
+    // fixed 4 rounds; the oracle replays every round off the trigram
+    // truth edges ----
+    Query("q_label_prop", (s, d) => {
+      val pairs = Dedup.minhashDupPairs(docsWithDups(s, d), "doc_id",
+          "text", threshold = 0.5)
+        .select("id_a", "id_b")
+      val lp = Graph.labelPropagation(pairs, iters = 4)
+      // lp is eagerly checkpointed flat — free the orphaned pair
+      // checkpoint now (the q_pagerank discipline)
+      graft.operators.Caches.releaseResult(pairs)
+      lp.select(col("node").as("doc_id"), col("community"))
+        .orderBy("doc_id")
+    },
+      // same truth-pair edges; replays all four deterministic LPA rounds
+      // (most-frequent neighbor label, ties to min) via lpCtes
+      Some((docsWithDupsCte + trigramPairsCte +
+      """, e0 AS (
+        |  SELECT id_a AS src, id_b AS dst FROM pairs
+        |  UNION ALL SELECT id_b, id_a FROM pairs
+        |)""".stripMargin + lpCtes(4) + """
+        |SELECT node AS doc_id, CAST(lbl AS BIGINT) AS community
+        |FROM lp4 ORDER BY doc_id""".stripMargin))),
+
+    // ---- canonical-pick composition: connected components over the
+    // near-dup pairs + PageRank centrality, canonical = the
+    // highest-ranked member of each multi-doc cluster (ties → min id) —
+    // the policy upgrade over q_dedup_clusters' min(id). The pair set
+    // is checkpoint-materialized by minhashDupPairs: it feeds BOTH the
+    // CC loop and the PR iterations, and recomputing it would mean
+    // re-running the whole minhash bands+verify pipeline per consumer.
+    // Per-cluster argmax runs as a WindowGroupLimit (bounded state). ----
+    Query("q_dedup_canonical", (s, d) => {
+      import org.apache.spark.sql.expressions.Window
+      val docs = docsWithDups(s, d)
+      // minhashDupPairs is eagerly materialized (checkpointed), so the
+      // expensive bands+verify pipeline runs exactly once even though
+      // BOTH the CC loop and the PR iterations consume the pair frame;
+      // CC and PR each checkpoint their own result, so nothing here
+      // leaves storage-memory residue behind.
+      val pairs = Dedup.minhashDupPairs(docs, "doc_id", "text",
+          threshold = 0.5)
+        .select("id_a", "id_b")
+      // CC and PR are INDEPENDENT consumers of the (already
+      // materialized, flat-lineage) pair frame, and both are loops of
+      // small driver-sequential jobs — run them from two threads so one
+      // loop's scheduling gaps back-fill the other's (guide §2.6:
+      // overlap independent jobs; FIFO scheduling gives exactly the
+      // back-fill behavior). Deterministic: each loop's result is a
+      // pure function of the pair set, unaffected by co-scheduling.
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val compF = Future {
+        Dedup.connectedComponents(docs.select("doc_id"), pairs, "doc_id")
+      }
+      val prF = Future { Graph.pageRankNanos(pairs, iters = 5) }
+      // settle BOTH futures before unwrapping either (r17 advice): if
+      // one loop fails, propagating while the other still runs would
+      // let the caller's cleanup (releaseResult(pairs), Caches.clear)
+      // unpersist blocks under the orphaned jobs — a confusing
+      // secondary failure masking the real one
+      Await.ready(compF, Duration.Inf)
+      Await.ready(prF, Duration.Inf)
+      val comp = compF.value.get.get
+      val pr = prF.value.get.get
+      // comp and pr are BOTH eagerly checkpointed with flat lineage, so
+      // the pair frame's checkpoint blocks are no longer referenced by
+      // anything downstream — release them NOW instead of waiting for
+      // the ContextCleaner (SoakSpec caught exactly this residue)
+      graft.operators.Caches.releaseResult(pairs)
+      // every member of a >1 cluster has an edge, so the inner join
+      // keeps exactly the multi-doc clusters' members
+      comp.join(pr, comp("doc_id") === pr("node"))
+        .select(col("component"), col("doc_id"), col("pr_nanos"))
+        .withColumn("rk", row_number().over(Window.partitionBy("component")
+          .orderBy(col("pr_nanos").desc, col("doc_id"))))
+        .withColumn("n_members",
+          count(lit(1)).over(Window.partitionBy("component")))
+        .where(col("rk") === 1 && col("n_members") > 1)
+        .select(col("component"), col("n_members"),
+          col("doc_id").as("canonical_id"),
+          col("pr_nanos").as("canonical_pr_nanos"))
+        .orderBy("component")
+    },
+      // components from the same truth pairs (the q_dedup_clusters
+      // recursive CTE) + the unrolled PageRank replay + a per-component
+      // argmax — the full canonical-pick composition in one statement
+      Some((docsWithDupsCte
+      .replace("WITH docs AS (", "WITH RECURSIVE docs AS (") +
+      trigramPairsCte +
+      """, sym AS (
+        |  SELECT id_a AS src, id_b AS dst FROM pairs
+        |  UNION ALL SELECT id_b, id_a FROM pairs
+        |), reach(id, label) AS (
+        |  SELECT doc_id, doc_id FROM docs
+        |  UNION
+        |  SELECT s.dst, r.label FROM reach r JOIN sym s ON r.id = s.src
+        |), comp AS (
+        |  SELECT id, min(label) AS component FROM reach GROUP BY id
+        |)""".stripMargin +
+      pageRankCtes("sym") +
+      """, sel AS (
+        |  SELECT c.component, c.id, p.pr,
+        |    row_number() OVER (PARTITION BY c.component
+        |      ORDER BY p.pr DESC, c.id) AS rk,
+        |    count(*) OVER (PARTITION BY c.component) AS n_members
+        |  FROM comp c JOIN it5 p ON c.id = p.node
+        |)
+        |SELECT component, CAST(n_members AS BIGINT) AS n_members,
+        |  id AS canonical_id, pr AS canonical_pr_nanos
+        |FROM sel WHERE rk = 1 AND n_members > 1
+        |ORDER BY component""".stripMargin))),
+
+    // ---- SimHash near-dup pairs, oracle-checked end to end: the portable
+    // md5-derived shingle hash (bit-identical to DuckDB md5_number_upper)
+    // lets the oracle recompute every 64-bit signature in SQL and take
+    // ALL-PAIRS Hamming as truth — so the gate also proves the pigeonhole
+    // blocking is complete (radius 7 → eight 8-bit chunks). ----
+    Query("q_simhash_pairs", (s, d) => {
+      Dedup.simhashDupPairs(docsWithDups(s, d), "doc_id", "text",
+          maxHamming = 7, portableHash = true)
+        .orderBy("id_a", "id_b")
+    },
+      Some(simhashOracle)),
+
+    // ---- URL canonicalization (the CommonCrawl URL-dedup key): messy
+    // variants injected deterministically — uppercase scheme/host, www.,
+    // default vs explicit ports, unsorted params, utm_/gclid tracking
+    // decorations, fragments — then canonicalized and grouped; the
+    // group sizes PROVE the variants collapse (docs that differ only in
+    // decoration share one canonical key) ----
+    Query("q_url_canonical", (s, d) => {
+      val url = concat(
+        lit("HTTPS://WWW.site"), (col("doc_id") % 7).cast("string"),
+        lit(".example.com"),
+        when(col("doc_id") % 3 === 0, lit(":443"))
+          .when(col("doc_id") % 3 === 1, lit(":8080"))
+          .otherwise(lit("")),
+        lit("/p/"), (col("doc_id") % 50).cast("string"),
+        when(col("doc_id") % 2 === 0,
+          lit("?utm_source=feed&b=2&a=1&gclid=x"))
+          .when(col("doc_id") % 10 === 7, lit(""))
+          .otherwise(lit("?a=1&b=2")),
+        // %10=7: NO query but a '?' inside the fragment — the case the
+        // anchored query regex exists for (a bare \? would resurrect
+        // 'x=1' as a query param; r11 advice)
+        when(col("doc_id") % 5 === 0, lit("#frag"))
+          .when(col("doc_id") % 10 === 7, lit("#sec?x=1"))
+          .otherwise(lit("")))
+      docsPar(s, d).select(col("doc_id"), url.as("url"))
+        .select(TextFunctions.canonicalUrl(col("url")).as("canonical_url"))
+        .groupBy("canonical_url")
+        .agg(count(lit(1)).as("n"))
+        .orderBy("canonical_url")
+    },
+      // identical variant derivation + a full canonicalization replay:
+      // scheme/host lowering, www. strip, default-port drop, fragment
+      // strip, tracking-param filter, param sort
+      Some("""WITH u AS (
+        |  SELECT doc_id,
+        |    'HTTPS://WWW.site' || CAST(doc_id % 7 AS VARCHAR) ||
+        |    '.example.com' ||
+        |    CASE WHEN doc_id % 3 = 0 THEN ':443'
+        |         WHEN doc_id % 3 = 1 THEN ':8080' ELSE '' END ||
+        |    '/p/' || CAST(doc_id % 50 AS VARCHAR) ||
+        |    CASE WHEN doc_id % 2 = 0 THEN '?utm_source=feed&b=2&a=1&gclid=x'
+        |         WHEN doc_id % 10 = 7 THEN ''
+        |         ELSE '?a=1&b=2' END ||
+        |    CASE WHEN doc_id % 5 = 0 THEN '#frag'
+        |         WHEN doc_id % 10 = 7 THEN '#sec?x=1'
+        |         ELSE '' END AS url
+        |  FROM documents
+        |), parts AS (
+        |  SELECT doc_id, url,
+        |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1))
+        |      AS scheme,
+        |    lower(regexp_extract(url, '^[^:/?#]+://([^/?#]+)', 1))
+        |      AS hostport,
+        |    regexp_extract(url, '^[^:/?#]+://[^/?#]*([^?#]*)', 1) AS path0,
+        |    regexp_extract(url, '^[^#]*?\?([^#]*)', 1) AS query
+        |  FROM u
+        |), norm AS (
+        |  SELECT doc_id, scheme,
+        |    regexp_replace(regexp_extract(hostport, '^([^:]*)', 1),
+        |      '^www\.', '') AS host,
+        |    regexp_extract(hostport, ':([0-9]+)$', 1) AS port,
+        |    CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path,
+        |    list_sort(list_filter(string_split(query, '&'),
+        |      p -> p != ''
+        |        AND NOT starts_with(lower(split_part(p, '=', 1)), 'utm_')
+        |        AND lower(split_part(p, '=', 1)) NOT IN ('gclid', 'fbclid',
+        |          'msclkid', 'mc_cid', 'mc_eid', 'igshid', 'ref',
+        |          'ref_src'))) AS params
+        |  FROM parts
+        |), canon AS (
+        |  SELECT scheme || '://' || host ||
+        |    CASE WHEN port = '' OR (scheme = 'http' AND port = '80')
+        |         OR (scheme = 'https' AND port = '443') THEN ''
+        |         ELSE ':' || port END ||
+        |    path ||
+        |    CASE WHEN len(params) = 0 THEN ''
+        |         ELSE '?' || array_to_string(params, '&') END
+        |      AS canonical_url
+        |  FROM norm
+        |)
+        |SELECT canonical_url, count(*) AS n
+        |FROM canon GROUP BY canonical_url ORDER BY canonical_url""".stripMargin)),
+
+    // ---- exact duplicated-span detection (the substring-dedup signal of
+    // Lee et al., "Deduplicating Training Data Makes Language Models
+    // Better"): every word 8-gram appearing in >= 2 distinct docs,
+    // reported as a per-doc duplicated-span count. Scale path: grams
+    // leave the scan as 8-byte xxhash64 keys — the shuffle carries
+    // (doc_id, hash) pairs, never the gram text. The oracle groups by
+    // the gram text itself, so the check also proves the hashed plan
+    // loses nothing (identical up to xxhash64 collisions, ~n²/2⁶⁴). ----
+    Query("q_ngram_span_dedup", (s, d) => {
+      val n = 8
+      val t = docsWithDups(s, d).select(
+        col("doc_id"),
+        split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
+          .as("tk"))
+      // per-doc DISTINCT grams, hashed before the explode so only the
+      // 8-byte key ever leaves the row. The gram table feeds two plan
+      // branches (shared-gram agg + per-doc join back); persist the
+      // compact (doc_id, hash) pairs — 16 bytes/gram — so the text is
+      // tokenized once, matching the minhash shingle-base discipline.
+      // (At warehouse scale this would be a materialized intermediate.
+      // Registered with Caches — Bench sweeps the registry per query;
+      // in Verify the ~1 MB residue at the gate SF is harmless.)
+      val grams = t.where(size(col("tk")) >= n)
+        .select(col("doc_id"), explode(array_distinct(transform(
+          sequence(lit(0), size(col("tk")) - n),
+          i => xxhash64(concat_ws(" ", slice(col("tk"), i + 1, lit(n))))
+        ))).as("gh"))
+        .persistTracked
+      // grams are per-doc distinct, so count(*) per hash == distinct docs
+      val shared = grams.groupBy("gh")
+        .agg(count(lit(1)).as("n_docs"))
+        .where(col("n_docs") >= 2)
+      grams.join(shared.select("gh"), Seq("gh"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_dup_grams"))
+        .orderBy("doc_id")
+    },
+      // groups by the gram TEXT itself (the Spark plan ships 8-byte xxhash64
+      // keys) — agreement proves the hashed plan loses nothing (identical up
+      // to xxhash64 collisions, ~n²/2⁶⁴)
+      Some((docsWithDupsCte +
+      """, toks AS (
+        |  SELECT doc_id,
+        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
+        |      ' ') AS t
+        |  FROM docs
+        |), g AS (
+        |  SELECT doc_id,
+        |    unnest(list_distinct(list_transform(range(1, len(t) - 6),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
+        |        || ' ' || t[i+4] || ' ' || t[i+5] || ' ' || t[i+6] || ' '
+        |        || t[i+7]))) AS gram
+        |  FROM toks WHERE len(t) >= 8
+        |), shared AS (
+        |  SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2
+        |)
+        |SELECT doc_id, count(*) AS n_dup_grams
+        |FROM g JOIN shared USING (gram)
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin))),
+
+    // ---- asymmetric gram containment C(a→b) = |g(a)∩g(b)| / |g(a)|:
+    // the subset-duplication signal symmetric Jaccard misses when
+    // |B| ≫ |A| (a short doc quoted wholesale inside a long one scores
+    // C≈1 but Jaccard≈|A|/|B|). Pairs form through the gram-keyed join
+    // (docs sharing ≥ minShared grams) — never all-pairs; only 8-byte
+    // hashes shuffle. Grams with document frequency > maxDf are
+    // excluded from PAIR FORMATION (a boilerplate gram in 10⁶ docs
+    // would mint 10¹² pairs; df-capped grams carry no containment
+    // signal worth that cost — the standard stop-shingle cap) but
+    // still count in |g(a)|, so containment stays a true fraction of
+    // the doc. ----
+    Query("q_containment", (s, d) => {
+      val n = 8
+      val minShared = 8L
+      val maxDf = 100L
+      val t = docsWithDups(s, d).select(
+        col("doc_id"),
+        split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
+          .as("tk"))
+      val grams = t.where(size(col("tk")) >= n)
+        .select(col("doc_id"), explode(array_distinct(transform(
+          sequence(lit(0), size(col("tk")) - n),
+          i => xxhash64(concat_ws(" ", slice(col("tk"), i + 1, lit(n))))
+        ))).as("gh"))
+        .persistTracked
+      val sizes = grams.groupBy("doc_id").agg(count(lit(1)).as("grams_a"))
+      val joinable = grams.groupBy("gh").agg(count(lit(1)).as("df"))
+        .where(col("df") >= 2 && col("df") <= maxDf)
+      val capped = grams.join(joinable.select("gh"), Seq("gh"))
+      capped.select(col("doc_id").as("id_a"), col("gh"))
+        .join(capped.select(col("doc_id").as("id_b"), col("gh")),
+          Seq("gh"))
+        .where(col("id_a") =!= col("id_b"))
+        .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared"))
+        .where(col("shared") >= minShared)
+        .join(sizes.withColumnRenamed("doc_id", "id_a"), Seq("id_a"))
+        // bare division of exact integers — identical IEEE on both
+        // engines, no round() (the q_jl_reduce boundary lesson)
+        .select(col("id_a"), col("id_b"), col("shared"), col("grams_a"),
+          (col("shared").cast("double") / col("grams_a")).as("containment"))
+        .orderBy("id_a", "id_b")
+    },
+      // groups by gram TEXT where the engine joins 8-byte hashes — the
+      // gate proves the hashed pair formation lossless
+      Some((docsWithDupsCte +
+      """, toks AS (
+        |  SELECT doc_id,
+        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
+        |      ' ') AS t
+        |  FROM docs
+        |), g AS (
+        |  SELECT doc_id,
+        |    unnest(list_distinct(list_transform(range(1, len(t) - 6),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
+        |        || ' ' || t[i+4] || ' ' || t[i+5] || ' ' || t[i+6] || ' '
+        |        || t[i+7]))) AS gram
+        |  FROM toks WHERE len(t) >= 8
+        |), sizes AS (
+        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS grams_a
+        |  FROM g GROUP BY doc_id
+        |), joinable AS (
+        |  SELECT gram FROM g GROUP BY gram
+        |  HAVING count(*) >= 2 AND count(*) <= 100
+        |), capped AS (
+        |  SELECT doc_id, gram FROM g JOIN joinable USING (gram)
+        |), pairs AS (
+        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |    CAST(count(*) AS BIGINT) AS shared
+        |  FROM capped a JOIN capped b ON a.gram = b.gram
+        |    AND a.doc_id <> b.doc_id
+        |  GROUP BY a.doc_id, b.doc_id
+        |  HAVING count(*) >= 8
+        |)
+        |SELECT p.id_a, p.id_b, p.shared, s.grams_a,
+        |  CAST(p.shared AS DOUBLE) / s.grams_a AS containment
+        |FROM pairs p JOIN sizes s ON s.doc_id = p.id_a
+        |ORDER BY id_a, id_b""".stripMargin))),
+
+    // ---- maximal duplicated-substring spans (Lee et al. ExactSubstr,
+    // the suffix-array half): per-position 8-token gram hashes →
+    // >= 2-occurrence grams → gaps-and-islands merge into maximal spans
+    // with exact token boundaries. The oracle replays positions over
+    // the gram TEXT itself (proving the hashed plan loses nothing) and
+    // the same window islands, so span boundaries must match exactly ----
+    Query("q_exact_substr", (s, d) => {
+      Dedup.exactSubstrSpans(docsWithDups(s, d), "doc_id", "text",
+          minLen = 8)
+        .orderBy("doc_id", "span_start")
+    },
+      // positions replay over the gram text (lossless-hash proof, the
+      // q_ngram_span_dedup discipline); DuckDB's 1-based list positions
+      // shift to Spark's 0-based token indices at the final select
+      Some((docsWithDupsCte +
+      """, toks AS (
+        |  SELECT doc_id,
+        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
+        |      ' ') AS t
+        |  FROM docs
+        |), pos AS (
+        |  SELECT doc_id, unnest(range(1, len(t) - 6)) AS p, t
+        |  FROM toks WHERE len(t) >= 8
+        |), g AS (
+        |  SELECT doc_id, p,
+        |    t[p] || ' ' || t[p+1] || ' ' || t[p+2] || ' ' || t[p+3]
+        |      || ' ' || t[p+4] || ' ' || t[p+5] || ' ' || t[p+6] || ' '
+        |      || t[p+7] AS gram
+        |  FROM pos
+        |), dup AS (
+        |  SELECT gram FROM g GROUP BY gram HAVING count(*) >= 2
+        |), d AS (
+        |  SELECT doc_id, p FROM g JOIN dup USING (gram)
+        |), brk AS (
+        |  SELECT doc_id, p, CASE WHEN p > lag(p) OVER
+        |      (PARTITION BY doc_id ORDER BY p) + 8 THEN 1 ELSE 0 END AS b
+        |  FROM d
+        |), isl AS (
+        |  SELECT doc_id, p, sum(b) OVER (PARTITION BY doc_id ORDER BY p
+        |    ROWS UNBOUNDED PRECEDING) AS island
+        |  FROM brk
+        |)
+        |SELECT doc_id, CAST(min(p) - 1 AS INT) AS span_start,
+        |  CAST(max(p) - 1 + 8 AS INT) AS span_end
+        |FROM isl GROUP BY doc_id, island
+        |ORDER BY doc_id, span_start""".stripMargin))),
+
+    // ---- keep-one ExactSubstr (Lee et al.'s published policy): each
+    // duplicate chain's least-(doc_id, pos) occurrence is canonical and
+    // survives; only the REST are reported as duplicated spans. The
+    // per-chain argmin rides the chain-count agg (min(struct) in the
+    // same shuffle); the oracle replays the argmin as a row_number over
+    // the gram TEXT, so chain identity AND the keep-one filter are both
+    // proven lossless under hashing ----
+    Query("q_exact_substr_keep", (s, d) => {
+      Dedup.exactSubstrSpans(docsWithDups(s, d), "doc_id", "text",
+          minLen = 8, keepOne = true)
+        .orderBy("doc_id", "span_start")
+    },
+      // keep-one twin: the chain argmin is replayed as row_number over the
+      // gram TEXT ordered by (doc_id, p) — rn 1 is the canonical survivor,
+      // rn >= 2 in a >= 2-occurrence chain is duplicated
+      Some((docsWithDupsCte +
+      """, toks AS (
+        |  SELECT doc_id,
+        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
+        |      ' ') AS t
+        |  FROM docs
+        |), pos AS (
+        |  SELECT doc_id, unnest(range(1, len(t) - 6)) AS p, t
+        |  FROM toks WHERE len(t) >= 8
+        |), g AS (
+        |  SELECT doc_id, p,
+        |    t[p] || ' ' || t[p+1] || ' ' || t[p+2] || ' ' || t[p+3]
+        |      || ' ' || t[p+4] || ' ' || t[p+5] || ' ' || t[p+6] || ' '
+        |      || t[p+7] AS gram
+        |  FROM pos
+        |), d AS (
+        |  SELECT doc_id, p FROM (
+        |    SELECT doc_id, p,
+        |      count(*) OVER (PARTITION BY gram) AS n,
+        |      row_number() OVER (PARTITION BY gram ORDER BY doc_id, p)
+        |        AS rn
+        |    FROM g)
+        |  WHERE n >= 2 AND rn >= 2
+        |), brk AS (
+        |  SELECT doc_id, p, CASE WHEN p > lag(p) OVER
+        |      (PARTITION BY doc_id ORDER BY p) + 8 THEN 1 ELSE 0 END AS b
+        |  FROM d
+        |), isl AS (
+        |  SELECT doc_id, p, sum(b) OVER (PARTITION BY doc_id ORDER BY p
+        |    ROWS UNBOUNDED PRECEDING) AS island
+        |  FROM brk
+        |)
+        |SELECT doc_id, CAST(min(p) - 1 AS INT) AS span_start,
+        |  CAST(max(p) - 1 + 8 AS INT) AS span_end
+        |FROM isl GROUP BY doc_id, island
+        |ORDER BY doc_id, span_start""".stripMargin))),
+
+    // ---- benchmark decontamination: corpus docs sharing >= 2 distinct
+    // word trigrams with the (deterministic) benchmark subset ----
+    Query("q_decontaminate", (s, d) => {
+      import graft.operators.DataPrep
+      val docs = docsPar(s, d).select("doc_id", "text")
+      val benchmark = docs.where(col("doc_id") % 97 === 0)
+      DataPrep.contaminationFlags(
+          docs.where(col("doc_id") % 97 =!= 0), benchmark,
+          "doc_id", "text", n = 3, minOverlap = 2)
+        .orderBy("doc_id")
+    },
+      Some("""WITH toks AS (
+        |  SELECT doc_id,
+        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
+        |      ' ') AS t
+        |  FROM documents
+        |), g AS (
+        |  SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1),
+        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS grams
+        |  FROM toks WHERE len(t) >= 3
+        |), bg AS (
+        |  SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 97 = 0
+        |), cg AS (
+        |  SELECT doc_id, unnest(grams) AS gram FROM g WHERE doc_id % 97 != 0
+        |)
+        |SELECT cg.doc_id, count(DISTINCT cg.gram) AS n_overlap
+        |FROM cg JOIN bg USING (gram)
+        |GROUP BY cg.doc_id HAVING count(DISTINCT cg.gram) >= 2
+        |ORDER BY doc_id""".stripMargin)),
+
+    // ---- content-defined chunking (Rabin-style rolling-hash
+    // boundaries) + chunk-grain dedup rollup: per doc, chunk count,
+    // chunk-length sum (structurally = doc length — the oracle enforces
+    // it) and how many chunks are shared with another doc. Runs on
+    // docsWithDups so the exact/near copies produce known-positive
+    // shared chunks; the oracle replays the polynomial boundary hash
+    // from the SAME premultiplied power table (Cdc.powerTable) ----
+    Query("q_cdc_chunks", (s, d) => {
+      graft.operators.Cdc.chunkStats(docsWithDups(s, d), "doc_id", "text")
+        .orderBy("doc_id")
+    },
+      // replays the CDC boundary hash from the same premultiplied power
+      // table (Cdc.powerTable — emitted as a literal below), rebuilds the
+      // chunks, and recomputes the shared-chunk rollup from md5 chunk
+      // hashes; chunk_len_sum = length(text) is the structural self-check
+      Some({
+      val pw = graft.operators.Cdc.powerTable.mkString("[", ", ", "]")
+      docsWithDupsCte + s""",
+        |c AS (
+        |  SELECT doc_id, text AS t, length(text) AS n,
+        |    list_transform(range(1, length(text) + 1),
+        |      p -> ord(text[p:p])) AS cs
+        |  FROM docs WHERE length(text) > 0
+        |), b AS (
+        |  SELECT doc_id, t, n,
+        |    list_filter(range(16, n + 1), i ->
+        |      list_sum(list_transform(range(0, 16), j ->
+        |        cs[i - 15 + j] * ($pw)[j + 1])) % 64 = 0) AS bnd
+        |  FROM c
+        |), e AS (
+        |  SELECT doc_id, t, n,
+        |    CASE WHEN len(bnd) > 0 AND bnd[-1] = n THEN bnd
+        |         ELSE list_append(bnd, n) END AS ends
+        |  FROM b
+        |), st AS (
+        |  SELECT doc_id, t,
+        |    list_prepend(1, list_transform(ends[1:len(ends) - 1],
+        |      x -> x + 1)) AS starts,
+        |    ends
+        |  FROM e
+        |), ch AS (
+        |  SELECT doc_id, t, unnest(starts) AS s, unnest(ends) AS en
+        |  FROM st
+        |), h AS (
+        |  SELECT doc_id, en - s + 1 AS ln, md5(t[s:en]) AS hsh FROM ch
+        |), nd AS (
+        |  SELECT hsh, count(DISTINCT doc_id) AS ndocs FROM h GROUP BY 1
+        |)
+        |SELECT h.doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
+        |  CAST(sum(ln) AS BIGINT) AS chunk_len_sum,
+        |  CAST(sum(CASE WHEN nd.ndocs > 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_shared_chunks
+        |FROM h JOIN nd USING (hsh)
+        |GROUP BY 1 ORDER BY doc_id""".stripMargin
+    })),
+
+    // ---- n-gram novelty (incremental-crawl curation): fraction of a
+    // doc's distinct word trigrams first seen in THIS doc, doc_id as
+    // ingestion order — runs on docsWithDups so the exact/near copies
+    // are known ~zero-novelty positives. Grams shuffle as portable
+    // md5 56-bit hashes; exact integer ppm ratio ----
+    Query("q_gram_novelty", (s, d) => {
+      Dedup.gramNovelty(docsWithDups(s, d), "doc_id", "text")
+        .orderBy("doc_id")
+    },
+      // replays the novelty computation at the same md5-56 hash grain
+      // (collision-exact), with min(doc_id) as the first-seen rule
+      Some((docsWithDupsCte +
+      """, toks AS (
+        |  SELECT doc_id,
+        |    string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'),
+        |      ' ') AS t
+        |  FROM docs
+        |), g AS (
+        |  SELECT doc_id,
+        |    unnest(list_distinct(list_transform(range(1, len(t) - 1),
+        |      i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS gram
+        |  FROM toks WHERE len(t) >= 3
+        |), hd AS (
+        |  SELECT DISTINCT doc_id,
+        |    CAST(md5_number_upper(gram) % 72057594037927936 AS BIGINT)
+        |      AS hsh
+        |  FROM g
+        |), f AS (
+        |  SELECT hsh, min(doc_id) AS first_doc FROM hd GROUP BY 1
+        |)
+        |SELECT hd.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
+        |  CAST(sum(CASE WHEN hd.doc_id = f.first_doc THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS n_novel,
+        |  CAST(sum(CASE WHEN hd.doc_id = f.first_doc THEN 1 ELSE 0 END)
+        |    * 1000000 // count(*) AS BIGINT) AS novelty_ppm
+        |FROM hd JOIN f USING (hsh)
+        |GROUP BY 1 ORDER BY doc_id""".stripMargin))),
+
+    // ---- benchmark decontamination at NEAR-DUP grain: minhash-banded
+    // bipartite candidates (corpus bands × broadcast benchmark bands),
+    // exact-Jaccard verified — catches paraphrased benchmark copies the
+    // gram-overlap check above misses as whole-document similarity.
+    // Fixture: benchmark = doc_id % 50 = 0; train = the rest ∪ perturbed
+    // benchmark copies (+300000, ' graft extra tail'), so known
+    // positives exist. Oracle = bipartite ALL-PAIRS word-trigram Jaccard
+    // truth (the q_minhash_pairs pinned-recall convention). ----
+    Query("q_decontaminate_neardup", (s, d) => {
+      val docs = docsPar(s, d).select("doc_id", "text")
+      val bench = docs.where(col("doc_id") % 50 === 0)
+      val train = docs.where(col("doc_id") % 50 =!= 0)
+        .unionByName(bench.select((col("doc_id") + 300000).as("doc_id"),
+          concat(col("text"), lit(" graft extra tail")).as("text")))
+      Dedup.minhashCrossDupPairs(train, bench, "doc_id", "text",
+          threshold = 0.5)
+        .select(col("id").as("doc_id"), col("ref_id"),
+          (floor(col("jaccard") * 1e6) / 1e6).as("jaccard"))
+        .orderBy("doc_id", "ref_id")
+    },
+      // bipartite all-pairs trigram-Jaccard truth over the train/benchmark
+      // split — the q_minhash_pairs recall convention, cross-corpus
+      Some("""WITH bench AS (
+        |  SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0
+        |), train AS (
+        |  SELECT doc_id, text FROM documents WHERE doc_id % 50 <> 0
+        |  UNION ALL
+        |  SELECT doc_id + 300000, text || ' graft extra tail' FROM bench
+        |), tg AS (
+        |  SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1),
+        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS grams
+        |  FROM (SELECT doc_id, string_split(regexp_replace(lower(trim(text)),
+        |    '\s+', ' ', 'g'), ' ') AS t FROM train) WHERE len(t) >= 3
+        |), bg AS (
+        |  SELECT doc_id, list_distinct(list_transform(range(1, len(t) - 1),
+        |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS grams
+        |  FROM (SELECT doc_id, string_split(regexp_replace(lower(trim(text)),
+        |    '\s+', ' ', 'g'), ' ') AS t FROM bench) WHERE len(t) >= 3
+        |)
+        |SELECT t.doc_id, b.doc_id AS ref_id,
+        |  floor(CAST(len(list_intersect(t.grams, b.grams)) AS DOUBLE) /
+        |    (len(t.grams) + len(b.grams) - len(list_intersect(t.grams, b.grams)))
+        |    * 1e6) / 1e6 AS jaccard
+        |FROM tg t JOIN bg b ON true
+        |WHERE CAST(len(list_intersect(t.grams, b.grams)) AS DOUBLE) /
+        |  (len(t.grams) + len(b.grams) - len(list_intersect(t.grams, b.grams)))
+        |  >= 0.5
+        |ORDER BY 1, 2""".stripMargin)),
+
+    // ---- persisted dedup index, full ingest cycle: build over half
+    // the corpus, APPEND the other half (no rewrite), probe a derived
+    // crawl batch — pairs must equal the all-pairs trigram truth
+    // between the WHOLE corpus and the batch, which proves the append
+    // path feeds candidates exactly like the build path ----
+    Query("q_dedup_index_probe", (s, d) => {
+      import graft.operators.DedupIndex
+      // persisted: the lifecycle consumes this projection 3× (build,
+      // append, probe batch) and every consumer otherwise re-runs the
+      // scan + ensureParallelism exchange as its own AQE job — one
+      // fixed-cost job per consumer at bench scale (guide §5
+      // multi-consumer persist; measured in plans/r18, IdxJobTrace).
+      // Released in the finally; timed-region-internal, so nothing
+      // survives the query.
+      val docs = docsPar(s, d).select("doc_id", "text")
+        .where(col("text").isNotNull)
+        .persistTracked
+      val tmp = java.nio.file.Files
+        .createTempDirectory("graft_dedup_idx_").toString
+      // 16 bands x 2 rows (same 32-hash signature as the 8x4 default):
+      // the flattest S-curve the signature affords, because this
+      // query's oracle is the ALL-PAIRS truth — the corpus has organic
+      // borderline pairs down to j ≈ 0.69, where 8x4 banding has a
+      // ~13% miss rate but 16x2 is ≤ 3·10⁻⁵ (deterministic hashes, so
+      // the gate outcome is fixed, not flaky — verified green at the
+      // driver SF)
+      // materialize the probe, then delete the corpus-sized temp index
+      // — repeated bench/verify invocations must not accumulate index
+      // trees until /tmp fills; the finally covers BUILD and APPEND
+      // too, so a failure in any of the three stages cannot leak the
+      // tree either (r11 advice; scope widened in r12 review)
+      try {
+        DedupIndex.build(docs.where(col("doc_id") % 2 === 0),
+          "doc_id", "text", tmp, bands = 16, rowsPerBand = 2)
+        DedupIndex.append(docs.where(col("doc_id") % 2 === 1),
+          "doc_id", "text", tmp)
+        val batch = docs.where(col("doc_id") % 5 === 0)
+          .select((col("doc_id") + 300000L).as("doc_id"),
+            concat(col("text"), lit(" crawl extra tail")).as("text"))
+        DedupIndex
+          .probe(s, tmp, batch, "doc_id", "text", threshold = 0.5)
+          .select(col("id"), col("batch_id"),
+            (floor(col("jaccard") * 1e6) / 1e6).as("jaccard"))
+          .orderBy("id", "batch_id")
+          .localCheckpoint()
+      } finally {
+        graft.operators.Caches.release(docs)
+        deleteRecursively(new java.io.File(tmp))
+      }
+    },
+      // all-pairs trigram truth between the WHOLE corpus (build half +
+      // append half) and the derived crawl batch — banding recall
+      // completeness at 0.5 is the q_minhash_pairs pinned property, and
+      // Jaccard over murmur-hashed distinct grams equals Jaccard over
+      // the grams themselves
+      Some(dedupIndexProbeOracle)),
+
+    // ---- the SAME ingest cycle driven down the KEYED (backfill)
+    // probe plan: maxBroadcastBatch = 1 forces the batch past the
+    // broadcast threshold, so the shuffle-join dataflow earns its own
+    // oracle row instead of riding a spec-pinned equality (the
+    // q_skew_join precedent) — an argument, not a session setting, so
+    // queries sharing the session keep their own plans ----
+    Query("q_dedup_index_backfill", (s, d) => {
+      import graft.operators.DedupIndex
+      // persisted multi-consumer projection — the q_dedup_index_probe
+      // rationale
+      val docs = docsPar(s, d).select("doc_id", "text")
+        .where(col("text").isNotNull)
+        .persistTracked
+      val tmp = java.nio.file.Files
+        .createTempDirectory("graft_dedup_idx_bf_").toString
+      try {
+        DedupIndex.build(docs.where(col("doc_id") % 2 === 0),
+          "doc_id", "text", tmp, bands = 16, rowsPerBand = 2)
+        DedupIndex.append(docs.where(col("doc_id") % 2 === 1),
+          "doc_id", "text", tmp)
+        val batch = docs.where(col("doc_id") % 5 === 0)
+          .select((col("doc_id") + 300000L).as("doc_id"),
+            concat(col("text"), lit(" crawl extra tail")).as("text"))
+        // NO outer localCheckpoint (unlike the broadcast twin): the
+        // keyed path already returns an eagerly-checkpointed frame, so
+        // the index tree can be deleted, and a second checkpoint would
+        // bury the inner one where Caches.releaseResult's leaf walk
+        // cannot free it (SoakSpec caught exactly that)
+        DedupIndex
+          .probe(s, tmp, batch, "doc_id", "text", threshold = 0.5,
+            maxBroadcastBatch = 1)
+          .select(col("id"), col("batch_id"),
+            (floor(col("jaccard") * 1e6) / 1e6).as("jaccard"))
+          .orderBy("id", "batch_id")
+      } finally {
+        graft.operators.Caches.release(docs)
+        deleteRecursively(new java.io.File(tmp))
+      }
+    },
+      // the keyed (backfill) plan computes the SAME pairs from the same
+      // index — one truth, two physical dataflows
+      Some(dedupIndexProbeOracle)),
+
+    // ---- the SAME ingest cycle driven through a v1→v3 MIGRATION
+    // (DedupIndex.rebuildFrom): a synthesized pre-versioned index —
+    // flat grams part files, flat band=<k> bands dirs, version-less
+    // meta; the DedupIndexSpec synthesis — is migrated in place (pure
+    // file moves + the atomic meta mint), then appended and probed.
+    // The output must equal the fresh-build cycle, so it shares the
+    // all-pairs trigram oracle: the plan a real migration runs earns
+    // its own oracle row instead of riding a spec-pinned equality
+    // (the q_dedup_index_backfill precedent, r13 verdict #6) ----
+    Query("q_dedup_index_migrate", (s, d) => {
+      import graft.operators.DedupIndex
+      import s.implicits._
+      // persisted multi-consumer projection — the q_dedup_index_probe
+      // rationale
+      val docs = docsPar(s, d).select("doc_id", "text")
+        .where(col("text").isNotNull)
+        .persistTracked
+      val tmp = java.nio.file.Files
+        .createTempDirectory("graft_dedup_idx_mig_").toString
+      try {
+        DedupIndex.build(docs.where(col("doc_id") % 2 === 0),
+          "doc_id", "text", tmp, bands = 16, rowsPerBand = 2)
+        // regress to v1: flatten the grams epoch layout into plain
+        // part files, hoist the epoch-tagged band dirs to flat
+        // band=<k> (true v1 never tagged them), and strip the meta's
+        // version/shingler columns
+        val fs = new org.apache.hadoop.fs.Path(tmp)
+          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        val gramsDir = new org.apache.hadoop.fs.Path(s"$tmp/grams")
+        val flatTmp = s"${tmp}_flatgrams"
+        s.read.parquet(s"$tmp/grams").select("id", "gram_hashes")
+          .write.parquet(flatTmp)
+        fs.delete(gramsDir, true)
+        require(fs.rename(new org.apache.hadoop.fs.Path(flatTmp),
+          gramsDir), "v1 synthesis: grams rename failed")
+        val bandsDir = new org.apache.hadoop.fs.Path(s"$tmp/bands")
+        fs.listStatus(bandsDir)
+          .filter(e => e.isDirectory &&
+            e.getPath.getName.startsWith("epoch="))
+          .foreach { e =>
+            fs.listStatus(e.getPath)
+              .filter(b => b.isDirectory &&
+                b.getPath.getName.startsWith("band="))
+              .foreach { b =>
+                require(fs.rename(b.getPath,
+                  new org.apache.hadoop.fs.Path(bandsDir,
+                    b.getPath.getName)),
+                  "v1 synthesis: bands hoist failed")
+              }
+            fs.delete(e.getPath, true)
+          }
+        Seq((16, 2)).toDF("bands", "rows_per_band")
+          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/meta")
+        // migrate, then grow and serve exactly like the probe cycle
+        DedupIndex.rebuildFrom(s, tmp)
+        DedupIndex.append(docs.where(col("doc_id") % 2 === 1),
+          "doc_id", "text", tmp)
+        val batch = docs.where(col("doc_id") % 5 === 0)
+          .select((col("doc_id") + 300000L).as("doc_id"),
+            concat(col("text"), lit(" crawl extra tail")).as("text"))
+        DedupIndex.probe(s, tmp, batch, "doc_id", "text",
+            threshold = 0.5)
+          .select(col("id"), col("batch_id"),
+            (floor(col("jaccard") * 1e6) / 1e6).as("jaccard"))
+          .orderBy("id", "batch_id")
+          .localCheckpoint()
+      } finally {
+        graft.operators.Caches.release(docs)
+        deleteRecursively(new java.io.File(tmp))
+        deleteRecursively(new java.io.File(s"${tmp}_flatgrams"))
+      }
+    },
+      // migration is metadata-only, so the migrated+appended index must
+      // serve the identical pair set: same all-pairs trigram truth
+      Some(dedupIndexProbeOracle)),
+
+    // ---- the SAME ingest cycle driven through COMPACTION (the
+    // maintenance verb, r14 verdict #1): build → FIVE separate appends
+    // (one tiny epoch each — the per-micro-batch accumulation shape a
+    // streaming ingest gate produces) → compact (epochs merge to one,
+    // bands rewritten from the compacted grams) → probe. Compaction is
+    // pure data movement — no shingling, no re-hashing — so the
+    // output shares the same all-pairs trigram truth as the
+    // fresh-build cycle (the q_dedup_index_migrate precedent) ----
+    Query("q_dedup_index_compact", (s, d) => {
+      import graft.operators.DedupIndex
+      // persisted multi-consumer projection (build + FIVE appends +
+      // probe batch = 7 consumers here) — the q_dedup_index_probe
+      // rationale, at its highest fan-out
+      val docs = docsPar(s, d).select("doc_id", "text")
+        .where(col("text").isNotNull)
+        .persistTracked
+      val tmp = java.nio.file.Files
+        .createTempDirectory("graft_dedup_idx_cmp_").toString
+      try {
+        DedupIndex.build(docs.where(col("doc_id") % 2 === 0),
+          "doc_id", "text", tmp, bands = 16, rowsPerBand = 2)
+        Seq(1, 3, 5, 7, 9).foreach { r =>
+          DedupIndex.append(docs.where(col("doc_id") % 10 === r),
+            "doc_id", "text", tmp)
+        }
+        DedupIndex.compact(s, tmp)
+        val batch = docs.where(col("doc_id") % 5 === 0)
+          .select((col("doc_id") + 300000L).as("doc_id"),
+            concat(col("text"), lit(" crawl extra tail")).as("text"))
+        DedupIndex.probe(s, tmp, batch, "doc_id", "text",
+            threshold = 0.5)
+          .select(col("id"), col("batch_id"),
+            (floor(col("jaccard") * 1e6) / 1e6).as("jaccard"))
+          .orderBy("id", "batch_id")
+          .localCheckpoint()
+      } finally {
+        graft.operators.Caches.release(docs)
+        deleteRecursively(new java.io.File(tmp))
+      }
+    },
+      Some(dedupIndexProbeOracle)),
+
+    // ---- the SAME ingest cycle under TIERED maintenance (r15 verdict
+    // #1, the serving loop's actual policy): build ⅔ of the corpus →
+    // full compact (mints one big epoch) → the remaining ⅓ in five
+    // small appends → compact with the tier set just under the big
+    // epoch's real bytes, so ONLY the appends merge — the small
+    // aggregate is ~half the big epoch, a 2× margin below the
+    // promotion bar, so the big epoch is deterministically left in
+    // place (the spec pins file-identity; this row pins that the
+    // tier-maintained index SERVES exactly the all-pairs trigram
+    // truth — partial maintenance must be invisible to probes) ----
+    Query("q_dedup_index_compact_tiered", (s, d) => {
+      import graft.operators.DedupIndex
+      // persisted multi-consumer projection (build + compact + five
+      // appends + compact + probe batch) — the q_dedup_index_probe
+      // rationale
+      val docs = docsPar(s, d).select("doc_id", "text")
+        .where(col("text").isNotNull)
+        .persistTracked
+      val tmp = java.nio.file.Files
+        .createTempDirectory("graft_dedup_idx_tier_").toString
+      try {
+        DedupIndex.build(docs.where(col("doc_id") % 3 =!= 0),
+          "doc_id", "text", tmp, bands = 16, rowsPerBand = 2)
+        DedupIndex.compact(s, tmp) // the big (above-tier) epoch
+        val fs = new org.apache.hadoop.fs.Path(tmp)
+          .getFileSystem(s.sparkContext.hadoopConfiguration)
+        val bigBytes = fs.listStatus(
+            new org.apache.hadoop.fs.Path(s"$tmp/grams"))
+          .filter(e => e.isDirectory &&
+            e.getPath.getName.startsWith("epoch="))
+          .map(e => fs.getContentSummary(e.getPath).getLength).max
+        Seq(0, 3, 6, 9, 12).foreach { r => // the %3==0 third, 5 slices
+          DedupIndex.append(docs.where(col("doc_id") % 15 === r),
+            "doc_id", "text", tmp)
+        }
+        DedupIndex.compact(s, tmp, maxEpochBytes = bigBytes - 1)
+        val batch = docs.where(col("doc_id") % 5 === 0)
+          .select((col("doc_id") + 300000L).as("doc_id"),
+            concat(col("text"), lit(" crawl extra tail")).as("text"))
+        DedupIndex.probe(s, tmp, batch, "doc_id", "text",
+            threshold = 0.5)
+          .select(col("id"), col("batch_id"),
+            (floor(col("jaccard") * 1e6) / 1e6).as("jaccard"))
+          .orderBy("id", "batch_id")
+          .localCheckpoint()
+      } finally {
+        graft.operators.Caches.release(docs)
+        deleteRecursively(new java.io.File(tmp))
+      }
+    },
+      // tiered maintenance is pure data movement over the same corpus —
+      // the probe truth is the identical all-pairs oracle
+      Some(dedupIndexProbeOracle)),
+
+    // ---- blocked fuzzy self-join (record linkage): md5-hex fixture
+    // names (distinct keys are ~30 edits apart; injected deletion /
+    // double-substitution variants are 1-2) so the found pairs are
+    // exactly the planted typos; prefix blocks keep the join block-local
+    // quadratic, the q_jaccard_pairs contract ----
+    Query("q_fuzzy_pairs", (s, d) => {
+      import graft.operators.FuzzyJoin
+      val base = graft.Tables.customer(s, d)
+        .select(col("c_custkey").cast("long").as("rec_id"),
+          md5(col("c_custkey").cast("string")).as("name"))
+      val dels = base.where(col("rec_id") % 7 === 0)
+        .select((col("rec_id") + 1000000L).as("rec_id"),
+          substring(col("name"), 1, 31).as("name"))
+      val subs = base.where(col("rec_id") % 13 === 0)
+        .select((col("rec_id") + 2000000L).as("rec_id"),
+          concat(substring(col("name"), 1, 30), lit("zz")).as("name"))
+      FuzzyJoin.selfPairs(
+          base.unionByName(dels).unionByName(subs), "rec_id", "name")
+        .orderBy("id_a", "id_b")
+    },
+      // same fixture, same block/verify pipeline in SQL
+      Some("""WITH base AS (
+        |  SELECT CAST(c_custkey AS BIGINT) AS rec_id,
+        |    md5(CAST(c_custkey AS VARCHAR)) AS name
+        |  FROM customer
+        |), all_recs AS (
+        |  SELECT * FROM base
+        |  UNION ALL
+        |  SELECT rec_id + 1000000, substr(name, 1, 31)
+        |  FROM base WHERE rec_id % 7 = 0
+        |  UNION ALL
+        |  SELECT rec_id + 2000000, substr(name, 1, 30) || 'zz'
+        |  FROM base WHERE rec_id % 13 = 0
+        |), sides AS (
+        |  SELECT rec_id, name, lower(substr(name, 1, 4)) AS blk,
+        |    length(name) AS len
+        |  FROM all_recs
+        |)
+        |SELECT a.rec_id AS id_a, b.rec_id AS id_b,
+        |  CAST(levenshtein(a.name, b.name) AS BIGINT) AS dist
+        |FROM sides a JOIN sides b ON a.blk = b.blk
+        |WHERE a.rec_id < b.rec_id AND abs(a.len - b.len) <= 2
+        |  AND levenshtein(a.name, b.name) <= 2
+        |ORDER BY id_a, id_b""".stripMargin)),
+
+    // ---- HyperLogLog distinct-count: the WHOLE sketch (bucketing, rank,
+    // register max-merge, harmonic estimator, linear-counting fallback)
+    // replays in SQL on the portable md5 hash — two scopes exercise both
+    // estimator branches: words (high cardinality, raw branch) and
+    // source (small-cardinality linear-counting branch) and lineitem
+    // line keys (~60k distinct at the gate SF: every bucket hit, raw
+    // harmonic-mean branch) ----
+    Query("q_hll_distinct", (s, d) => {
+      import graft.operators.Hll
+      val docs = docsPar(s, d)
+      val words = docs.select(
+        explode(split(lower(trim(col("text"))), "\\s+")).as("k"))
+      val lines = graft.Tables.lineitem(s, d).select(
+        (col("l_orderkey") * 10 + col("l_linenumber"))
+          .cast("string").as("k"))
+      Hll.estimate(words, col("k")).withColumn("scope", lit("words"))
+        .unionByName(Hll.estimate(docs, col("source"))
+          .withColumn("scope", lit("source")))
+        .unionByName(Hll.estimate(lines, col("k"))
+          .withColumn("scope", lit("lineitem")))
+        .select("scope", "n_present", "s_scaled", "est_raw_q", "est_q")
+        .orderBy("scope")
+    },
+      // full HLL replay: 2^45-scaled exact-integer registers, one shared
+      // double literal for α·m²·2^45, identical estimator trees
+      Some("""WITH keys AS (
+        |  SELECT 'words' AS scope,
+        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS k
+        |  FROM documents
+        |  UNION ALL
+        |  SELECT 'source' AS scope, source AS k FROM documents
+        |  UNION ALL
+        |  SELECT 'lineitem' AS scope,
+        |    CAST(l_orderkey * 10 + l_linenumber AS VARCHAR) AS k
+        |  FROM lineitem
+        |), h AS (
+        |  SELECT scope,
+        |    CAST(md5_number_upper(k) % 72057594037927936 AS BIGINT) AS h
+        |  FROM keys
+        |), regs AS (
+        |  SELECT scope, h // 17592186044416 AS bucket,
+        |    min(CASE WHEN h % 17592186044416 = 0 THEN 0
+        |      ELSE length(bin(h % 17592186044416)) END) AS min_len
+        |  FROM h GROUP BY scope, bucket
+        |), agg AS (
+        |  SELECT scope, CAST(count(*) AS BIGINT) AS n_present,
+        |    CAST(sum(CAST(1 AS BIGINT) << CAST(min_len AS INT))
+        |        AS BIGINT)
+        |      + (4096 - CAST(count(*) AS BIGINT)) * 35184372088832
+        |      AS s_scaled
+        |  FROM regs GROUP BY scope
+        |)
+        |SELECT scope, n_present, s_scaled,
+        |  CAST(floor(4.2566823519294213e20 / CAST(s_scaled AS DOUBLE))
+        |    AS BIGINT) AS est_raw_q,
+        |  CAST(floor(CASE
+        |    WHEN 4.2566823519294213e20 / CAST(s_scaled AS DOUBLE)
+        |        <= 10240.0 AND n_present < 4096
+        |      THEN 4096.0 * ln(4096.0 /
+        |        CAST(4096 - n_present AS DOUBLE))
+        |    ELSE 4.2566823519294213e20 / CAST(s_scaled AS DOUBLE)
+        |  END) AS BIGINT) AS est_q
+        |FROM agg ORDER BY scope""".stripMargin)),
+
+    // ---- GROUP-WISE HyperLogLog (beyond ref — the per-domain
+    // cardinality report a corpus dashboard runs): one 4096-register
+    // sketch per source, distinct words per group, state bounded at
+    // |groups|·4096 instead of a count(DISTINCT) shuffling every
+    // distinct key. Identical estimator expression to q_hll_distinct,
+    // grouped — the oracle replays registers and both estimator
+    // branches per group ----
+    Query("q_hll_groups", (s, d) => {
+      import graft.operators.Hll
+      val words = docsPar(s, d).select(col("source"),
+        explode(split(lower(trim(col("text"))), "\\s+")).as("k"))
+      Hll.estimateByGroups(words, Seq("source"), col("k"))
+        .orderBy("source")
+    },
+      Some("""WITH keys AS (
+        |  SELECT source,
+        |    unnest(string_split_regex(lower(trim(text)), '\s+')) AS k
+        |  FROM documents
+        |), h AS (
+        |  SELECT source,
+        |    CAST(md5_number_upper(k) % 72057594037927936 AS BIGINT) AS h
+        |  FROM keys
+        |), regs AS (
+        |  SELECT source, h // 17592186044416 AS bucket,
+        |    min(CASE WHEN h % 17592186044416 = 0 THEN 0
+        |      ELSE length(bin(h % 17592186044416)) END) AS min_len
+        |  FROM h GROUP BY source, bucket
+        |), agg AS (
+        |  SELECT source, CAST(count(*) AS BIGINT) AS n_present,
+        |    CAST(sum(CAST(1 AS BIGINT) << CAST(min_len AS INT))
+        |        AS BIGINT)
+        |      + (4096 - CAST(count(*) AS BIGINT)) * 35184372088832
+        |      AS s_scaled
+        |  FROM regs GROUP BY source
+        |)
+        |SELECT source, n_present, s_scaled,
+        |  CAST(floor(4.2566823519294213e20 / CAST(s_scaled AS DOUBLE))
+        |    AS BIGINT) AS est_raw_q,
+        |  CAST(floor(CASE
+        |    WHEN 4.2566823519294213e20 / CAST(s_scaled AS DOUBLE)
+        |        <= 10240.0 AND n_present < 4096
+        |      THEN 4096.0 * ln(4096.0 /
+        |        CAST(4096 - n_present AS DOUBLE))
+        |    ELSE 4.2566823519294213e20 / CAST(s_scaled AS DOUBLE)
+        |  END) AS BIGINT) AS est_q
+        |FROM agg ORDER BY source""".stripMargin)),
+
+    // ---- count-min frequency sketch (Cormode & Muthukrishnan): the
+    // register file built from ONE corpus word-count pass (weighted
+    // build == unit build, CmsSpec-pinned), probe = every word with
+    // exact count >= 50; est_n >= exact_n is the CMS one-sided
+    // guarantee and every value is exact-integer cross-engine ----
+    Query("q_cms", (s, d) => {
+      import graft.operators.Cms
+      val counts = docsPar(s, d)
+        .select(explode(split(lower(trim(col("text"))), "\\s+")).as("k"))
+        .where(length(col("k")) > 0)
+        .groupBy("k").agg(count(lit(1)).as("exact_n"))
+        .persistTracked
+      val regs = Cms.registersWeighted(counts, col("k"), col("exact_n"))
+      val probe = counts.where(col("exact_n") >= 50)
+      Cms.estimates(regs, probe.select("k"), "k")
+        .join(probe, Seq("k"))
+        .select(col("k").as("word"), col("exact_n"), col("est_n"))
+        .orderBy("word")
+    },
+      // full CMS replay: same depth-salted md5 addressing, integer sums,
+      // min-over-depths probe — every column exact cross-engine
+      Some("""WITH w AS MATERIALIZED (
+        |  SELECT k, CAST(count(*) AS BIGINT) AS exact_n FROM (
+        |    SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
+        |      AS k FROM documents
+        |  ) WHERE length(k) > 0 GROUP BY k
+        |), hh AS MATERIALIZED (
+        |  SELECT k, exact_n, CAST(d.range AS INT) AS depth,
+        |    CAST(md5_number_upper(CAST(d.range AS VARCHAR) || '|' || k)
+        |      % 72057594037927936 AS BIGINT) % 1024 AS bucket
+        |  FROM w CROSS JOIN range(4) d
+        |), regs AS (
+        |  SELECT depth, bucket, CAST(sum(exact_n) AS BIGINT) AS n
+        |  FROM hh GROUP BY 1, 2
+        |)
+        |SELECT hh.k AS word, CAST(min(hh.exact_n) AS BIGINT) AS exact_n,
+        |  CAST(min(r.n) AS BIGINT) AS est_n
+        |FROM hh JOIN regs r USING (depth, bucket)
+        |WHERE hh.exact_n >= 50
+        |GROUP BY hh.k ORDER BY word""".stripMargin)),
+
+    // ---- winnowing fingerprints (Schleimer et al., MOSS): per-doc
+    // distinct sliding-window minima over char-8-gram hashes, on the
+    // DuckDB-portable md5Long56 hash so the oracle replays the exact
+    // fingerprint set (production default is xxhash64) ----
+    Query("q_winnow", (s, d) => {
+      Winnow.fingerprints(docsPar(s, d), "doc_id", "text", k = 8, w = 10,
+          portable = true)
+        .orderBy("doc_id", "fp")
+    },
+      // exact replay of Winnow.fingerprints(k=8, w=10, md5Long56):
+      // md5_number_upper % 2^56 IS md5Long56 (first 7 digest bytes,
+      // little-endian — the Hashing.md5Long56 contract)
+      Some("""WITH d AS (
+        |  SELECT doc_id,
+        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS t
+        |  FROM documents
+        |), h AS (
+        |  SELECT doc_id, list_transform(range(1, length(t) - 6),
+        |    i -> CAST(md5_number_upper(t[i:i+7]) % 72057594037927936
+        |      AS BIGINT)) AS hs
+        |  FROM d WHERE length(t) >= 17
+        |)
+        |SELECT doc_id,
+        |  unnest(list_distinct(list_transform(range(0, len(hs) - 9),
+        |    j -> list_min(hs[j+1:j+10])))) AS fp
+        |FROM h
+        |ORDER BY doc_id, fp""".stripMargin)),
+
+    // ---- bag-of-words dedup: the key is the sorted token multiset, so
+    // word-order permutations (injected here as the sorted-token
+    // rendering of every doc_id%9=0 doc) fall into one group; the oracle
+    // groups by the sorted token STRING itself, proving the md5-keyed
+    // plan loses nothing ----
+    Query("q_bow_dedup", (s, d) => {
+      val docs = docsPar(s, d).select("doc_id", "text")
+      val shuffled = docs.where(col("doc_id") % 9 === 0)
+        .select((col("doc_id") + 300000).as("doc_id"),
+          concat_ws(" ", array_sort(filter(
+            split(lower(trim(col("text"))), "\\s+"),
+            t => length(t) > 0))).as("text"))
+      Dedup.bowDupGroups(docs.unionByName(shuffled), "doc_id", "text")
+        .select("canonical_id", "n_bow_dups")
+        .orderBy("canonical_id")
+    },
+      // groups by the sorted token STRING itself — proves the Spark plan's
+      // md5 bag key loses nothing
+      Some("""WITH docs AS (
+        |  SELECT doc_id, text FROM documents
+        |  UNION ALL
+        |  SELECT doc_id + 300000,
+        |    array_to_string(list_sort(list_filter(
+        |      string_split_regex(lower(trim(text)), '\s+'),
+        |      x -> length(x) > 0)), ' ')
+        |  FROM documents WHERE doc_id % 9 = 0
+        |), k AS (
+        |  SELECT doc_id,
+        |    array_to_string(list_sort(list_filter(
+        |      string_split_regex(lower(trim(text)), '\s+'),
+        |      x -> length(x) > 0)), ' ') AS bow
+        |  FROM docs
+        |)
+        |SELECT min(doc_id) AS canonical_id,
+        |  CAST(count(*) AS BIGINT) AS n_bow_dups
+        |FROM k GROUP BY bow HAVING count(*) > 1
+        |ORDER BY canonical_id""".stripMargin)),
+
+    // ---- corpus-level exact line dedup (MassiveText/RefinedWeb): every
+    // distinct line keeps only its (min doc, min idx) occurrence. Pages
+    // are seeded by doc_id % 100000 so the injected exact copies
+    // (+100000) produce IDENTICAL pages (all lines dup away) and the
+    // near copies (+200000) share all but their final line. The oracle
+    // replays the argmin keyed by line TEXT — the hashed plan proven
+    // lossless (q_ngram_span_dedup discipline) ----
+    Query("q_para_dedup", (s, d) => {
+      val pages = docsWithDups(s, d).select(col("doc_id"),
+        pageText(col("doc_id") % 100000, col("text")).as("page"))
+      Dedup.lineDedup(pages, "doc_id", "page")
+        .orderBy("doc_id")
+    },
+      // the keep-first argmin keyed by line TEXT (the Spark plan keys by
+      // xxhash64 — this check proves the hashed plan lossless)
+      Some((s"$docsWithDupsCte,\n${pageCte("docs", "(doc_id % 100000)")},\n" +
+      """l AS (
+         |  SELECT doc_id, generate_subscripts(lns, 1) - 1 AS idx,
+         |    unnest(lns) AS line
+         |  FROM (SELECT doc_id, string_split(page, chr(10)) AS lns
+         |        FROM pages)
+         |), r AS (
+         |  SELECT doc_id, idx, line,
+         |    row_number() OVER (PARTITION BY line ORDER BY doc_id, idx) rn
+         |  FROM l
+         |), agg AS (
+         |  SELECT doc_id, count(*) AS nk,
+         |    string_agg(line, chr(10) ORDER BY idx) AS ctext
+         |  FROM r WHERE rn = 1 GROUP BY doc_id
+         |)
+         |SELECT p.doc_id,
+         |  CAST(len(string_split(p.page, chr(10))) AS BIGINT) AS n_lines,
+         |  CAST(coalesce(agg.nk, 0) AS BIGINT) AS n_kept_lines,
+         |  coalesce(agg.ctext, '') AS cleaned_text
+         |FROM pages p LEFT JOIN agg ON p.doc_id = agg.doc_id
+         |ORDER BY p.doc_id""".stripMargin))))
+}

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.operators.Cpd
 
 /** Streaming change-point detection: the batch CPD stage wired behind a
@@ -20,13 +20,13 @@ import graft.operators.Cpd
 object StreamingCpd {
 
   /** Wrap a streaming feature DataFrame into a candidate-appending writer.
-    * Caller starts it with `.start()` after picking a sink via `sink`.
+    * Caller picks the trigger and starts it with `.start()` after picking
+    * a sink via `sink`.
     */
   def candidateWriter(features: DataFrame, cfg: Cpd.Config = Cpd.Config())(
       sink: (Dataset[Cpd.Candidate], Long) => Unit)
       : DataStreamWriter[org.apache.spark.sql.Row] = {
     features.writeStream
-      .trigger(Trigger.ProcessingTime("10 seconds"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // scoped release: candidateEvents persistTracks its 7-column
         // projection internally; batch callers sweep it with

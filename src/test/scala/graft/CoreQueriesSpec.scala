@@ -17,6 +17,11 @@ class CoreQueriesSpec extends AnyFunSuite {
   test("every declared query runs and oracle coverage is complete") {
     val qs = SparkEntry.queries
     assert(qs.nonEmpty)
+    // one Query per name: the derived map drops no declared query
+    val names = SparkEntry.all.map(_.name)
+    assert(names.distinct.size == names.size,
+      names.diff(names.distinct).mkString("duplicate query names: ", ", ", ""))
+    assert(qs.size == names.size)
     // every oracle entry refers to a declared query
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs.keySet))
     val r = QuerySweep.result

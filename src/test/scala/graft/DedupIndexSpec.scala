@@ -831,23 +831,19 @@ class DedupIndexSpec extends AnyFunSuite {
       "broadcast path row for row") {
     val path = tmp()
     DedupIndex.build(docs, "doc_id", "text", path)
-    def run() = DedupIndex.probe(spark, path, batch(),
-        "doc_id", "text", threshold = 0.5)
+    def probe(maxBroadcastBatch: Long) = DedupIndex.probe(spark, path,
+      batch(), "doc_id", "text", threshold = 0.5,
+      maxBroadcastBatch = maxBroadcastBatch)
+    def run(maxBroadcastBatch: Long) = probe(maxBroadcastBatch)
       .select(col("id"), col("batch_id"),
         round(col("jaccard"), 9).as("j")).collect()
       .map(_.toString).sorted.toSeq
-    val viaBroadcast = run()
-    val viaKeyed =
-      try {
-        spark.conf.set("graft.dedupIndex.maxBroadcastBatch", "1")
-        // the keyed path returns an eagerly-checkpointed frame — proof
-        // the fallback was actually taken (the broadcast path is lazy)
-        val kf = DedupIndex.probe(spark, path, batch(),
-          "doc_id", "text", threshold = 0.5)
-        assert(kf.queryExecution.logical.toString.contains("LogicalRDD"),
-          "keyed fallback not taken under maxBroadcastBatch=1")
-        run()
-      } finally spark.conf.unset("graft.dedupIndex.maxBroadcastBatch")
+    val viaBroadcast = run(DedupIndex.MaxBroadcastBatchDefault)
+    // the keyed path returns an eagerly-checkpointed frame — proof
+    // the fallback was actually taken (the broadcast path is lazy)
+    assert(probe(1).queryExecution.logical.toString.contains("LogicalRDD"),
+      "keyed fallback not taken under maxBroadcastBatch=1")
+    val viaKeyed = run(1)
     assert(viaBroadcast.nonEmpty && viaKeyed == viaBroadcast)
   }
 

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * built by `GraftSession` (so tests, Verify, Bench, Explain and the tools
   * plan with the engine that ships), and operators take no settings from
   * the environment (executors on a cluster do not inherit the driver's
-  * environment, so an env read there is a local-only switch). A/B
+  * environment, so an env read there is a local-only switch), and the
+  * queries leave the shared session's settings alone. A/B
   * comparisons are made across commits with `python3 perfbench/run.py`. */
 class EngineConfigGateSpec extends AnyFunSuite {
 
@@ -35,5 +36,13 @@ class EngineConfigGateSpec extends AnyFunSuite {
     val found = offenders("src/main/scala/graft/operators",
       """\bsys\s*\.\s*env\b|System\s*\.\s*getenv\b""".r)
     assert(found.isEmpty, s"environment reads in operators: $found")
+  }
+
+  test("queries change no session settings") {
+    // Verify runs several queries at once on one session, so a query
+    // that sets a session key changes the plans of the others
+    val found = offenders("src/main/scala/graft/queries",
+      """\bconf\s*\.\s*(set|unset)\b""".r)
+    assert(found.isEmpty, s"session settings changed in queries: $found")
   }
 }

@@ -15,7 +15,7 @@ class FormatsAndSketchesSpec extends AnyFunSuite {
 
   private lazy val silver = {
     val raw = graft.queries.PipelineQueries
-      .rawTelemetryFromEventsPublic(spark, sf)
+      .rawTelemetryFromEvents(spark, sf)
     graft.operators.TelemetryTransform
       .transform(raw, passthrough = Seq("event_id"))
   }

@@ -253,7 +253,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("dropNearDups keeps exactly one canonical doc per near-dup cluster") {
-    val docs = graft.queries.DocQueries.docsWithDupsPublic(spark, sf)
+    val docs = graft.queries.DocFixtures.docsWithDups(spark, sf)
     val kept = graft.operators.Dedup
       .dropNearDups(docs, "doc_id", "text", threshold = 0.5)
     val keptIds = kept.select("doc_id").collect().map(_.getLong(0)).toSet

@@ -14,7 +14,7 @@ object MinhashPhaseBench {
 
     (1 to 2).foreach { round =>
       println(s"== round $round ==")
-      val docs = graft.queries.DocQueries.docsWithDupsPublic(spark, sfDir)
+      val docs = graft.queries.DocFixtures.docsWithDups(spark, sfDir)
       val pairs = jc.phase("minhashDupPairs") {
         graft.operators.Dedup.minhashDupPairs(docs, "doc_id", "text",
           threshold = 0.5).select("id_a", "id_b")

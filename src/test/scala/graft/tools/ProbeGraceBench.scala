@@ -58,12 +58,8 @@ object ProbeGraceBench {
         })
         row(label, "dedup keyed", minOf {
           val t0 = System.nanoTime()
-          try {
-            spark.conf.set("graft.dedupIndex.maxBroadcastBatch", "1")
-            DedupIndex.probe(spark, dPath, batch, "doc_id", "text",
-              threshold = 0.5).count()
-          } finally
-            spark.conf.unset("graft.dedupIndex.maxBroadcastBatch")
+          DedupIndex.probe(spark, dPath, batch, "doc_id", "text",
+            threshold = 0.5, maxBroadcastBatch = 1).count()
           graft.operators.Caches.clear()
           (System.nanoTime() - t0) / 1e9
         })

@@ -196,13 +196,11 @@ object ScaleBench {
       try {
         DedupIndex.build(docs.where(col("doc_id") % 2 === 0),
           "doc_id", "text", tmp, bands = 16, rowsPerBand = 2)
-        s.conf.set("graft.dedupIndex.maxBroadcastBatch", "1")
         DedupIndex.probe(s, tmp, docs.where(col("doc_id") % 2 === 1)
             .select((col("doc_id") + 500000000L).as("doc_id"),
               col("text")),
-          "doc_id", "text", threshold = 0.5)
+          "doc_id", "text", threshold = 0.5, maxBroadcastBatch = 1)
       } finally {
-        s.conf.unset("graft.dedupIndex.maxBroadcastBatch")
         def rm(f: java.io.File): Unit = {
           Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
         }
