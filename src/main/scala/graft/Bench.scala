@@ -484,11 +484,16 @@ object Bench {
     val tasksJson = queryJobs.toSeq.sortBy(_._1)
       .map { case (n, c) => "\"" + n + s"\":${c.tasks}" }
       .mkString("{", ",", "}")
+    // generated classes compiled during the recorded run; Bench times
+    // one query at a time, so the JVM-wide count is that query's own
+    val compilesJson = queryJobs.toSeq.sortBy(_._1)
+      .map { case (n, c) => "\"" + n + s"\":${c.compiles}" }
+      .mkString("{", ",", "}")
     val overheadJson = queryJobs.toSeq.sortBy(_._1)
       .flatMap { case (n, c) => allMins.get(n).map { sec =>
         "\"" + n + s"""\":${c.jobs * 0.1 >= 0.5 * sec}""" } }
       .mkString("{", ",", "}")
-    val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","quiet":{"total":$totalQuiet},"queries":$qJson,"queries_quiet":${quietJson(results)},"sf":"$sfDir","derived":$derived,"sf1_anchor":$sf1Json,"extra":$extraJson,"extra_quiet":${quietJson(extraResults)},"queries_reps":${repsJson(headlineReps)},"extra_reps":${repsJson(extraReps)},"queries_jobs":$jobsJson,"queries_tasks":$tasksJson,"queries_overhead_bound":$overheadJson,"headline_pass_load":${passLoadsJsonFor("headline", nHeadlinePasses)},"extra_pass_load":${passLoadsJsonFor("extra", nExtraPasses)},"quiet_load_threshold":$quietLoad%.1f,"quiet_cpu_threshold":$quietCpuWall%.1f,$loadSummary,"load_passes":$loadPassesJson}"""
+    val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec","quiet":{"total":$totalQuiet},"queries":$qJson,"queries_quiet":${quietJson(results)},"sf":"$sfDir","derived":$derived,"sf1_anchor":$sf1Json,"extra":$extraJson,"extra_quiet":${quietJson(extraResults)},"queries_reps":${repsJson(headlineReps)},"extra_reps":${repsJson(extraReps)},"queries_jobs":$jobsJson,"queries_tasks":$tasksJson,"queries_compiles":$compilesJson,"queries_overhead_bound":$overheadJson,"headline_pass_load":${passLoadsJsonFor("headline", nHeadlinePasses)},"extra_pass_load":${passLoadsJsonFor("extra", nExtraPasses)},"quiet_load_threshold":$quietLoad%.1f,"quiet_cpu_threshold":$quietCpuWall%.1f,$loadSummary,"load_passes":$loadPassesJson}"""
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
         fullJson.getBytes("UTF-8"))
@@ -629,7 +634,7 @@ object Bench {
 
       // the anchors run ten times (5 reps x warm + timed); without cleanup
       // each run leaks a ~100 MB csv+bronze tree in /tmp
-      deleteRecursively(new java.io.File(tmp))
+      graft.queries.DocFixtures.deleteRecursively(new java.io.File(tmp))
 
       Some(AnchorTimes(nRows, transformSec, cpdSec, nCsv, ingestSec))
     } catch {
@@ -637,10 +642,5 @@ object Bench {
         System.err.println(s"[bench] derived anchors failed: ${e.getMessage}")
         None
     }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 }

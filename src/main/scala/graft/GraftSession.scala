@@ -81,9 +81,32 @@ object GraftSession {
   }
 
   /** Shared tuning: adaptive execution (coalescing + skew-join split),
-    * UTC timestamps (oracle/Postgres parity), extensions registered.
+    * UTC timestamps (oracle/Postgres parity), extensions registered, and a
+    * codegen cache that holds graft's whole query surface.
     * The one engine configuration: tests, Verify, Bench, Explain and the
-    * tools all build their sessions through [[local]], which applies it. */
+    * tools all build their sessions through [[local]], which applies it.
+    *
+    * Codegen cache. Spark compiles each generated class once and
+    * keeps it in one JVM-wide cache keyed by the Java source text
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). A loop of more
+    * distinct classes than the bound evicts every entry before its reuse,
+    * so each re-run compiles again and runs fresh classes in the
+    * interpreter while the JIT recompiles them: perfbench `pipeline`
+    * compiles about 120 classes per iteration, and at the default bound
+    * every warm iteration compiled 107–120 of them again. With
+    * [[CodegenCacheEntries]] warm iterations compile none. The bound
+    * holds the measured working set with headroom (numbers on the
+    * constant). The setting is a static SQL conf: Spark reads it once,
+    * when the first class of the JVM is compiled, so it belongs in the
+    * builder and cannot be a per-query option.
+    *
+    * Class names without stage ids. AQE numbers whole-stage codegen
+    * stages in the order it plans them, which can change from run to
+    * run, and by default the number is part of the generated class name,
+    * so an otherwise identical stage compiled again under its new
+    * number. `useIdInClassName=false` names every stage class alike (the
+    * id stays in a comment of the source); the only cost is that stack
+    * traces no longer carry the stage id. */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .withExtensions(new graft.plans.GraftExtensions)
     .config("spark.sql.adaptive.enabled", "true")
@@ -99,6 +122,26 @@ object GraftSession {
     // timezone-less parquet timestamps read as TimestampType (UTC), not
     // NTZ — keeps unix_micros/oracle parity independent of writer quirks
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    // parquet TIMESTAMP(NANOS) (older events drops) reads as epoch-nanos
+    // long, which Tables.events converts; Spark has no nanosecond type
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    .config("spark.sql.codegen.cache.maxEntries",
+      CodegenCacheEntries.toString)
+    // stage ids out of generated class names (see above)
+    .config("spark.sql.codegen.useIdInClassName", "false")
+
+  /** Bound of Spark's JVM-wide generated-class cache. Measured working
+    * set: one pass over all 228 driver queries at sf0.001 compiles 2,627
+    * distinct classes, so 4,096 holds the whole query surface with about
+    * a third to spare. Two passes in one JVM (local[4], 4-vCPU VM) with
+    * this configuration: 2,627 then 16 compiles, 206 s then 122 s;
+    * Metaspace 215–217 MB and the two nmethod code heaps 142–154 MB.
+    * With Spark's default of 100 the second pass compiled about as much
+    * as the first (5,024 of 5,034 in an earlier probe, which also had
+    * stage ids in class names), with Metaspace and code heaps within a
+    * few MB of these. The 16 of the warm pass are new sources, not
+    * evictions: the cache then held 2,643 entries, under the bound. */
+  val CodegenCacheEntries: Int = 4096
 
   /** Local-mode session with shuffle parallelism matched to cores (the
     * 200-partition default is wrong for one machine). */

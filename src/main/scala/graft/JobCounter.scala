@@ -10,6 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   * SparkContext — the one job counter Bench, the phase tools and the
   * specs share. Stages count on completion, so skipped stages (shuffle
   * reuse, cache hits) never count; tasks count every attempt that ran.
+  * `compiles` counts the generated classes Spark compiled, i.e. misses
+  * of its codegen cache (see [[JobCounter.compiles]]).
   *
   * {{{
   * val jc = JobCounter.attach(spark.sparkContext)
@@ -36,7 +38,8 @@ final class JobCounter private (sc: SparkContext) extends SparkListener {
     tasks.incrementAndGet(); ()
   }
 
-  private def now: Counts = Counts(jobs.get, stages.get, tasks.get)
+  private def now: Counts =
+    Counts(jobs.get, stages.get, tasks.get, JobCounter.compiles())
 
   /** Listener events post asynchronously: snapshot once the counters are
     * stable (two reads 30 ms apart agree), waiting at most one second. */
@@ -53,7 +56,8 @@ final class JobCounter private (sc: SparkContext) extends SparkListener {
   }
 
   /** Run `body` as a named phase and print one line with its wall time
-    * and the jobs, stages and tasks it ran — the phase tools' report. */
+    * and the jobs, stages, tasks and compiles it ran — the phase tools'
+    * report. */
   def phase[T](label: String)(body: => T): T = {
     val c0 = now
     val t0 = System.nanoTime()
@@ -67,12 +71,21 @@ final class JobCounter private (sc: SparkContext) extends SparkListener {
 }
 
 object JobCounter {
-  final case class Counts(jobs: Long, stages: Long, tasks: Long) {
-    def -(o: Counts): Counts =
-      Counts(jobs - o.jobs, stages - o.stages, tasks - o.tasks)
+  final case class Counts(jobs: Long, stages: Long, tasks: Long,
+      compiles: Long) {
+    def -(o: Counts): Counts = Counts(jobs - o.jobs, stages - o.stages,
+      tasks - o.tasks, compiles - o.compiles)
     override def toString: String =
-      f"jobs=$jobs%3d stages=$stages%3d tasks=$tasks%4d"
+      f"jobs=$jobs%3d stages=$stages%3d tasks=$tasks%4d compiles=$compiles%3d"
   }
+
+  /** Generated classes compiled so far in this JVM (Spark's codegen
+    * metrics; a compile is a codegen-cache miss). The count is JVM-wide,
+    * not per SparkContext or per query: when queries run concurrently, as
+    * in Verify, their compiles mix together. */
+  def compiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      .getCount
 
   def attach(sc: SparkContext): JobCounter = {
     val c = new JobCounter(sc)

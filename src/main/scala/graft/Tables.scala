@@ -10,18 +10,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * object-store paths — nothing here assumes local files).
   */
 object Tables {
-  /** The testdata parquet stores timezone-less `timestamp[us]` columns
-    * (events.ts, o_orderdate, l_shipdate). Spark 4 infers those as
-    * TIMESTAMP_NTZ by default, which breaks `unix_micros`/window-range
-    * arithmetic and diverges from the DuckDB oracle's TIMESTAMP
-    * semantics. Force the classic inference (TimestampType under the
-    * session's UTC zone) at the one place every table read goes through,
-    * so the engine's semantics don't depend on which builder created the
-    * session. */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+  /** One table of the sf directory. The timestamp reading rules (classic
+    * TimestampType inference, TIMESTAMP(NANOS) as epoch-nanos long) are
+    * session settings from [[GraftSession.configure]], not per read. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -30,13 +23,14 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
-  /** The events table is written with parquet TIMESTAMP(NANOS), which Spark
-    * has no native type for — read it as epoch-nanos long and convert to a
-    * microsecond TimestampType column (the generator only populates µs
-    * precision, so this is lossless).
+  /** Older drops of the events table are written with parquet
+    * TIMESTAMP(NANOS), which Spark has no native type for: the session
+    * reads it as epoch-nanos long (`spark.sql.legacy.parquet.nanosAsLong`,
+    * set in [[GraftSession.configure]]), converted here to a microsecond
+    * TimestampType column (the generator only populates µs precision, so
+    * this is lossless).
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = load(s, d, "events")
     if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
       df.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(

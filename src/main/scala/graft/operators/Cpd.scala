@@ -108,7 +108,10 @@ object Cpd {
           .otherwise(col("_clean_kin")))
       .drop("_clean_payload", "_clean_kin")
 
-    val withGate = f.join(gates, Seq("device_date"))
+    // one row per device_date: broadcast by plan, not by whichever AQE
+    // stage happens to finish first (a runtime choice gave per-run plan
+    // variants, each with its own generated code)
+    val withGate = f.join(broadcast(gates), Seq("device_date"))
 
     // Branch-specific clean filter, then tumbling 5 s mean per signal with
     // the earliest hash per bucket. One shuffle; partial aggregation first.

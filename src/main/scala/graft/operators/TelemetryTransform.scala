@@ -33,7 +33,10 @@ object TelemetryTransform {
       .where(col("timestamp").isNotNull && col("device_id").isNotNull)
       .select(passthrough.map(col) ++ Seq(
         col("timestamp"),
-        current_timestamp().as("ingested_at"),
+        // one timestamp per query, kept out of the generated source so
+        // the projection's compiled class is reused across runs
+        graft.plans.QueryTimestampExpression.queryTimestamp()
+          .as("ingested_at"),
         Hashing.rawEventHashId(col("device_id"), col("timestamp"))
           .as("raw_event_hash_id"),
         col("device_id"),

@@ -203,6 +203,16 @@ object GraftExtensions {
       (exprs: Seq[Expression]) =>
         SentenceUnionLcsExpression(exprs(0), exprs(1)))
 
+  val queryTimestampDescriptor
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier("query_timestamp"),
+      new ExpressionInfo(classOf[QueryTimestampExpression].getName,
+        "query_timestamp"),
+      (exprs: Seq[Expression]) => {
+        require(exprs.isEmpty, "query_timestamp() takes no arguments")
+        QueryTimestampExpression()
+      })
+
   /** Every native function, in one list: the builder extensions
     * ([[GraftExtensions.apply]]) and [[register]] both install exactly
     * these. */
@@ -212,7 +222,7 @@ object GraftExtensions {
       vecCosineDescriptor, vecDotDescriptor, lshSignatureDescriptor,
       unicodeNormalizeDescriptor, charNgramMatchesDescriptor,
       arrayClippedMatchesDescriptor, arrayLcsLengthDescriptor,
-      sentenceUnionLcsDescriptor)
+      sentenceUnionLcsDescriptor, queryTimestampDescriptor)
 
   /** Register into an already-built session (builder extensions only apply
     * to sessions constructed with `withExtensions`; `getOrCreate` on an

@@ -156,8 +156,9 @@ object DocFixtures {
       |  >= 0.5
       |ORDER BY 1, 2""".stripMargin
 
-  /** Removes a query's temporary index directory. */
-  private[queries] def deleteRecursively(f: java.io.File): Unit = {
+  /** Removes a temporary directory tree (a query's index, a bench's
+    * scratch input); the one recursive delete of the code base. */
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles).foreach(_.foreach(deleteRecursively))
     f.delete(): Unit

@@ -45,6 +45,13 @@ object ExportSink {
     * Returns (n_rows, n_distinct_hashes, n_null_critical, n_devices,
     * min_ts, max_ts); callers assert `n_rows == n_distinct_hashes` and
     * `n_null_critical == 0` before committing a load.
+    *
+    * Only the hash count is a DISTINCT aggregate. Two of them make Spark
+    * expand the input once per distinct group, in an order hashed from
+    * per-query expression ids, so each run picked one of two generated
+    * sources and a warm re-run compiled anew. The device count is a
+    * `collect_set` size instead: the same number (both skip nulls), over
+    * a set no larger than the fleet.
     */
   def candidateLoadChecks(df: DataFrame): DataFrame =
     df.agg(
@@ -53,7 +60,7 @@ object ExportSink {
       sum(when(col("device_id").isNull || col("timestamp_start").isNull ||
         col("raw_event_hash_id").isNull, 1).otherwise(0))
         .cast("long").as("n_null_critical"),
-      countDistinct(col("device_id")).as("n_devices"),
+      size(collect_set(col("device_id"))).cast("long").as("n_devices"),
       min(col("timestamp_start")).as("min_ts"),
       max(col("timestamp_start")).as("max_ts"))
 }

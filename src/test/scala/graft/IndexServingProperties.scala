@@ -33,12 +33,6 @@ object IndexServingProperties
     .select("doc_id", "text").where(col("text").isNotNull)
   private lazy val emb = graft.Tables.embeddings(spark, sf)
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
-
   private def tmp(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix).toFile
     d.deleteOnExit()
@@ -97,7 +91,8 @@ object IndexServingProperties
             pending += ((f, rows(f))) // immediate collect = sequential
         }
         pending.forall { case (f, truth) => rows(f) == truth }
-      } finally deleteRecursively(new java.io.File(path))
+      } finally graft.queries.DocFixtures.deleteRecursively(
+        new java.io.File(path))
     }
 
   /** The ANN alphabet adds RETRAIN — the verb that swaps the whole
@@ -144,6 +139,7 @@ object IndexServingProperties
             pending += ((f, rows(f))) // immediate collect = sequential
         }
         pending.forall { case (f, truth) => rows(f) == truth }
-      } finally deleteRecursively(new java.io.File(path))
+      } finally graft.queries.DocFixtures.deleteRecursively(
+        new java.io.File(path))
     }
 }

@@ -13,31 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PipelineIntegrationSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  private def writeFixtureCsv(): String = {
-    val sb = new StringBuilder
-    sb.append("timestamp,device_id,state,software_state,system_engaged," +
-      "current_speed,current_position,load_weight,prndl," +
-      "parking_brake_applied,extras\n")
-    // Pit 1 interior point (zone join must label it)
-    val inPit = "\"{33.2721, -97.8380, 250.0}\""
-    val outside = "\"{33.0000, -97.0000, 100.0}\""
-    for (dev <- Seq("lake-605-8-0896", "lake-775g-2-2266"); i <- 0 until 3000) {
-      val us = i.toLong * 500000L // 2 Hz
-      val sec = us / 1000000L
-      val frac = f"${us % 1000000L}%06d"
-      val ts = f"2025-07-30 ${sec / 3600}%02d:${(sec / 60) % 60}%02d:${sec % 60}%02d.$frac+00"
-      // speed profile: stationary block then moving; load steps at i=1500
-      val speed = if (i % 600 < 200) 0.1 else 5.0
-      val lw = if (dev.contains("605")) { if (i < 1500) 10000 else 90000 }
-      else 42000
-      val pos = if (i % 2 == 0) inPit else outside
-      sb.append(s"$ts,$dev,LoadingManeuver,start,t,$speed,$pos,$lw,d,f,\n")
-    }
-    val p = Files.createTempFile("graft-e2e", ".csv")
-    Files.writeString(p, sb.toString)
-    p.toString
-  }
+  import PipelineIntegrationSpec.writeFixtureCsv
 
   test("CSV -> silver -> gold -> export -> CPD -> load checks") {
     val csv = writeFixtureCsv()
@@ -169,5 +145,34 @@ class PipelineIntegrationSpec extends AnyFunSuite {
       assert(out(2000L).contains("s0"))  // carried across the batch gap
       assert(out(4000L).contains("s1"))  // newer state wins; stale ignored
     } finally q.stop()
+  }
+}
+
+object PipelineIntegrationSpec {
+  /** Two devices × 3,000 rows at 2 Hz in the reference's CSV layout:
+    * half the rows inside Pit 1, one device with a load step. */
+  def writeFixtureCsv(): String = {
+    val sb = new StringBuilder
+    sb.append("timestamp,device_id,state,software_state,system_engaged," +
+      "current_speed,current_position,load_weight,prndl," +
+      "parking_brake_applied,extras\n")
+    // Pit 1 interior point (zone join must label it)
+    val inPit = "\"{33.2721, -97.8380, 250.0}\""
+    val outside = "\"{33.0000, -97.0000, 100.0}\""
+    for (dev <- Seq("lake-605-8-0896", "lake-775g-2-2266"); i <- 0 until 3000) {
+      val us = i.toLong * 500000L // 2 Hz
+      val sec = us / 1000000L
+      val frac = f"${us % 1000000L}%06d"
+      val ts = f"2025-07-30 ${sec / 3600}%02d:${(sec / 60) % 60}%02d:${sec % 60}%02d.$frac+00"
+      // speed profile: stationary block then moving; load steps at i=1500
+      val speed = if (i % 600 < 200) 0.1 else 5.0
+      val lw = if (dev.contains("605")) { if (i < 1500) 10000 else 90000 }
+      else 42000
+      val pos = if (i % 2 == 0) inPit else outside
+      sb.append(s"$ts,$dev,LoadingManeuver,start,t,$speed,$pos,$lw,d,f,\n")
+    }
+    val p = Files.createTempFile("graft-e2e", ".csv")
+    Files.writeString(p, sb.toString)
+    p.toString
   }
 }

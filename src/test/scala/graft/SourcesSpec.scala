@@ -112,6 +112,7 @@ class SourcesSpec extends AnyFunSuite {
     assert(chk.getAs[Long]("n_rows") == 2)
     assert(chk.getAs[Long]("n_distinct_hashes") == 2)
     assert(chk.getAs[Long]("n_null_critical") == 0)
+    assert(chk.getAs[Long]("n_devices") == 1)
   }
 
   test("ORC gold export mirrors the parquet layout and round-trips") {

@@ -218,10 +218,8 @@ class StreamingDedupGateSpec extends AnyFunSuite {
     // epoch dir the append just created, keep the band files
     val created = epochs() -- before
     assert(created.size == 1, s"expected one new grams epoch: $created")
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(s"$idx/grams/${created.head}"))
+    graft.queries.DocFixtures.deleteRecursively(
+      new java.io.File(s"$idx/grams/${created.head}"))
     // replay of the SAME micro-batch: the doc has band rows but no
     // grams row, so it cannot self-match — it must be re-admitted and
     // re-appended (grams presence is the self-match signal)

@@ -76,7 +76,7 @@ object CompactionBench {
           f"| compact ${compactSec}%.2f s " +
           f"| ${before.head._2} pairs, unchanged |")
     } finally {
-      rm(new java.io.File(path))
+      graft.queries.DocFixtures.deleteRecursively(new java.io.File(path))
     }
 
     // ---- repeated-maintenance lifetime cost: full vs tiered ----
@@ -129,7 +129,7 @@ object CompactionBench {
           threshold = 0.5).count()
         spark.catalog.clearCache(); graft.operators.Caches.clear()
         (rewritten, epochBytes(p).size, pairs)
-      } finally rm(new java.io.File(p))
+      } finally graft.queries.DocFixtures.deleteRecursively(new java.io.File(p))
     }
     val (fullBytes, fullEpochs, fullPairs) = maintainedRun(tiered = false)
     val (tierBytes, tierEpochs, tierPairs) = maintainedRun(tiered = true)
@@ -144,10 +144,5 @@ object CompactionBench {
         f"| ratio ${fullBytes.toDouble / tierBytes}%.1fx " +
         f"| $fullPairs pairs, identical |")
     spark.stop()
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-    f.delete(): Unit
   }
 }

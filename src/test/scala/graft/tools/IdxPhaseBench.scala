@@ -56,11 +56,7 @@ object IdxPhaseBench {
         }
         ()
       } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
+        graft.queries.DocFixtures.deleteRecursively(new java.io.File(tmp))
         spark.catalog.clearCache(); graft.operators.Caches.clear()
       }
     }

@@ -63,7 +63,7 @@ object ProbeGraceBench {
           graft.operators.Caches.clear()
           (System.nanoTime() - t0) / 1e9
         })
-        deleteRecursively(new java.io.File(dPath))
+        graft.queries.DocFixtures.deleteRecursively(new java.io.File(dPath))
         val emb = spark.read.parquet(s"$dir/embeddings.parquet")
         val aPath = java.nio.file.Files
           .createTempDirectory("graft_grace_ann_").toString
@@ -75,14 +75,8 @@ object ProbeGraceBench {
             k = 10, nprobe = 4).count()
           (System.nanoTime() - t0) / 1e9
         })
-        deleteRecursively(new java.io.File(aPath))
+        graft.queries.DocFixtures.deleteRecursively(new java.io.File(aPath))
       }
     spark.stop()
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles).foreach(_.foreach(deleteRecursively))
-    f.delete()
   }
 }

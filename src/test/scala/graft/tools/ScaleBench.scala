@@ -201,10 +201,7 @@ object ScaleBench {
               col("text")),
           "doc_id", "text", threshold = 0.5, maxBroadcastBatch = 1)
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(tmp))
+        graft.queries.DocFixtures.deleteRecursively(new java.io.File(tmp))
       }
     }
     val pBase = time(probeBackfill, spark, BaseDir, reps)
