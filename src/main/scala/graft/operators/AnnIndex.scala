@@ -403,7 +403,7 @@ object AnnIndex {
         val cached = quantizerCache.get(path)
         if (cached != null && cached._1 == qd) return cached._2
         val centroids = readCentroidsAt(spark, s"$qd/centroids")
-        val m = spark.read.parquet(s"$qd/meta").head()
+        val m = graft.Tables.parquet(spark, s"$qd/meta").head()
         checkContract(path, centroids, m.getAs[String]("metric"),
           m.getAs[Int]("dim"), m.getAs[Int]("nlist"))
         quantizerCache.put(path, (qd, centroids))
@@ -443,7 +443,7 @@ object AnnIndex {
       spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(metaPath)) None
     else {
-      val m = spark.read.parquet(s"$path/meta").head()
+      val m = graft.Tables.parquet(spark, s"$path/meta").head()
       Some((m.getAs[String]("metric"), m.getAs[Int]("dim"),
         m.getAs[Int]("nlist")))
     }
@@ -981,7 +981,7 @@ object AnnIndex {
       // dropping it (hand-edit guard); an incomplete mint (no
       // _SUCCESS — the pre-gen rebuildFrom crash state) is residue
       if (fs.exists(new Path(s"$path/meta/_SUCCESS"))) {
-        val m = spark.read.parquet(s"$path/meta").head()
+        val m = graft.Tables.parquet(spark, s"$path/meta").head()
         checkContract(path, centroids, m.getAs[String]("metric"),
           m.getAs[Int]("dim"), m.getAs[Int]("nlist"))
       }

@@ -1029,21 +1029,30 @@ object DedupIndex {
       .select("id", "gram_hashes")
     val bandsT = liveTable(spark, fs, path, "bands", retired,
       bandsSchema(meta, epochLayout = true))
-    // broadcast-vs-keyed decision from a BOUNDED count: counting at
-    // most maxBroadcastBatch+1 rows decides "count <= max" exactly
-    // (limit(max+1) returns max+1 rows iff the batch exceeds max), but
-    // the per-partition LocalLimit stops each scan task after max+1
-    // rows — a 100 TB backfill batch no longer pays one extra FULL
-    // pass just to learn it is too big to broadcast (guide §1.2)
+    // broadcast-vs-keyed decision from a BOUNDED count: each scan task
+    // stops after max+1 rows, so a 100 TB backfill batch pays no extra
+    // FULL pass just to learn it is too big to broadcast (guide §1.2)
     val probeLimit = if (maxBroadcastBatch >= Int.MaxValue - 1) Int.MaxValue
       else (maxBroadcastBatch + 1).toInt
-    if (batch.select(lit(1)).limit(probeLimit).count() <= maxBroadcastBatch)
+    if (boundedCount(batch, probeLimit) <= maxBroadcastBatch)
       probeBroadcast(gramsT, bandsT, batch, idCol, textCol, threshold,
         shingler, meta)
     else
       probeKeyed(gramsT, bandsT, batch, idCol, textCol, threshold,
         shingler, meta)
   }
+
+  /** The rows of `df`, counting at most `limit` in each partition. The
+    * sum is exact while every partition holds fewer than `limit` rows,
+    * and at least `limit` once one does, so `boundedCount(df, max + 1)
+    * <= max` decides `count <= max` exactly. The plan is a bare
+    * projection whose generated code is the same on every call, where
+    * `limit(n).count()` names its LocalLimit counter from a JVM-wide id
+    * and so compiles two new classes per call. */
+  private def boundedCount(df: DataFrame, limit: Int): Long =
+    df.select(lit(1)).queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(rows.take(limit).size.toLong))
+      .fold(0L)(_ + _)
 
   /** The retirement record a new plan must exclude: epochs carrying a
     * [[RetiredMarker]] in either table, plus epochs named by any
@@ -1274,8 +1283,8 @@ object DedupIndex {
   /** METADATA cache for [[readMeta]] (never row data): one probe/append
     * cycle reads the 1-row meta parquet 5–10 times, and each read is a
     * full Spark job — fixed scheduling cost that dwarfs the row. The
-    * cache key is the meta directory's file fingerprint (name, mtime,
-    * length of every file), checked with ONE listStatus per call — a
+    * cache key is the meta directory's [[graft.Tables.fingerprint]]
+    * (name, mtime, length of every entry), ONE listStatus per call — a
     * rebuilt or migrated meta mints new files (uuid-staged rename or a
     * fresh overwrite), so any writer invalidates the entry. Bounded: one
     * tiny entry per index path served by this JVM. */
@@ -1284,14 +1293,7 @@ object DedupIndex {
       (Seq[(String, Long, Long)], Meta)]()
 
   private def readMeta(spark: SparkSession, path: String): Meta = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fp: Seq[(String, Long, Long)] =
-      Option(fs.listStatus(dir))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-        .filter(_.isFile)
-        .map(s => (s.getPath.getName, s.getModificationTime, s.getLen))
-        .sortBy(_._1).toSeq
+    val fp = graft.Tables.fingerprint(spark, s"$path/meta")
     val cached = metaCache.get(path)
     if (cached != null && cached._1 == fp) return cached._2
     val df = spark.read.parquet(s"$path/meta")

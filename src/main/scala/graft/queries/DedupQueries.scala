@@ -1125,7 +1125,7 @@ ORDER BY id_a, id_b"""
           .getFileSystem(s.sparkContext.hadoopConfiguration)
         val gramsDir = new org.apache.hadoop.fs.Path(s"$tmp/grams")
         val flatTmp = s"${tmp}_flatgrams"
-        s.read.parquet(s"$tmp/grams").select("id", "gram_hashes")
+        graft.Tables.parquet(s, s"$tmp/grams").select("id", "gram_hashes")
           .write.parquet(flatTmp)
         fs.delete(gramsDir, true)
         require(fs.rename(new org.apache.hadoop.fs.Path(flatTmp),

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import graft.operators.{Caches, Cpd, FeatureEngineering, TelemetryTransform}
+import graft.operators.{Caches, Cpd, DedupIndex, FeatureEngineering,
+  TelemetryTransform}
 import graft.sources.{ExportSink, TelemetryCsv}
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.functions.col
@@ -16,8 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * a per-run value written into the source (`QueryTimestampExpression`),
   * AQE's stage numbers in class names (`GraftSession.configure`), a
   * distinct-aggregate order hashed from fresh expression ids
-  * (`ExportSink.candidateLoadChecks`) or a join strategy AQE picks by
-  * which stage finishes first (`Cpd.candidateEvents`). The counts are
+  * (`ExportSink.candidateLoadChecks`), a join strategy AQE picks by
+  * which stage finishes first (`Cpd.candidateEvents`) or an operator
+  * that names its generated state from a JVM-wide id (Spark's LocalLimit
+  * counter, which `DedupIndex.probe`'s bounded count avoids). The counts are
   * JVM-wide, so nothing else may run meanwhile. */
 class CodegenReuseSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -66,6 +69,21 @@ class CodegenReuseSpec extends AnyFunSuite {
       spark.catalog.clearCache(); Caches.clear()
     }
     assert(warm == 0, s"the warm run compiled $warm classes, the cold one $cold")
+  }
+
+  test("a warm DedupIndex probe compiles no classes") {
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+      .where(col("text").isNotNull)
+    val path = Files.createTempDirectory("graft-codegen-probe").toString
+    try {
+      DedupIndex.build(docs, "doc_id", "text", path)
+      val batch = docs.where(col("doc_id") % 5 === 0)
+      val (cold, warm) = coldThenWarm {
+        assert(DedupIndex.probe(spark, path, batch, "doc_id", "text")
+          .collect().nonEmpty)
+      }
+      assert(warm == 0, s"the warm probe compiled $warm classes, the cold one $cold")
+    } finally queries.DocFixtures.deleteRecursively(new java.io.File(path))
   }
 
   test("the silver projection compiles once; each run gets its own ingested_at") {

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * plan with the engine that ships), and operators take no settings from
   * the environment (executors on a cluster do not inherit the driver's
   * environment, so an env read there is a local-only switch), and no
-  * code outside `GraftSession` changes the shared session's settings. A/B
+  * code outside `GraftSession` changes the shared session's settings, and
+  * queries read their parquet tables through `Tables`' schema cache. A/B
   * comparisons are made across commits with `python3 perfbench/run.py`. */
 class EngineConfigGateSpec extends AnyFunSuite {
 
@@ -45,5 +46,13 @@ class EngineConfigGateSpec extends AnyFunSuite {
     val found = offenders("src/main/scala", """\bconf\s*\.\s*(set|unset)\b""".r,
       allowed = Set("GraftSession.scala"))
     assert(found.isEmpty, s"session settings changed outside GraftSession: $found")
+  }
+
+  test("queries read parquet tables only through the Tables schema cache") {
+    // a bare read infers the schema with a Spark job on every call;
+    // Tables.load / Tables.parquet reuse the inferred schema
+    val found = offenders("src/main/scala/graft/queries",
+      """\bread\s*\.\s*parquet\s*\(""".r)
+    assert(found.isEmpty, s"read through Tables.load or Tables.parquet: $found")
   }
 }
