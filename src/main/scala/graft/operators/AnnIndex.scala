@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.index.EpochLayout
+
 /** Persisted IVF index: build ONCE, probe many times — the serving
   * shape a 100 TB vector corpus actually needs. [[SimilaritySearch.ivfTopK]]
   * re-trains its quantizer and re-assigns the whole corpus per call,
@@ -26,24 +28,16 @@ import org.apache.spark.sql.functions._
   * scan never touches the other nlist − nprobe directories, which is
   * the entire point at 100 TB: disk layout IS the index).
   *
-  * SNAPSHOT-ISOLATED maintenance (the [[DedupIndex.compact]]
-  * discipline, extended to the quantizer itself): every verb that
-  * replaces data — [[compact]] merging small epochs, [[retrain]]
-  * replacing the whole generation — stages COPIES, commits by an
-  * atomic rename (the epoch dir; the `_CURRENT` pointer), RETIRES what
-  * it superseded with a marker instead of deleting it, and leaves the
-  * physical reclaim to [[vacuum]] under an operator-chosen grace (the
-  * Iceberg/Delta expire-snapshots shape; Lucene's segment commits are
-  * the same discipline one level down). Consequently a probe planned
-  * at ANY point — before, during, after, or after a CRASH of — a
-  * compaction or a retrain serves a consistent index state; there is
-  * no `_COMPACTING` fail-fast window any more (that marker now guards
-  * only un-migrated legacy trees). The one contract left for the
-  * operator is `vacuum` grace ≥ the longest-running probe, and that
-  * maintenance verbs (compact / retrain / vacuum) and [[append]]s
-  * serialize among THEMSELVES — probes alone are lock-free. An append
-  * racing a retrain is detected and fails loudly after the fact
-  * rather than losing rows silently (see [[append]]).
+  * SNAPSHOT-ISOLATED maintenance: the [[graft.index.EpochLayout]]
+  * lifecycle, extended to the quantizer itself — [[compact]] merges
+  * small epochs under it, and [[retrain]] replaces the whole
+  * generation the same way one level up, committing by the atomic
+  * `_CURRENT` pointer swap. A probe planned at ANY point — before,
+  * during, after, or after a CRASH of — a compaction or a retrain
+  * serves a consistent index state; `_COMPACTING` guards only
+  * un-migrated legacy trees. An append racing a retrain is detected
+  * and fails loudly after the fact rather than losing rows silently
+  * (see [[append]]).
   *
   * New batches append via [[append]] WITHOUT retraining: vectors are
   * assigned to the current generation's centroids and committed as a
@@ -88,6 +82,12 @@ object AnnIndex {
     * pointer is touched). */
   val CurrentPointer = "_CURRENT"
 
+  /** LEGACY marker file a pre-generation compaction left at the index
+    * root: that protocol moved the only copy of the vectors in place,
+    * so probes of an un-migrated legacy tree fail fast on it
+    * ([[rebuildFrom]] migrates). */
+  val CompactingMarker = "_COMPACTING"
+
   private def fsFor(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -109,7 +109,7 @@ object AnnIndex {
   }
 
   private def readPointer(fs: FileSystem, p: Path): String = {
-    val lines = DedupIndex.readLines(fs, p)
+    val lines = EpochLayout.readLines(fs, p)
     require(lines.nonEmpty,
       s"empty generation pointer at $p — restore the index tree")
     lines.head
@@ -146,15 +146,14 @@ object AnnIndex {
     // overwrite: clear every v3 AND legacy artifact a prior index (or
     // a crashed build/maintenance pass) could have left
     Seq("assignments", "meta", "centroids", "moments",
-        DedupIndex.ReadersDir)
+        EpochLayout.ReadersDir)
       .foreach(sub => fs.delete(new Path(s"$path/$sub"), true))
     fs.delete(new Path(path, CurrentPointer), false)
     fs.delete(new Path(path, CurrentPointer + ".tmp"), false)
-    fs.delete(new Path(path, DedupIndex.CompactingMarker), false)
+    fs.delete(new Path(path, CompactingMarker), false)
     Seq("quantizer-*", "assignments_compact-*", "assignments_staging-*",
         "assignments_retrain-*").foreach { pat =>
-      Option(fs.globStatus(new Path(s"$path/$pat")))
-        .getOrElse(Array.empty[FileStatus])
+      EpochLayout.glob(fs, s"$path/$pat")
         .foreach(s => fs.delete(s.getPath, true))
     }
     val c = corpus.select(col(idCol).as("id"),
@@ -257,7 +256,7 @@ object AnnIndex {
       s"index at $path has no frozen moments — it predates the drift " +
         "instrument (or was migrated): run AnnIndex.freezeMoments to " +
         "establish the reference, then score batches against it")
-    val ref = spark.read.parquet(momentsPath.toString)
+    val ref = graft.Tables.parquet(spark, momentsPath.toString)
     val storedScale = ref.select("scale").limit(1).collect().headOption
       .getOrElse(throw new IllegalArgumentException(
         s"moments table at $path is empty — re-run freezeMoments"))
@@ -338,13 +337,9 @@ object AnnIndex {
   }
 
   private def commitEpoch(fs: FileSystem, path: String, gen: String,
-      epoch: String, stage: Path): Path = {
-    val dest = new Path(s"${genAssignDir(path, gen)}/epoch=$epoch")
-    fs.mkdirs(dest.getParent)
-    require(fs.rename(stage, dest),
-      s"failed to commit assignments epoch $stage -> $dest")
-    dest
-  }
+      epoch: String, stage: Path): Path =
+    EpochLayout.commit(fs, stage,
+      new Path(s"${genAssignDir(path, gen)}/epoch=$epoch"))
 
   private def requireV3(fs: FileSystem, path: String,
       op: String): String =
@@ -451,7 +446,7 @@ object AnnIndex {
 
   private def readCentroidsAt(spark: SparkSession,
       dir: String): Array[Array[Double]] =
-    spark.read.parquet(dir)
+    graft.Tables.parquet(spark, dir)
       .orderBy("cell")
       .collect()
       .map(_.getSeq[Double](1).toArray)
@@ -466,45 +461,12 @@ object AnnIndex {
   // live-set resolution (the probe-side half of snapshot isolation)
   // ------------------------------------------------------------------
 
-  private def epochDirsOf(fs: FileSystem, path: String,
-      gen: String): Seq[FileStatus] = {
-    val dir = new Path(genAssignDir(path, gen))
-    if (!fs.exists(dir)) Seq.empty
-    else Option(fs.listStatus(dir))
-      .getOrElse(Array.empty[FileStatus])
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("epoch=")).toSeq
-  }
-
-  /** The retirement record a new plan must exclude: epochs carrying a
-    * [[DedupIndex.RetiredMarker]], plus epochs named by a committed
-    * compaction's still-riding `_EPOCHS` manifest (the rename-then-mark
-    * window — treating the manifest as retirement makes that window
-    * need no lock: without it, a probe planned after the rename but
-    * before the markers land would read each merged id twice). */
-  private def retiredEpochs(fs: FileSystem, path: String,
-      gen: String): Set[String] = {
-    val eds = epochDirsOf(fs, path, gen)
-    val byMarker = eds.filter(d => fs.exists(
-        new Path(d.getPath, DedupIndex.RetiredMarker)))
-      .map(_.getPath.getName.stripPrefix("epoch="))
-    val byManifest = eds.flatMap { d =>
-      val m = new Path(d.getPath, "_EPOCHS")
-      if (fs.exists(m))
-        DedupIndex.readLines(fs, m)
-          .map(_.split("/").last.stripPrefix("epoch="))
-      else Seq.empty
-    }
-    (byMarker ++ byManifest).toSet
-  }
-
+  /** The live epoch directories of generation `gen`
+    * ([[EpochLayout.snapshot]]); manifest lines name `gen=<G>/epoch=<E>`. */
   private def liveEpochDirs(fs: FileSystem, path: String,
-      gen: String): Seq[Path] = {
-    val retired = retiredEpochs(fs, path, gen)
-    epochDirsOf(fs, path, gen)
-      .filterNot(d => retired(d.getPath.getName.stripPrefix("epoch=")))
-      .map(_.getPath)
-  }
+      gen: String): Seq[Path] =
+    EpochLayout.snapshot(fs, Seq(new Path(genAssignDir(path, gen))),
+      _.split("/").last.stripPrefix("epoch=")).live(0)
 
   private def liveAssignmentsV3(spark: SparkSession, fs: FileSystem,
       path: String, gen: String): DataFrame = {
@@ -545,44 +507,22 @@ object AnnIndex {
     * ANALYZE + index builds once bulk loading completes), at the
     * vector table.
     *
-    * TIERED by `maxEpochBytes` exactly like [[DedupIndex.compact]]
-    * (shared [[DedupIndex.tieredSelect]] policy — see that scaladoc
-    * for the O(log) lifetime-I/O and live-epoch bounds); the default
-    * (`Long.MaxValue`) merges everything — the one-shot "defragment
-    * this index" verb.
-    *
-    * Protocol (pure data movement — vectors and cell routes are
-    * byte-identical before and after; SNAPSHOT-ISOLATED, the
-    * [[DedupIndex.compact]] shape):
-    *
-    *  1. [[recover]] any crashed maintenance first;
-    *  2. select the live epochs to merge (tier + promotion);
-    *     nothing selected, or one already-at-plan epoch → done;
-    *  3. read ONLY the selected epoch dirs (explicit paths — retired
-    *     epochs cannot leak in), range-partition on (cell, id) to the
-    *     byte-planned file count, write cell-partitioned COPIES to an
-    *     `assignments_compact-<uuid>` stage;
-    *  4. write the `_EPOCHS` manifest (the merged epochs) — ATOMIC via
-    *     temp + rename, because the manifest IS the stage's completion
-    *     marker and a trusted partial manifest would leave unlisted
-    *     epochs alive beside their stage copies, serving duplicates;
-    *  5. commit: rename the stage to `…/epoch=<stage-uuid>` (the
-    *     manifest rides inside), THEN mark each merged epoch retired
-    *     and drop the manifest. A probe planned between the rename and
-    *     the marking reads the manifest out of the committed epoch and
-    *     excludes the merged set itself — no double-counted ids;
-    *  6. unless `retainRetired`, [[vacuum]] with zero grace — retired
-    *     dirs delete immediately, the exclusively-owned-index
-    *     configuration (batch pipelines, the streaming ingest).
-    *     `retainRetired = true` + scheduled [[vacuum]](grace ≥ the
-    *     longest probe) is the serving configuration: in-flight probes
-    *     survive the whole maintenance cycle.
-    *
-    * Epochs appended mid-pass are not in the manifest and survive
-    * commit untouched; the recovery GC's age gate
-    * ([[DedupIndex.OrphanGraceMillis]]) protects their staging dirs.
-    * Maintenance verbs serialize among themselves — probes alone are
-    * lock-free. */
+    * The lifecycle (stage → atomic `_EPOCHS` manifest → rename → mark →
+    * graced vacuum under reader leases), the crash-recovery rules and
+    * the tiered selection by `maxEpochBytes` are the shared ones in
+    * [[graft.index.EpochLayout]]; the default (`Long.MaxValue`) merges
+    * everything — the one-shot "defragment this index" verb. What is
+    * specific to this index: [[recover]] runs first; only the CURRENT
+    * generation's live epochs are merged; the selected epoch dirs are
+    * read by explicit path, range-partitioned on (cell, id) to the
+    * byte-planned file count and written cell-partitioned to an
+    * `assignments_compact-<uuid>` stage whose manifest lines name
+    * `gen=<G>/epoch=<E>`, so recovery can tell a stage of a superseded
+    * generation (discarded) from one of the current generation
+    * (committed). Vectors and cell routes are byte-identical before and
+    * after. `retainRetired = true` + a scheduled [[vacuum]](grace ≥
+    * the longest probe) is the serving configuration; the default
+    * vacuums at once with zero grace. */
   def compact(spark: SparkSession, path: String,
       targetFiles: Int = 0,
       maxEpochBytes: Long = Long.MaxValue,
@@ -596,42 +536,25 @@ object AnnIndex {
     val gen = requireV3(fs, path, "compact")
     recover(fs, path)
     def finish(): Unit = if (!retainRetired) vacuum(spark, path, 0L)
-    val stats = liveEpochDirs(fs, path, gen)
-      .map(d => (d.getName.stripPrefix("epoch="),
-        fs.getContentSummary(d).getLength))
-      .sortBy(_._2)
-    require(stats.nonEmpty,
+    val live = liveEpochDirs(fs, path, gen)
+    require(live.nonEmpty,
       s"index at $path has no live assignment epochs — nothing to " +
         "compact")
-    val selected = DedupIndex.tieredSelect(stats, maxEpochBytes)
+    val selected = EpochLayout.tieredSelect(EpochLayout.sizes(fs, live),
+      maxEpochBytes)
     if (selected.isEmpty) { // every epoch already above the tier
       finish()
       return
     }
-    // file count planned from the SNAPSHOT's real bytes unless pinned
-    // (the DedupIndex.compactionFilesFor rationale: a constant makes
-    // TB files at 100 TB and collapses the rewrite's parallelism)
     val nFiles =
       if (targetFiles > 0) targetFiles
-      else DedupIndex.compactionFilesFor(selected.map(_._2).sum)
-    if (selected.length == 1) {
-      val sole = new Path(
-        s"${genAssignDir(path, gen)}/epoch=${selected.head._1}")
-      // the achievable floor for a cell-partitioned epoch is one file
-      // per non-empty cell — a byte plan below that is unreachable by
-      // ANY rewrite, so gating on nFiles alone would re-rewrite the
-      // same epoch every maintenance cycle
-      val cellFloor = Option(fs.listStatus(sole))
-        .getOrElse(Array.empty[FileStatus])
-        .count(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
-      if (DedupIndex.dataFileCountRecursive(fs, sole)
-          <= math.max(nFiles, cellFloor)) {
-        // one small epoch already at its planned file count: merging
-        // it with itself would re-rewrite the same bytes every
-        // maintenance cycle — the exact cost the tier exists to avoid
-        finish()
-        return
-      }
+      else EpochLayout.compactionFilesFor(selected.map(_._2).sum)
+    // a lone epoch already at plan (floor: one file per cell) stays
+    if (selected.length == 1 && EpochLayout.atPlannedFiles(fs,
+        new Path(s"${genAssignDir(path, gen)}/epoch=${selected.head._1}"),
+        nFiles)) {
+      finish()
+      return
     }
     val stageUuid = java.util.UUID.randomUUID().toString
     val stage = new Path(path, s"assignments_compact-$stageUuid")
@@ -645,58 +568,42 @@ object AnnIndex {
       .select("id", "v", "cell")
       .repartitionByRange(nFiles, col("cell"), col("id"))
       .write.partitionBy("cell").parquet(stage.toString)
-    DedupIndex.writeManifest(fs, new Path(stage, "_EPOCHS"),
+    EpochLayout.writeManifest(fs,
+      new Path(stage, EpochLayout.EpochsManifest),
       selected.map(e => s"gen=$gen/epoch=${e._1}"))
     commitCompactStage(fs, path, stage)
     finish()
   }
 
+  /** The generation a compact stage's manifest names. */
+  private def stageGen(fs: FileSystem, stage: Path): String =
+    EpochLayout.readLines(fs, new Path(stage, EpochLayout.EpochsManifest))
+      .head.split("/").head.stripPrefix("gen=")
+
   /** Commit a COMPLETE compact stage (has `_EPOCHS`): rename it in as
-    * one new epoch of its generation — the manifest rides inside, so
-    * from this instant new probes exclude the merged epochs by
-    * manifest — then finish the retirement marking. Idempotent: a
-    * re-run after any crash point finishes the rename and/or the
-    * marking. */
+    * one new epoch of its generation, then finish the retirement
+    * marking. Idempotent: a re-run after any crash point finishes the
+    * rename and/or the marking. */
   private def commitCompactStage(fs: FileSystem, path: String,
       stage: Path): Unit = {
     val uuid = stage.getName.stripPrefix("assignments_compact-")
-    val lines = DedupIndex.readLines(fs, new Path(stage, "_EPOCHS"))
-    val gen = lines.head.split("/").head.stripPrefix("gen=")
-    val dest = new Path(s"${genAssignDir(path, gen)}/epoch=$uuid")
-    fs.mkdirs(dest.getParent)
-    require(fs.rename(stage, dest),
-      s"compact: failed to commit stage $stage -> $dest")
+    EpochLayout.commit(fs, stage,
+      new Path(s"${genAssignDir(path, stageGen(fs, stage))}/epoch=$uuid"))
     completeRetirement(fs, path)
   }
 
-  /** Finish any interrupted retirement marking: a committed epoch
-    * still carrying its `_EPOCHS` manifest names epochs whose markers
-    * may not all be down yet — touch them (idempotent) and drop the
-    * manifest. New probes treat manifest-named epochs as retired even
-    * before this runs, so the window needs no lock. */
-  private def completeRetirement(fs: FileSystem, path: String): Unit =
-    Option(fs.globStatus(new Path(s"$path/assignments/gen=*")))
-      .getOrElse(Array.empty[FileStatus])
-      .filter(_.isDirectory)
-      .foreach { gd =>
-        Option(fs.listStatus(gd.getPath))
-          .getOrElse(Array.empty[FileStatus])
-          .filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith("epoch="))
-          .foreach { d =>
-            val manifest = new Path(d.getPath, "_EPOCHS")
-            if (fs.exists(manifest)) {
-              DedupIndex.readLines(fs, manifest).foreach { rel =>
-                retireDir(fs, new Path(s"$path/assignments/$rel"))
-              }
-              fs.delete(manifest, false)
-            }
-          }
-      }
+  /** The `gen=` directories under the assignments table. */
+  private def genDirs(fs: FileSystem, path: String): Seq[FileStatus] =
+    EpochLayout.children(fs, new Path(s"$path/assignments"))
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
 
-  private def retireDir(fs: FileSystem, dir: Path): Unit =
-    if (fs.exists(dir))
-      DedupIndex.touch(fs, new Path(dir, DedupIndex.RetiredMarker))
+  /** Finish any interrupted retirement marking in every generation: a
+    * riding manifest names `gen=<G>/epoch=<E>` dirs to retire. */
+  private def completeRetirement(fs: FileSystem, path: String): Unit =
+    genDirs(fs, path).foreach { gd =>
+      EpochLayout.completeRetirement(fs, gd.getPath)(rel =>
+        Seq(new Path(s"$path/assignments/$rel")))
+    }
 
   /** Retire every generation that is neither current nor already
     * retired — the uniform crash-residue rule: a superseded generation
@@ -707,12 +614,10 @@ object AnnIndex {
     * harmlessly). */
   private def retireStaleGens(fs: FileSystem, path: String): Unit =
     currentGen(fs, path).foreach { cur =>
-      Option(fs.globStatus(new Path(s"$path/quantizer-*")))
-        .getOrElse(Array.empty[FileStatus])
+      EpochLayout.glob(fs, s"$path/quantizer-*")
         .filter(_.isDirectory)
         .filter(_.getPath.getName.stripPrefix("quantizer-") != cur)
-        .foreach(s => DedupIndex.touch(fs,
-          new Path(s.getPath, DedupIndex.RetiredMarker)))
+        .foreach(s => EpochLayout.retire(fs, s.getPath))
     }
 
   /** Complete or discard residue of any crashed maintenance pass — a
@@ -720,11 +625,10 @@ object AnnIndex {
     * probe-consistent MEANWHILE (the snapshot-isolation point):
     *  - a crashed pointer swap finishes (readers were already served
     *    by the complete `.tmp`);
-    *  - retrain / append staging dirs older than the
-    *    [[DedupIndex.OrphanGraceMillis]] age gate are discarded
-    *    (nothing is retired before their commit points, so discarding
-    *    loses nothing; the gate protects an IN-FLIGHT append's stage
-    *    from a concurrent compact's recovery);
+    *  - retrain / append staging dirs past the orphan age gate are
+    *    discarded (nothing is retired before their commit points, so
+    *    discarding loses nothing; the gate protects an IN-FLIGHT
+    *    append's stage from a concurrent compact's recovery);
     *  - a compact stage WITH `_EPOCHS` whose generation is still
     *    current is committed (salvaged); one from a superseded
     *    generation, or without a manifest, is discarded;
@@ -739,28 +643,18 @@ object AnnIndex {
         s"failed to finish the crashed pointer swap at $path")
     else if (fs.exists(tmp)) fs.delete(tmp, false)
     val gen = currentGen(fs, path)
-    val cutoff = System.currentTimeMillis() -
-      DedupIndex.OrphanGraceMillis
+    def glob(pattern: String) = EpochLayout.glob(fs, s"$path/$pattern")
     Seq("assignments_retrain-*", "assignments_staging-*")
-      .foreach { pat =>
-        Option(fs.globStatus(new Path(s"$path/$pat")))
-          .getOrElse(Array.empty[FileStatus])
-          .filter(_.getModificationTime <= cutoff)
-          .foreach(s => fs.delete(s.getPath, true))
-      }
-    Option(fs.globStatus(new Path(s"$path/assignments_compact-*")))
-      .getOrElse(Array.empty[FileStatus])
-      .foreach { st =>
-        val m = new Path(st.getPath, "_EPOCHS")
-        if (fs.exists(m)) {
-          val stageGen = DedupIndex.readLines(fs, m)
-            .head.split("/").head.stripPrefix("gen=")
-          if (gen.contains(stageGen))
-            commitCompactStage(fs, path, st.getPath)
-          else fs.delete(st.getPath, true)
-        } else if (st.getModificationTime <= cutoff)
-          fs.delete(st.getPath, true)
-      }
+      .flatMap(glob).filter(EpochLayout.pastOrphanGrace)
+      .foreach(s => fs.delete(s.getPath, true))
+    glob("assignments_compact-*").foreach { st =>
+      if (fs.exists(new Path(st.getPath, EpochLayout.EpochsManifest))) {
+        if (gen.contains(stageGen(fs, st.getPath)))
+          commitCompactStage(fs, path, st.getPath)
+        else fs.delete(st.getPath, true)
+      } else if (EpochLayout.pastOrphanGrace(st))
+        fs.delete(st.getPath, true)
+    }
     completeRetirement(fs, path)
     retireStaleGens(fs, path)
     // an assignments generation with NO quantizer dir can only arise
@@ -769,31 +663,22 @@ object AnnIndex {
     // dir to land its epoch, then failed loudly) — invisible to every
     // probe (not the current generation) but unreclaimable through
     // the quantizer-marker path. Age-gated like all residue GC.
-    val quantGens = Option(fs.globStatus(new Path(s"$path/quantizer-*")))
-      .getOrElse(Array.empty[FileStatus])
+    val quantGens = glob("quantizer-*")
       .map(_.getPath.getName.stripPrefix("quantizer-")).toSet
-    Option(fs.globStatus(new Path(s"$path/assignments/gen=*")))
-      .getOrElse(Array.empty[FileStatus])
-      .filter(s => s.isDirectory &&
-        !quantGens(s.getPath.getName.stripPrefix("gen=")) &&
+    genDirs(fs, path)
+      .filter(s => !quantGens(s.getPath.getName.stripPrefix("gen=")) &&
         !gen.contains(s.getPath.getName.stripPrefix("gen=")) &&
-        s.getModificationTime <= cutoff)
+        EpochLayout.pastOrphanGrace(s))
       .foreach(s => fs.delete(s.getPath, true))
   }
 
-  /** Physically delete retired epochs and retired GENERATIONS older
-    * than `olderThanMillis` (marker mtime) — the disk-reclaim half of
-    * the snapshot-isolation contract: [[compact]] and [[retrain]] only
-    * ever MARK what they supersede, so probes planned before a
-    * maintenance pass keep working; vacuum is where the files actually
-    * go away, and the grace is the operator's promise about the
-    * longest-running probe (the Iceberg/Delta expire-snapshots shape;
-    * `graft.tools.ProbeGraceBench` measures the plan-to-finish floor
-    * to set it against — SCALING.md "vacuum-grace floor" table).
-    * A retired generation reclaims as one unit: its whole assignments
-    * subtree plus its quantizer dir. Runs [[recover]] first, so it is
-    * safe to call on a crashed tree. Zero grace (the [[compact]]
-    * default's internal call) reclaims everything retired. */
+  /** Physically delete retired epochs and retired GENERATIONS — the
+    * [[graft.index.EpochLayout]] vacuum: a retired directory goes once
+    * its marker is older than `olderThanMillis` and no live reader
+    * lease predates it (zero grace, the [[compact]] default's internal
+    * call, reclaims everything retired). A retired generation reclaims
+    * as one unit: its whole assignments subtree plus its quantizer dir.
+    * Runs [[recover]] first, so it is safe to call on a crashed tree. */
   def vacuum(spark: SparkSession, path: String,
       olderThanMillis: Long = 0L): Unit = {
     require(olderThanMillis >= 0,
@@ -801,40 +686,17 @@ object AnnIndex {
     val fs = fsFor(spark, path)
     requireV3(fs, path, "vacuum")
     recover(fs, path)
-    val cutoff = System.currentTimeMillis() - olderThanMillis
-    // graced vacuums honor reader leases exactly like the dedup twin
-    // ([[DedupIndex.ReadersDir]]): reclaim only what every live lease
-    // postdates; zero grace is the forced exclusive-ownership path
-    val oldestLease =
-      if (olderThanMillis == 0) None
-      else DedupIndex.oldestLiveLease(fs, path)
-    def reclaimable(marker: Path): Boolean =
-      fs.exists(marker) && {
-        val mt = fs.getFileStatus(marker).getModificationTime
-        mt <= cutoff && oldestLease.forall(_ > mt)
-      }
-    Option(fs.globStatus(new Path(s"$path/assignments/gen=*")))
-      .getOrElse(Array.empty[FileStatus])
-      .filter(_.isDirectory)
-      .foreach { gd =>
-        Option(fs.listStatus(gd.getPath))
-          .getOrElse(Array.empty[FileStatus])
-          .filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith("epoch="))
-          .foreach { d =>
-            if (reclaimable(new Path(d.getPath, DedupIndex.RetiredMarker)))
-              fs.delete(d.getPath, true)
-          }
-      }
-    Option(fs.globStatus(new Path(s"$path/quantizer-*")))
-      .getOrElse(Array.empty[FileStatus])
-      .filter(_.isDirectory)
+    val reclaim = EpochLayout.reclaimable(fs, new Path(path),
+      olderThanMillis)
+    genDirs(fs, path)
+      .flatMap(gd => EpochLayout.epochDirs(fs, gd.getPath))
+      .map(_.getPath).filter(reclaim).foreach(fs.delete(_, true))
+    EpochLayout.glob(fs, s"$path/quantizer-*")
+      .filter(_.isDirectory).map(_.getPath).filter(reclaim)
       .foreach { q =>
-        if (reclaimable(new Path(q.getPath, DedupIndex.RetiredMarker))) {
-          val g = q.getPath.getName.stripPrefix("quantizer-")
-          fs.delete(new Path(genAssignDir(path, g)), true)
-          fs.delete(q.getPath, true)
-        }
+        val g = q.getName.stripPrefix("quantizer-")
+        fs.delete(new Path(genAssignDir(path, g)), true)
+        fs.delete(q, true)
       }
   }
 
@@ -894,7 +756,7 @@ object AnnIndex {
     val newGen = java.util.UUID.randomUUID().toString
     writeQuantizer(spark, path, newGen, centroids)
     val stage = new Path(path, s"assignments_retrain-$newGen")
-    val nFiles = DedupIndex.compactionFilesFor(
+    val nFiles = EpochLayout.compactionFilesFor(
       liveDirs.map(d => fs.getContentSummary(d).getLength).sum)
     assignCells(corpus, centroids, path).select("id", "v", "cell")
       .repartitionByRange(nFiles, col("cell"), col("id"))
@@ -907,7 +769,7 @@ object AnnIndex {
     commitEpoch(fs, path, newGen,
       java.util.UUID.randomUUID().toString, stage)
     commitPointer(fs, path, newGen)
-    retireDir(fs, new Path(quantDir(path, gen)))
+    EpochLayout.retire(fs, new Path(quantDir(path, gen)))
     if (!retainRetired) vacuum(spark, path, 0L)
   }
 
@@ -946,19 +808,18 @@ object AnnIndex {
     // (delete manifest files, move stage files in); without one it is
     // residue. Only reachable from pre-v3 trees — v3 never writes
     // _FILES stages.
-    Option(fs.globStatus(new Path(s"$path/assignments_compact-*")))
-      .getOrElse(Array.empty[FileStatus])
+    EpochLayout.glob(fs, s"$path/assignments_compact-*")
       .foreach { st =>
         if (fs.exists(new Path(st.getPath, "_FILES")))
           legacyCommitAssignmentsStage(fs,
             new Path(s"$path/assignments"), st.getPath)
         else fs.delete(st.getPath, true)
       }
-    fs.delete(new Path(path, DedupIndex.CompactingMarker), false)
+    fs.delete(new Path(path, CompactingMarker), false)
     // the generation uuid: reuse a crashed migration's sole quantizer
     // dir so a re-run finishes the same move plan
-    val qdirs = Option(fs.globStatus(new Path(s"$path/quantizer-*")))
-      .getOrElse(Array.empty[FileStatus]).filter(_.isDirectory)
+    val qdirs = EpochLayout.glob(fs, s"$path/quantizer-*")
+      .filter(_.isDirectory)
     require(qdirs.length <= 1,
       s"index at $path has ${qdirs.length} quantizer dirs and no " +
         "generation pointer — not a crashed migration; restore the " +
@@ -1001,21 +862,15 @@ object AnnIndex {
     // flat cell dirs → one gen/epoch (a re-run reuses the sole
     // existing epoch so every cell lands under the one shared unit)
     val genDir = new Path(genAssignDir(path, gen))
-    val existingEpochs =
-      (if (fs.exists(genDir)) Option(fs.listStatus(genDir))
-         .getOrElse(Array.empty[FileStatus])
-       else Array.empty[FileStatus])
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("epoch="))
+    val existingEpochs = EpochLayout.epochDirs(fs, genDir)
     require(existingEpochs.length <= 1,
       s"index at $path has ${existingEpochs.length} epoch dirs under " +
         "an unfinished migration — not a crashed migration; restore " +
         "the tree")
     val epoch = existingEpochs.headOption
-      .map(_.getPath.getName.stripPrefix("epoch="))
+      .map(s => EpochLayout.epochOf(s.getPath))
       .getOrElse(java.util.UUID.randomUUID().toString)
-    val cellDirs = Option(fs.listStatus(new Path(s"$path/assignments")))
-      .getOrElse(Array.empty[FileStatus])
+    val cellDirs = EpochLayout.children(fs, new Path(s"$path/assignments"))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
     if (cellDirs.nonEmpty) {
       val epochDir = new Path(genDir, s"epoch=$epoch")
@@ -1033,12 +888,10 @@ object AnnIndex {
     * assignments dir — migration-only (v3 never enumerates this way). */
   private def legacyListCellFiles(fs: FileSystem,
       dir: Path): Seq[String] =
-    Option(fs.listStatus(dir))
-      .getOrElse(Array.empty[FileStatus])
+    EpochLayout.children(fs, dir)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))
       .flatMap { cd =>
-        Option(fs.listStatus(cd.getPath))
-          .getOrElse(Array.empty[FileStatus])
+        EpochLayout.children(fs, cd.getPath)
           .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
             !f.getPath.getName.startsWith("."))
           .map(f => s"${cd.getPath.getName}/${f.getPath.getName}")
@@ -1051,7 +904,7 @@ object AnnIndex {
     * epoch rename instead of moving files in place. */
   private def legacyCommitAssignmentsStage(fs: FileSystem,
       dir: Path, stage: Path): Unit = {
-    val manifest = DedupIndex.readLines(fs, new Path(stage, "_FILES"))
+    val manifest = EpochLayout.readLines(fs, new Path(stage, "_FILES"))
     manifest.foreach { rel =>
       fs.delete(new Path(dir, rel), false)
     }
@@ -1074,16 +927,13 @@ object AnnIndex {
     * (query_id, id, cosine, rank), identical to the live
     * [[SimilaritySearch.ivfTopK]] under the same quantizer.
     *
-    * SNAPSHOT-ISOLATED vs maintenance: the plan resolves the current
-    * generation and its LIVE epoch set at construction time — retired
-    * epochs (marker or a committed compaction's riding manifest) are
-    * excluded from the explicit path list, and since maintenance never
-    * deletes what it retires (that is [[vacuum]]'s job, under the
-    * operator's grace), a frame planned at ANY point before/during/
-    * after a compaction or retrain — or after a crash of one, before
-    * recovery — reads a consistent (quantizer, epochs) snapshot and
-    * serves the same top-k. The one contract left for the operator is
-    * the vacuum grace ≥ the longest probe. Legacy (pre-generation)
+    * SNAPSHOT-ISOLATED vs maintenance: the plan leaves a reader lease
+    * and resolves the current generation and its LIVE epoch set at
+    * construction time ([[graft.index.EpochLayout]]), so a frame
+    * planned at ANY point before/during/after a compaction or retrain
+    * — or after a crash of one — reads a consistent (quantizer,
+    * epochs) snapshot and serves the same top-k while the vacuum
+    * grace ≥ the longest probe. Legacy (pre-generation)
     * trees keep the old `_COMPACTING` fail-fast: their maintenance
     * moved files in place, so the marker is honest there. */
   def probe(spark: SparkSession, path: String, queries: DataFrame,
@@ -1095,13 +945,13 @@ object AnnIndex {
     val assignedT = currentGen(fs, path) match {
       case Some(g) =>
         // advertise this plan to graced vacuums BEFORE resolving the
-        // generation + live epoch set ([[DedupIndex.ReadersDir]]): no
+        // generation + live epoch set ([[EpochLayout.ReadersDir]]): no
         // file live at our plan time can be reclaimed from under the
         // frame within the lease horizon
-        DedupIndex.leaveLease(fs, path)
+        EpochLayout.leaveLease(fs, new Path(path))
         liveAssignmentsV3(spark, fs, path, g)
       case None =>
-        val marker = new Path(path, DedupIndex.CompactingMarker)
+        val marker = new Path(path, CompactingMarker)
         require(!fs.exists(marker),
           s"legacy index at $path is mid-compaction (or a compaction " +
             "crashed): a probe would race the in-place commit's " +

@@ -1,8 +1,10 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Caches.Persisted
+import graft.index.EpochLayout
 
 /** A named shingling function: the shingler IDENTITY travels with a
   * persisted [[DedupIndex]] so a probe against an index built with
@@ -83,18 +85,6 @@ object DedupIndex {
     *  - v3: bands partitioned by (epoch, band) with uuids matching the
     *    grams epochs — tiered [[compact]] works. */
   val MetaVersion = 3
-
-  /** LEGACY marker file a pre-generation [[AnnIndex]] compaction left
-    * at its index root: that protocol moved the only copy of the
-    * vectors in place, so probes had to fail fast on the marker.
-    * Since the generation-versioned ANN layout (r17), BOTH indexes
-    * serve through maintenance — retirement is a marker, commits are
-    * renames, [[vacuum]]'s grace covers long-running readers — and
-    * the marker is consulted only when probing an un-migrated legacy
-    * ANN tree ([[AnnIndex.rebuildFrom]] migrates). Lives here because
-    * the manifest/recovery protocol this file defines is what both
-    * compactors share. */
-  val CompactingMarker = "_COMPACTING"
 
   /** Batch row count above which [[probe]] stops broadcasting the
     * batch side and degrades to keyed joins. The binding constraint is
@@ -210,21 +200,18 @@ object DedupIndex {
   def rebuildFrom(spark: SparkSession, path: String,
       shingler: Shingler = Shingler.word(3),
       designThreshold: Double = 0.5): Unit = {
-    val gramsDir = new org.apache.hadoop.fs.Path(s"$path/grams")
-    val fs = gramsDir.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    def glob(pattern: String) =
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(pattern)))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-    val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
+    val gramsDir = new Path(s"$path/grams")
+    val fs = gramsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def glob(pattern: String) = EpochLayout.glob(fs, pattern)
+    val metaDir = new Path(s"$path/meta")
     val staged = glob(s"$path/meta_staging-*")
     if (!fs.exists(metaDir)) {
       // a prior run crashed between meta delete and rename: the only
       // state with no meta dir. Complete the swap (a stage is only
       // ever COMPLETE at that point — the delete happens strictly
       // after the staging write returns) and the index is v3.
-      val complete = staged.filter(s => fs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
+      val complete = staged.filter(s =>
+        fs.exists(new Path(s.getPath, "_SUCCESS")))
       require(complete.nonEmpty,
         s"index at $path has no meta and no completed meta stage — " +
           "not a crashed rebuildFrom; restore the meta before probing")
@@ -240,56 +227,39 @@ object DedupIndex {
     val meta = readMeta(spark, path)
     require(meta.version < MetaVersion,
       s"index at $path is already v${meta.version} — nothing to migrate")
-    val bandsDir = new org.apache.hadoop.fs.Path(s"$path/bands")
+    val bandsDir = new Path(s"$path/bands")
+    // move `entries` under `<table>/epoch=<epoch>` (pure renames)
+    def moveInto(table: Path, epoch: String, entries: Seq[FileStatus])
+        : Unit = if (entries.nonEmpty) {
+      val epochDir = new Path(table, s"epoch=$epoch")
+      fs.mkdirs(epochDir)
+      entries.foreach { st =>
+        val dest = new Path(epochDir, st.getPath.getName)
+        require(fs.rename(st.getPath, dest),
+          s"rebuildFrom: failed to move ${st.getPath} -> $dest")
+      }
+    }
     if (meta.version == 1) {
       // ---- v1: pure file moves into ONE shared epoch ----
-      val existing = Option(fs.listStatus(gramsDir))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("epoch="))
+      val existing = EpochLayout.epochDirs(fs, gramsDir)
       // a crashed run created at most one epoch dir (this rule); more
       // means a hand-edited tree the move plan cannot reason about
       require(existing.length <= 1,
         s"index at $path has ${existing.length} epoch dirs under a " +
           "v1 meta — not a crashed v1 migration; rebuild the index")
-      val epoch = existing.headOption
-        .map(_.getPath.getName.stripPrefix("epoch="))
+      val epoch = existing.headOption.map(s => EpochLayout.epochOf(s.getPath))
         .getOrElse(java.util.UUID.randomUUID().toString)
       // the flat v1 part files: skip _SUCCESS/.-prefixed metadata,
       // which Spark's path filter ignores wherever they sit
-      val flat = Option(fs.listStatus(gramsDir))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
+      moveInto(gramsDir, epoch, EpochLayout.children(fs, gramsDir)
         .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-      if (flat.nonEmpty) {
-        val epochDir = new org.apache.hadoop.fs.Path(gramsDir,
-          s"epoch=$epoch")
-        fs.mkdirs(epochDir)
-        flat.foreach { st =>
-          val dest = new org.apache.hadoop.fs.Path(epochDir,
-            st.getPath.getName)
-          require(fs.rename(st.getPath, dest),
-            s"rebuildFrom: failed to move ${st.getPath} -> $dest")
-        }
-      }
+          !s.getPath.getName.startsWith(".")))
       // bands: flat band=<k> dirs move under the SAME epoch (matching
       // uuids are the tiered-compaction retirement invariant); a
       // re-run after a crash moves only the dirs still at top level
-      val flatBands = Option(fs.listStatus(bandsDir))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
+      moveInto(bandsDir, epoch, EpochLayout.children(fs, bandsDir)
         .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("band="))
-      if (flatBands.nonEmpty) {
-        val bandsEpochDir = new org.apache.hadoop.fs.Path(bandsDir,
-          s"epoch=$epoch")
-        fs.mkdirs(bandsEpochDir)
-        flatBands.foreach { st =>
-          val dest = new org.apache.hadoop.fs.Path(bandsEpochDir,
-            st.getPath.getName)
-          require(fs.rename(st.getPath, dest),
-            s"rebuildFrom: failed to move ${st.getPath} -> $dest")
-        }
-      }
+          s.getPath.getName.startsWith("band=")))
       mintMeta(spark, fs, path, meta.bands, meta.rowsPerBand,
         shingler.id, designThreshold)
     } else {
@@ -308,19 +278,17 @@ object DedupIndex {
       // a run that crashed between the swap and the meta mint left a
       // fully-migrated bands tree (the dir only ever changes by whole
       // renames) — detect it and skip straight to the mint
-      val children = Option(fs.listStatus(bandsDir))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
+      val children = EpochLayout.children(fs, bandsDir)
         .filter(_.isDirectory).map(_.getPath.getName)
       val alreadyTagged =
         children.nonEmpty && children.forall(_.startsWith("epoch="))
       var migratedIdType: Option[String] = None
       if (!alreadyTagged) {
         val uuid = java.util.UUID.randomUUID().toString
-        val stage = new org.apache.hadoop.fs.Path(path,
-          s"bands_migrate-$uuid")
+        val stage = new Path(path, s"bands_migrate-$uuid")
         // same rows re-laid-out: plan the file count from the CURRENT
         // bands bytes (the compact planner's argument)
-        val nBands = compactionFilesFor(
+        val nBands = EpochLayout.compactionFilesFor(
           fs.getContentSummary(bandsDir).getLength)
         val g = spark.read.parquet(s"$path/grams") // epoch rides along
         migratedIdType = Some(g.schema("id").dataType.json)
@@ -330,7 +298,7 @@ object DedupIndex {
             nBands, fs.getContentSummary(gramsDir).getLength,
             Seq(col("epoch"), col("band"), col("bh")), meta.bands)
           .write.partitionBy("epoch", "band").parquet(stage.toString)
-        val old = new org.apache.hadoop.fs.Path(path, s"bands_old-$uuid")
+        val old = new Path(path, s"bands_old-$uuid")
         require(fs.rename(bandsDir, old),
           s"rebuildFrom: failed to retire the v2 bands at $path")
         require(fs.rename(stage, bandsDir),
@@ -349,13 +317,12 @@ object DedupIndex {
   /** Stage-then-swap the v3 meta row in (the [[rebuildFrom]] crash
     * contract: a completed stage with no meta is finished by the next
     * call). */
-  private def mintMeta(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String, bands: Int,
-      rowsPerBand: Int, shinglerId: String, threshold: Double,
+  private def mintMeta(spark: SparkSession, fs: FileSystem, path: String,
+      bands: Int, rowsPerBand: Int, shinglerId: String, threshold: Double,
       idTypeJson: Option[String] = None): Unit = {
     import spark.implicits._
-    val metaDir = new org.apache.hadoop.fs.Path(s"$path/meta")
-    val metaStage = new org.apache.hadoop.fs.Path(path,
+    val metaDir = new Path(s"$path/meta")
+    val metaStage = new Path(path,
       s"meta_staging-${java.util.UUID.randomUUID().toString}")
     // id_type rides along when the migration learned it (the v2 bands
     // rebuild reads the grams anyway); absent otherwise — readers fall
@@ -379,113 +346,42 @@ object DedupIndex {
     * small-files cliff. This is the engine's counterpart of the
     * reference's post-ingest maintenance pass
     * (`01_ingest_raw_telemetry.py:141-167` runs ANALYZE + index builds
-    * once bulk loading completes) — WITHOUT taking the index offline:
-    * retirement-by-marker (below) keeps every probe state consistent,
-    * so probes constructed at ANY point during (or after a crash of)
-    * a compaction serve the correct pair set, and appends are additive
-    * (an epoch not in the manifest survives commit untouched — and the
-    * recovery GC's [[OrphanGraceMillis]] age gate keeps it from
-    * mistaking an in-flight append's bands-without-grams window for
-    * crash residue). The exclusive-access clause of earlier rounds is
-    * gone; what remains is the vacuum grace contract for long-RUNNING
-    * probes (see `retainRetired`).
+    * once bulk loading completes) — WITHOUT taking the index offline.
     *
-    * TIERED by `maxEpochBytes` (the LSM/size-tiered discipline): the
-    * merge set is every epoch at or under the threshold, PLUS — the
-    * promotion rule — any larger epoch whose size the merge set's
-    * aggregate has reached (absorbed smallest-first, the aggregate
-    * growing as it absorbs). The two rules together bound BOTH costs
-    * that a maintenance policy must bound:
-    *  - lifetime I/O: a serving loop that calls full-rewrite
-    *    compaction every N micro-batches re-reads and re-writes the
-    *    whole corpus per cycle — O(corpus²/batch) over the index's
-    *    life. Under the tier, a byte is rewritten only while its
-    *    epoch is small; under promotion, a large epoch is rewritten
-    *    only when roughly its OWN size in new data has accumulated,
-    *    so each byte is rewritten O(log(corpus/batch)) times total —
-    *    the classic size-tiered bound;
-    *  - epoch count: a tier WITHOUT promotion parks a fresh
-    *    ~tier-sized epoch forever each time the merge output outgrows
-    *    the threshold — ~400 k epoch directories at 100 TB with a
-    *    256 MB tier, the small-files cliff reborn one level up.
-    *    Promotion folds them geometrically: live epochs stay
-    *    O(log(corpus/tier)) + the unmerged tail (~19 + compactEvery
-    *    at 100 TB/256 MB).
-    * The default (`Long.MaxValue`) merges everything — the one-shot
-    * "defragment this index" verb, and exactly the pre-tier behavior;
+    * The lifecycle (stage → atomic `_EPOCHS` manifest → rename → mark →
+    * graced vacuum under reader leases), the crash-recovery rules and
+    * the tiered selection by `maxEpochBytes` are the shared ones in
+    * [[graft.index.EpochLayout]]. What is specific to this index:
+    *  - the merge is pure data movement: the selected epochs' grams are
+    *    read once, coalesced to the planned file count and staged as
+    *    `grams_compact-<uuid>`; the merged epoch's BANDS are derived
+    *    from the staged grams and appended under
+    *    `bands/epoch=<stage-uuid>` BEFORE the manifest is written
+    *    (manifest-present ⇒ bands complete, so recovery never rebuilds
+    *    bands; until commit the new band rows only mint duplicate
+    *    candidates, which probe dedups). Gram sets and band keys are
+    *    byte-identical before and after;
+    *  - commit renames the stage to `grams/epoch=<stage-uuid>` and then
+    *    retires each merged epoch in BOTH tables (their uuids match —
+    *    the v3 layout invariant [[rebuildFrom]] establishes, which is
+    *    why compaction requires v3);
+    *  - recovery discards a stage without a manifest AND retires the
+    *    `bands/epoch=<stage-uuid>` rows it may have appended; a bands
+    *    epoch with no grams twin is a failed append's residue once it
+    *    passes the orphan age gate (an in-flight append looks the same
+    *    until its grams rename lands).
+    * The default `maxEpochBytes` (`Long.MaxValue`) merges everything —
+    * the one-shot "defragment this index" verb;
     * [[graft.streaming.StreamingDedupGate]] passes a finite tier.
-    * Retiring just the merged epochs' band rows is possible because
-    * v3 bands are epoch-partitioned with uuids matching their grams
-    * (the layout invariant [[rebuildFrom]] establishes) — which is
-    * why compaction requires v3.
-    *
-    * Protocol (pure data movement — no shingling, no re-hashing; the
-    * gram sets and band keys are byte-identical before and after —
-    * and SNAPSHOT-ISOLATED: retirement is a marker, not a delete, and
-    * the commit order makes every intermediate state probe-consistent):
-    *
-    *  1. finish any CRASHED compaction first (see recovery below),
-    *     then retire orphan bands epochs (no grams twin = crash
-    *     residue);
-    *  2. select the LIVE (non-retired) epochs E at or under
-    *     `maxEpochBytes` (all of them at the default); nothing
-    *     selected, or one already-compact epoch → done;
-    *  3. read the grams rows of E, coalesce to the planned file count,
-    *     and write them to a `grams_compact-<uuid>` stage;
-    *  4. derive the merged epoch's BANDS from the staged grams and
-    *     append them under `bands/epoch=<stage-uuid>` (bands before
-    *     manifest: manifest-present ⇒ bands complete, so recovery
-    *     never needs a bands rebuild; until commit the new band rows
-    *     only mint duplicate candidates, which probe dedups);
-    *  5. write the `_EPOCHS` manifest (the epoch uuids of E) — ATOMIC
-    *     via write-to-temp + rename, because the manifest IS the
-    *     stage's completion marker and a trusted partial manifest
-    *     would leave unlisted epochs alive beside their stage copies,
-    *     serving duplicate rows;
-    *  6. commit: rename the stage to `grams/epoch=<stage-uuid>` (the
-    *     manifest rides inside), THEN mark each epoch in E retired in
-    *     both tables ([[RetiredMarker]] touch) and drop the manifest.
-    *     Rename-first is what keeps the window consistent: a probe
-    *     planned between the rename and the marking reads the manifest
-    *     out of the committed epoch and excludes E itself, so it never
-    *     double-counts an id (manifest ∪ markers = the retired set);
-    *  7. unless `retainRetired`, [[vacuum]] with zero grace — the
-    *     retired directories delete and the disk behavior matches the
-    *     pre-snapshot protocol exactly.
-    *
-    * Probe consistency at every point (why no lock is needed):
-    * [[probe]] resolves the LIVE epoch set at plan time — a frame
-    * planned BEFORE a compaction keeps reading the old epochs' files
-    * (which still exist until vacuum), and a frame planned at any
-    * point DURING one sees either the old set (pre-rename) or the
-    * merged epoch with E excluded (post-rename) — the same pair set
-    * in every case. `retainRetired = true` + a scheduled
-    * [[vacuum]](grace ≥ the longest probe) is the serving
-    * configuration: in-flight probes survive the whole maintenance
-    * cycle (the Iceberg/Delta expire-snapshots contract). The default
-    * (immediate vacuum) is for exclusively-owned indexes — batch
-    * pipelines and the streaming gate — where nothing concurrent can
-    * hold the old files.
-    *
-    * Crash recovery — every interrupted state is completed or
-    * discarded by the NEXT compact() (or [[vacuum]]) call (the
-    * [[rebuildFrom]] convention), and is probe-consistent MEANWHILE:
-    *  - a stage without `_EPOCHS` is incomplete → the stage is deleted
-    *    and its `bands/epoch=<stage-uuid>` rows retired (they were
-    *    probe-visible, so a reader may still hold them — the grace
-    *    applies to them too);
-    *  - a stage WITH `_EPOCHS` is a committed-but-unswapped
-    *    compaction → recovery renames it in and finishes the marking;
-    *    epochs appended AFTER the crash are not in the manifest and
-    *    survive untouched;
-    *  - a committed epoch still carrying `_EPOCHS` (crash mid-marking)
-    *    → the marking completes idempotently.
+    * `retainRetired = true` + a scheduled [[vacuum]](grace ≥ the
+    * longest probe) is the serving configuration; the default vacuums
+    * with zero grace at once — for exclusively-owned indexes (batch
+    * pipelines, the streaming gate).
     *
     * `targetFiles = 0` (default) plans the compacted file count from
-    * the selected epochs' REAL byte size ([[compactionFilesFor]] —
-    * ~256 MB per file), so both the output layout and the rewrite's
-    * parallelism scale with the data being merged; pass an explicit
-    * count only to pin a test fixture. */
+    * the selected epochs' REAL byte size
+    * ([[graft.index.EpochLayout.compactionFilesFor]] — ~256 MB per
+    * file); pass an explicit count only to pin a test fixture. */
   def compact(spark: SparkSession, path: String,
       targetFiles: Int = 0,
       maxEpochBytes: Long = Long.MaxValue,
@@ -500,35 +396,24 @@ object DedupIndex {
       s"index at $path has the v${meta.version} layout — tiered " +
         "compaction needs epoch-tagged bands; migrate with " +
         "DedupIndex.rebuildFrom before compacting")
-    val gramsDir = new org.apache.hadoop.fs.Path(s"$path/grams")
-    val fs = gramsDir.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    val gramsDir = new Path(s"$path/grams")
+    val fs = gramsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverCompaction(fs, path)
     def finish(): Unit = if (!retainRetired) vacuum(spark, path, 0L)
     // live = not retired (recovery above resolved every manifest into
     // markers, so markers are the complete retirement record here)
-    val epochStats = Option(fs.listStatus(gramsDir))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
-      .filterNot(s => fs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, RetiredMarker)))
-      .map(s => (s.getPath.getName.stripPrefix("epoch="),
-        fs.getContentSummary(s.getPath).getLength))
-      .sortBy(_._2)
-    require(epochStats.nonEmpty,
+    val live = EpochLayout.snapshot(fs, Seq(gramsDir)).live(0)
+    require(live.nonEmpty,
       s"index at $path has no live grams epochs — nothing to compact")
-    // size-tiered selection with promotion ([[tieredSelect]], shared
-    // with [[AnnIndex.compact]]): a big epoch is rewritten only when
-    // ~its own volume of new data has accumulated (geometric folding,
-    // O(log) rewrites per byte AND O(log) live epochs; see the scaladoc)
-    val selected = tieredSelect(epochStats, maxEpochBytes)
+    val selected = EpochLayout.tieredSelect(EpochLayout.sizes(fs, live),
+      maxEpochBytes)
     if (selected.isEmpty) { // every epoch already above the tier
       finish()
       return
     }
     val nGrams =
       if (targetFiles > 0) targetFiles
-      else compactionFilesFor(selected.map(_._2).sum)
+      else EpochLayout.compactionFilesFor(selected.map(_._2).sum)
     // plan the bands file count HERE (not only at write time) because
     // the early return below must check it too: a v1-migrated epoch
     // inherits v1's flat band-file population by pure moves, so it can
@@ -536,42 +421,28 @@ object DedupIndex {
     // early return keyed on grams alone would park that small-files
     // population forever on the tiered path (r16 verdict #2)
     val selBandsBytes = selected.map { case (e, _) =>
-      val d = new org.apache.hadoop.fs.Path(s"$path/bands/epoch=$e")
+      val d = new Path(s"$path/bands/epoch=$e")
       if (fs.exists(d)) fs.getContentSummary(d).getLength else 0L
     }.sum
     val nBands =
       if (targetFiles > 0) targetFiles
-      else compactionFilesFor(
+      else EpochLayout.compactionFilesFor(
         if (selBandsBytes > 0) selBandsBytes else selected.map(_._2).sum)
     if (selected.length == 1) {
-      val soleBands = new org.apache.hadoop.fs.Path(
-        s"$path/bands/epoch=${selected.head._1}")
-      // the achievable floor for the (epoch, band)-partitioned bands
-      // is one file per band value present — a byte plan below that is
-      // unreachable by ANY rewrite, so gating on nBands alone would
-      // re-rewrite the same epoch every maintenance cycle
-      val bandFloor =
-        if (!fs.exists(soleBands)) 0
-        else Option(fs.listStatus(soleBands))
-          .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-          .count(s => s.isDirectory &&
-            s.getPath.getName.startsWith("band="))
-      if (dataFileCount(fs, new org.apache.hadoop.fs.Path(gramsDir,
-            s"epoch=${selected.head._1}")) <= nGrams &&
-          dataFileCountRecursive(fs, soleBands)
-            <= math.max(nBands, bandFloor)) {
-        // one small epoch already at its planned file count in BOTH
-        // tables: merging it with itself would re-rewrite the same
-        // bytes every maintenance cycle — the exact cost the tier
-        // exists to avoid
+      val sole = selected.head._1
+      // a lone epoch already at plan in BOTH tables (the bands floor:
+      // one file per band value present) stays
+      if (EpochLayout.atPlannedFiles(fs,
+            new Path(gramsDir, s"epoch=$sole"), nGrams) &&
+          EpochLayout.atPlannedFiles(fs,
+            new Path(s"$path/bands/epoch=$sole"), nBands)) {
         finish()
         return
       }
     }
-    val epochs = selected.map(_._1).toSeq
+    val epochs = selected.map(_._1)
     val stageUuid = java.util.UUID.randomUUID().toString
-    val stage = new org.apache.hadoop.fs.Path(path,
-      s"grams_compact-$stageUuid")
+    val stage = new Path(path, s"grams_compact-$stageUuid")
     // coalesce, not repartition: file-count control without shuffling
     // the merged gram volume (rows have no required order or key).
     // Read the SELECTED epoch dirs explicitly — an isin over the dir
@@ -604,240 +475,85 @@ object DedupIndex {
         Seq(col("band"), col("bh")), meta.bands)
       .write.mode("append").partitionBy("epoch", "band")
       .parquet(s"$path/bands")
-    writeManifest(fs, new org.apache.hadoop.fs.Path(stage, "_EPOCHS"),
-      epochs)
+    EpochLayout.writeManifest(fs,
+      new Path(stage, EpochLayout.EpochsManifest), epochs)
     commitGramsStage(fs, path, stage)
     finish()
   }
 
-  /** Marker file inside a retired epoch directory: the epoch's rows
-    * live on (so probes planned before the retirement keep reading
-    * them) but every NEW plan excludes it; [[vacuum]] deletes marked
-    * epochs once the operator's grace has passed. */
-  val RetiredMarker = "_RETIRED"
-
-  /** Directory of reader leases at the index root: every [[probe]]
-    * (and [[AnnIndex.probe]]) touches `_READERS/<uuid>` at PLAN time,
-    * so the snapshot-isolation grace stops being an unbacked promise —
-    * a graced [[vacuum]] refuses to reclaim a retired directory while
-    * any live lease PREDATES its retirement (that reader's plan may
-    * hold it). Leases are best-effort (a read-only filesystem degrades
-    * silently to the grace-only contract), cannot be released by the
-    * reader (a lazy frame never signals completion), and therefore
-    * expire at [[LeaseHorizonMillis]] — the absolute bound on how long
-    * a probe may run under the lease's protection; vacuum reaps
-    * expired ones. A ZERO-grace vacuum (the [[compact]] default's
-    * internal call — the exclusively-owned-index configuration)
-    * ignores leases entirely: the owner's own immediate-collect probes
-    * leave leases behind that must not wedge its maintenance loop. */
-  val ReadersDir = "_READERS"
-
-  /** How long a reader lease protects its plan-time snapshot. Probes
-    * running longer than this are out of contract (set the vacuum
-    * grace above their duration instead — `tools.ProbeGraceBench`
-    * measures the floor). */
-  val LeaseHorizonMillis: Long = 24L * 3600 * 1000
-
-  /** Advertise a reader whose plan is being constructed NOW —
-    * best-effort: on a filesystem this process cannot write to, the
-    * probe still works and the operator falls back to the grace-only
-    * contract. */
-  private[operators] def leaveLease(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
-    try {
-      val dir = new org.apache.hadoop.fs.Path(path, ReadersDir)
-      fs.mkdirs(dir)
-      fs.create(new org.apache.hadoop.fs.Path(dir,
-        java.util.UUID.randomUUID().toString), false).close()
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** The oldest LIVE lease's plan time (None when no reader is
-    * advertised), reaping expired leases on the way — the one value a
-    * graced vacuum compares retirement times against. */
-  private[operators] def oldestLiveLease(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Option[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(path, ReadersDir)
-    if (!fs.exists(dir)) return None
-    val horizon = System.currentTimeMillis() - LeaseHorizonMillis
-    val leases = Option(fs.listStatus(dir))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-      .filter(_.isFile)
-    val (expired, live) = leases.partition(_.getModificationTime < horizon)
-    expired.foreach { l =>
-      try fs.delete(l.getPath, false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-    if (live.isEmpty) None else Some(live.map(_.getModificationTime).min)
-  }
-
-  /** Physically delete retired epochs older than `olderThanMillis`
-    * (marker mtime) from both tables — the disk-reclaim half of the
-    * snapshot-isolation contract: [[compact]] only ever MARKS epochs
-    * retired, so probes planned before a compaction keep working;
-    * vacuum is where their files actually go away, and the grace is
-    * the operator's promise about the longest-running probe (the
-    * Iceberg/Delta expire-snapshots shape). The floor for that promise
-    * is MEASURED, not guessed: `graft.tools.ProbeGraceBench` reports
-    * worst-case probe plan-to-finish wall time per probe shape at
-    * sf0.1 and 10× (SCALING.md "vacuum-grace floor" table) — set the
-    * grace to a comfortable multiple of the slowest shape served.
-    * And the promise is ENFORCED up to the lease horizon: probes
-    * advertise their plan time in [[ReadersDir]], and a graced vacuum
-    * refuses to reclaim anything a live lease predates — a mis-set
-    * grace degrades to deferred reclaim, not a mid-scan
-    * FileNotFound. Completes any interrupted retirement marking
-    * first, so it is safe to call on a crashed tree. Zero grace (the
-    * [[compact]] default's internal call) is the forced
-    * exclusive-ownership path: no lease check, reclaims everything
-    * retired. */
+  /** Physically delete retired epochs from both tables — the
+    * [[graft.index.EpochLayout]] vacuum: a retired epoch goes once its
+    * marker is older than `olderThanMillis` and no live reader lease
+    * predates it (zero grace, the [[compact]] default's internal call,
+    * skips the lease check and reclaims everything retired). Completes
+    * any interrupted retirement marking first, so it is safe to call on
+    * a crashed tree. */
   def vacuum(spark: SparkSession, path: String,
       olderThanMillis: Long = 0L): Unit = {
     require(olderThanMillis >= 0,
       s"olderThanMillis=$olderThanMillis must be >= 0")
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     completeRetirement(fs, path)
-    val cutoff = System.currentTimeMillis() - olderThanMillis
-    // a GRACED vacuum also honors reader leases: a retired epoch is
-    // reclaimed only if every live lease was planned AFTER its
-    // retirement (an older lease's plan may hold the epoch's files).
-    // Zero grace = the forced exclusive-ownership path — no leases
-    // (see [[ReadersDir]]).
-    val oldestLease =
-      if (olderThanMillis == 0) None else oldestLiveLease(fs, path)
+    val reclaim = EpochLayout.reclaimable(fs, root, olderThanMillis)
     Seq("grams", "bands").foreach { sub =>
-      Option(fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/$sub")))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("epoch="))
-        .foreach { d =>
-          val m = new org.apache.hadoop.fs.Path(d.getPath, RetiredMarker)
-          if (fs.exists(m)) {
-            val mt = fs.getFileStatus(m).getModificationTime
-            if (mt <= cutoff && oldestLease.forall(_ > mt))
-              fs.delete(d.getPath, true)
-          }
-        }
+      EpochLayout.epochDirs(fs, new Path(s"$path/$sub")).map(_.getPath)
+        .filter(reclaim).foreach(fs.delete(_, true))
     }
   }
 
   /** Step 1 of [[compact]]: complete or discard residue of a crashed
     * compaction, then retire orphan bands epochs. A no-op on a clean
     * tree. */
-  private def recoverCompaction(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit = {
-    def glob(pattern: String) =
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(pattern)))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-    glob(s"$path/grams_compact-*").foreach { st =>
-      if (fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_EPOCHS")))
+  private def recoverCompaction(fs: FileSystem, path: String): Unit = {
+    EpochLayout.glob(fs, s"$path/grams_compact-*").foreach { st =>
+      if (fs.exists(new Path(st.getPath, EpochLayout.EpochsManifest)))
         commitGramsStage(fs, path, st.getPath)
       else {
-        // incomplete stage: discard it AND retire the merged-epoch
-        // band rows it may have appended (they derive from the
-        // discarded stage; they were probe-visible — harmless
-        // duplicate candidates — so they take the retirement path,
-        // not a hard delete a long-running reader could trip on)
+        // incomplete stage: discard it AND retire the merged-epoch band
+        // rows it may have appended (they were probe-visible, so they
+        // take the retirement path, not a hard delete a long-running
+        // reader could trip on)
         val uuid = st.getPath.getName.stripPrefix("grams_compact-")
         fs.delete(st.getPath, true)
-        retire(fs, new org.apache.hadoop.fs.Path(
-          s"$path/bands/epoch=$uuid"))
+        EpochLayout.retire(fs, new Path(s"$path/bands/epoch=$uuid"))
       }
     }
     completeRetirement(fs, path)
     // orphan-bands retirement: a bands epoch with no grams twin (live
-    // OR retired) is USUALLY crash residue — a failed append (bands
-    // commit first, grams last; the gate replays the batch under a
-    // fresh epoch). But an IN-FLIGHT concurrent append is
-    // indistinguishable from that residue by structure alone: it too
-    // has committed bands and not yet grams, and retiring it here
-    // (then vacuuming, on the default path) would leave the index
-    // permanently serving grams-without-bands once its grams epoch
-    // lands — silently missing pairs. The bands→grams gap in a live
-    // append is one directory rename plus job planning (the grams
-    // stage is fully written BEFORE the bands write starts — see
-    // [[writeTables]]), so AGE separates the two cases cleanly: only
-    // orphans whose bands dir has sat unmodified for
-    // [[OrphanGraceMillis]] are retired; younger ones are left for a
-    // later pass. Harmless meanwhile — orphan band rows only mint
-    // duplicate candidates, which probe dedups.
-    def epochNames(sub: String): Set[String] =
-      Option(fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/$sub")))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("epoch="))
-        .map(_.getPath.getName.stripPrefix("epoch=")).toSet
-    val twins = epochNames("grams")
-    val cutoff = System.currentTimeMillis() - OrphanGraceMillis
-    (epochNames("bands") -- twins).foreach { e =>
-      val d = new org.apache.hadoop.fs.Path(s"$path/bands/epoch=$e")
-      if (fs.getFileStatus(d).getModificationTime <= cutoff)
-        retire(fs, d)
-    }
+    // OR retired) is USUALLY a failed append (bands commit first, grams
+    // last; the gate replays the batch under a fresh epoch). An
+    // IN-FLIGHT concurrent append looks the same until its grams rename
+    // lands, and retiring it would leave the index serving
+    // grams-without-bands — silently missing pairs — so only orphans
+    // past the orphan age gate are retired. Harmless meanwhile: orphan
+    // band rows only mint duplicate candidates, which probe dedups.
+    val twins = EpochLayout.epochDirs(fs, new Path(s"$path/grams"))
+      .map(s => EpochLayout.epochOf(s.getPath)).toSet
+    EpochLayout.epochDirs(fs, new Path(s"$path/bands"))
+      .filterNot(s => twins(EpochLayout.epochOf(s.getPath)))
+      .filter(EpochLayout.pastOrphanGrace)
+      .foreach(s => EpochLayout.retire(fs, s.getPath))
   }
 
-  /** How long an orphan bands epoch (bands without a grams twin) must
-    * sit unmodified before the recovery GC treats it as crash residue
-    * rather than an in-flight append's not-yet-twinned bands. A live
-    * append closes the gap in seconds (grams are staged before the
-    * bands write and commit by one rename); an hour of silence is
-    * residue. */
-  val OrphanGraceMillis: Long = 60L * 60 * 1000
+  /** Finish any interrupted retirement marking: a merged epoch's
+    * manifest names epochs to retire in both tables. */
+  private def completeRetirement(fs: FileSystem, path: String): Unit =
+    EpochLayout.completeRetirement(fs, new Path(s"$path/grams")) { e =>
+      Seq(new Path(s"$path/grams/epoch=$e"),
+        new Path(s"$path/bands/epoch=$e"))
+    }
 
-  /** Finish any interrupted retirement marking: a committed epoch
-    * still carrying its `_EPOCHS` manifest names epochs whose markers
-    * may not all be down yet — touch them (idempotent) and drop the
-    * manifest. New probes treat manifest-named epochs as retired even
-    * before this runs, so the window needs no lock. */
-  private def completeRetirement(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit =
-    Option(fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/grams")))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
-      .foreach { d =>
-        val manifest = new org.apache.hadoop.fs.Path(d.getPath, "_EPOCHS")
-        if (fs.exists(manifest)) {
-          readLines(fs, manifest).foreach { e =>
-            retire(fs, new org.apache.hadoop.fs.Path(
-              s"$path/grams/epoch=$e"))
-            retire(fs, new org.apache.hadoop.fs.Path(
-              s"$path/bands/epoch=$e"))
-          }
-          fs.delete(manifest, false)
-        }
-      }
-
-  private def retire(fs: org.apache.hadoop.fs.FileSystem,
-      epochDir: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(epochDir))
-      touch(fs, new org.apache.hadoop.fs.Path(epochDir, RetiredMarker))
-
-  /** Commit a COMPLETE grams stage (has `_EPOCHS`): rename it in as
-    * one new epoch — the manifest rides inside, so from this instant
-    * new probes exclude the merged epochs by manifest — then finish
-    * the retirement marking. Idempotent: a re-run after any crash
-    * point finishes the rename and/or the marking. */
-  private def commitGramsStage(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, stage: org.apache.hadoop.fs.Path): Unit = {
-    val uuid = stage.getName.stripPrefix("grams_compact-")
-    val committed = new org.apache.hadoop.fs.Path(
-      s"$path/grams/epoch=$uuid")
-    fs.mkdirs(committed.getParent)
-    require(fs.rename(stage, committed),
-      s"compact: failed to commit grams stage $stage -> $committed")
-    // marking AFTER the rename: between the two, new probes exclude
-    // the merged epochs via the manifest now inside the committed
-    // epoch (underscore files are invisible to parquet readers, so
-    // the data read is unaffected); completeRetirement drops it once
-    // every marker is down
+  /** Commit a COMPLETE grams stage (has `_EPOCHS`): rename it in as one
+    * new epoch, then finish the retirement marking. Idempotent: a
+    * re-run after any crash point finishes the rename and/or the
+    * marking. */
+  private def commitGramsStage(fs: FileSystem, path: String,
+      stage: Path): Unit = {
+    EpochLayout.commit(fs, stage, new Path(
+      s"$path/grams/epoch=${stage.getName.stripPrefix("grams_compact-")}"))
     completeRetirement(fs, path)
   }
-
-  /** How many bytes of source data one compacted file should hold —
-    * the parquet sweet spot: big enough that footer/rowgroup overhead
-    * and open() costs amortize, small enough that one file is one
-    * sanely-sized task on read-back. */
-  val CompactionFileBytes: Long = 256L * 1024 * 1024
 
   /** Lay a bands frame out for its partitioned write: range-partition
     * into the planned file count — except when the plan is ONE file and
@@ -867,105 +583,6 @@ object DedupIndex {
     org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
 
-  /** Plan a compacted file count from the data's real byte size:
-    * ⌈bytes / [[CompactionFileBytes]]⌉, min 1. Used by [[compact]]
-    * (and [[AnnIndex.compact]]) when no explicit count is given — at
-    * a 100 TB table this yields ~400 k files and the same rewrite
-    * parallelism, where any constant would produce TB-sized files AND
-    * collapse the rewrite to that many tasks. */
-  def compactionFilesFor(totalBytes: Long): Int = {
-    require(totalBytes >= 0, s"totalBytes=$totalBytes must be >= 0")
-    ((totalBytes + CompactionFileBytes - 1) / CompactionFileBytes)
-      .max(1L).min(Int.MaxValue.toLong).toInt
-  }
-
-  /** Data (non-underscore, non-dot) files directly inside `dir`. */
-  private def dataFileCount(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Int =
-    Option(fs.listStatus(dir))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-      .count(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-
-  /** Data files anywhere under `dir` (partitioned tables nest them in
-    * value subdirs — bands epochs, ANN cell dirs). 0 for a missing
-    * dir. Shared with [[AnnIndex.compact]]'s early return. */
-  private[operators] def dataFileCountRecursive(
-      fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Int =
-    if (!fs.exists(dir)) 0
-    else Option(fs.listStatus(dir))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-      .map { s =>
-        if (s.isDirectory) dataFileCountRecursive(fs, s.getPath)
-        else if (!s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith(".")) 1
-        else 0
-      }.sum
-
-  /** Size-tiered merge selection with promotion — the policy both
-    * persisted indexes compact under ([[compact]] scaladoc for the
-    * cost model). `stats` must be (epoch, bytes) sorted by bytes
-    * ascending; returns the merge set: every epoch at or under
-    * `maxEpochBytes`, plus larger epochs absorbed smallest-first while
-    * the aggregate has grown past each one's size. Empty when nothing
-    * is under the tier. */
-  private[operators] def tieredSelect(stats: Seq[(String, Long)],
-      maxEpochBytes: Long): Seq[(String, Long)] = {
-    val (tier, rest) = stats.partition(_._2 <= maxEpochBytes)
-    if (tier.isEmpty) Seq.empty
-    else {
-      var agg = tier.map(_._2).sum
-      val promoted = rest.takeWhile { case (_, bytes) =>
-        val in = bytes <= agg
-        if (in) agg += bytes
-        in
-      }
-      tier ++ promoted
-    }
-  }
-
-  private[operators] def touch(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Unit = {
-    if (!fs.exists(p)) {
-      val out = fs.create(p, false)
-      out.close()
-    }
-  }
-
-  /** Write a manifest ATOMICALLY: full content to `<name>.tmp`, then
-    * rename into place. The manifest doubles as a stage's completion
-    * marker checked by EXISTENCE, so it must appear all-or-nothing — a
-    * crash mid-write must leave a `.tmp` recovery ignores, never a
-    * partial manifest recovery would trust (r15 verdict #2: trusting a
-    * truncated epoch list leaves the unlisted epochs alive beside
-    * their stage copies — duplicate index rows). Shared with
-    * [[AnnIndex.compact]]'s `_FILES`. */
-  private[graft] def writeManifest(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, lines: Seq[String]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent,
-      s"${p.getName}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(lines.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    require(fs.rename(tmp, p),
-      s"failed to commit manifest $tmp -> $p")
-  }
-
-  private[graft] def readLines(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Seq[String] = {
-    val in = fs.open(p)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      new String(bytes.toByteArray, "UTF-8").split("\n").toSeq
-        .map(_.trim).filter(_.nonEmpty)
-    } finally in.close()
-  }
-
   /** Probe: near-dup pairs (id, batch_id, jaccard) between the indexed
     * corpus and `batch`, jaccard ≥ `threshold` — same candidate
     * generation + exact-verify contract as
@@ -977,15 +594,11 @@ object DedupIndex {
     * banding would silently miss pairs at that level — rebuild with
     * banding planned for the lower threshold instead).
     *
-    * SNAPSHOT-ISOLATED vs maintenance: the plan resolves the LIVE
-    * epoch set at construction time — retired epochs (marker or a
-    * committed-but-still-marking compaction's manifest) are excluded
-    * from the explicit path list, and since [[compact]] never deletes
-    * what it retires (that is [[vacuum]]'s job, under the operator's
-    * grace), a frame planned at ANY point before/during/after a
-    * compaction — or after a crash of one, before recovery — reads a
-    * consistent epoch snapshot and serves the same pair set. The one
-    * contract left for the operator is the vacuum grace ≥ the longest
+    * SNAPSHOT-ISOLATED vs maintenance: the plan leaves a reader lease
+    * and resolves the LIVE epoch set at construction time
+    * ([[graft.index.EpochLayout]]), so a frame planned at ANY point
+    * before/during/after a compaction — or after a crash of one —
+    * serves the same pair set while the vacuum grace ≥ the longest
     * probe.
     *
     * Two plans, chosen from the batch's real row count (one cheap
@@ -1017,17 +630,18 @@ object DedupIndex {
           "Rebuild with banding planned for the lower threshold " +
           "(Dedup.lshPlanFor).")
     }
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    // advertise this plan to graced vacuums (see [[ReadersDir]]) —
-    // BEFORE resolving the live set, so no epoch live at our plan
-    // time can be reclaimed from under the frame within the horizon
-    leaveLease(fs, path)
-    val retired = retiredEpochs(fs, path)
-    val gramsT = liveTable(spark, fs, path, "grams", retired,
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // advertise this plan to graced vacuums BEFORE resolving the live
+    // set, so no epoch live at our plan time can be reclaimed from under
+    // the frame within the lease horizon
+    EpochLayout.leaveLease(fs, root)
+    val snap = EpochLayout.snapshot(fs,
+      Seq(new Path(s"$path/grams"), new Path(s"$path/bands")))
+    val gramsT = liveTable(spark, path, "grams", snap, 0,
         gramsSchema(meta, epochLayout = true))
       .select("id", "gram_hashes")
-    val bandsT = liveTable(spark, fs, path, "bands", retired,
+    val bandsT = liveTable(spark, path, "bands", snap, 1,
       bandsSchema(meta, epochLayout = true))
     // broadcast-vs-keyed decision from a BOUNDED count: each scan task
     // stops after max+1 rows, so a 100 TB backfill batch pays no extra
@@ -1054,48 +668,17 @@ object DedupIndex {
       .mapPartitions(rows => Iterator.single(rows.take(limit).size.toLong))
       .fold(0L)(_ + _)
 
-  /** The retirement record a new plan must exclude: epochs carrying a
-    * [[RetiredMarker]] in either table, plus epochs named by any
-    * committed compaction's still-riding `_EPOCHS` manifest (the
-    * rename-then-mark window — treating the manifest as retirement
-    * makes that window need no lock: without it, a probe planned
-    * after the rename but before the markers land would read each
-    * merged id twice and emit duplicate pairs). */
-  private def retiredEpochs(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Set[String] = {
-    def epochDirs(sub: String) =
-      Option(fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/$sub")))
-        .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("epoch="))
-    val all = epochDirs("grams") ++ epochDirs("bands")
-    val byMarker = all.filter(d => fs.exists(
-        new org.apache.hadoop.fs.Path(d.getPath, RetiredMarker)))
-      .map(_.getPath.getName.stripPrefix("epoch="))
-    val byManifest = epochDirs("grams").flatMap { d =>
-      val m = new org.apache.hadoop.fs.Path(d.getPath, "_EPOCHS")
-      if (fs.exists(m)) readLines(fs, m) else Seq.empty
-    }
-    (byMarker ++ byManifest).toSet
-  }
-
   /** One table's LIVE rows: the non-retired epoch directories read as
     * explicit paths (basePath keeps the partition columns), or the
     * whole directory for a pre-epoch v1 layout (no epoch dirs — flat
     * files / flat band=k dirs, nothing is ever retired there). */
-  private def liveTable(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, path: String, sub: String,
-      retired: Set[String],
-      schema: Option[org.apache.spark.sql.types.StructType] = None)
-      : DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/$sub")
-    val epochs = Option(fs.listStatus(dir))
-      .getOrElse(Array.empty[org.apache.hadoop.fs.FileStatus])
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("epoch="))
-    if (epochs.isEmpty) spark.read.parquet(dir.toString)
+  private def liveTable(spark: SparkSession, path: String, sub: String,
+      snap: EpochLayout.Snapshot, table: Int,
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+    val dir = new Path(s"$path/$sub")
+    if (snap.tables(table).isEmpty) spark.read.parquet(dir.toString)
     else {
-      val live = epochs.filterNot(e =>
-        retired(e.getPath.getName.stripPrefix("epoch=")))
+      val live = snap.live(table)
       require(live.nonEmpty,
         s"index at $path has no live $sub epochs — every epoch is " +
           "retired, which no committed state produces; restore the " +
@@ -1106,7 +689,7 @@ object DedupIndex {
       // and keep inferring
       val reader = spark.read.option("basePath", dir.toString)
       schema.fold(reader)(reader.schema)
-        .parquet(live.map(_.getPath.toString): _*)
+        .parquet(live.map(_.toString): _*)
     }
   }
 
@@ -1194,32 +777,28 @@ object DedupIndex {
       rowsPerBand: Int, overwrite: Boolean): Unit = {
     val spark = df.sparkSession
     val epoch = java.util.UUID.randomUUID().toString
-    val gramsDir = new org.apache.hadoop.fs.Path(s"$path/grams")
-    val fs = gramsDir.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    val gramsDir = new Path(s"$path/grams")
+    val fs = gramsDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (overwrite) {
       fs.delete(gramsDir, true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/bands"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(path, CompactingMarker),
-        false)
+      fs.delete(new Path(s"$path/bands"), true)
+      fs.delete(new Path(path, AnnIndex.CompactingMarker), false)
       // stale reader leases reference the index being replaced — left
       // behind they would block graced vacuums for a whole horizon
-      fs.delete(new org.apache.hadoop.fs.Path(path, ReadersDir), true)
+      fs.delete(new Path(path, EpochLayout.ReadersDir), true)
       // also clear any crash-leaked staging dirs from prior appends,
       // compactions, and migrations — a rebuild supersedes every stage
       Seq("grams_staging-*", "grams_compact-*", "bands_migrate-*",
           "bands_old-*").foreach { pat =>
-        val stale = fs.globStatus(
-          new org.apache.hadoop.fs.Path(s"$path/$pat"))
-        if (stale != null) stale.foreach(s => fs.delete(s.getPath, true))
+        EpochLayout.glob(fs, s"$path/$pat")
+          .foreach(s => fs.delete(s.getPath, true))
       }
     }
     // staging lives BESIDE grams (probes read only <path>/grams, so
     // the stage is invisible by path): a dot-prefixed dir inside grams
     // would also work but trips Spark's hidden-path listing warning on
     // every read-back, polluting the bench tail
-    val staging = new org.apache.hadoop.fs.Path(path,
-      s"grams_staging-$epoch")
+    val staging = new Path(path, s"grams_staging-$epoch")
     // REBALANCE before the write (guide §6: aim for 128 MB–1 GB output
     // files): the shingle/hash work still runs at the input's full
     // parallelism, then AQE sizes the WRITE tasks from the hashed-gram
@@ -1243,7 +822,7 @@ object DedupIndex {
     // (bands rows are smaller than their gram sets, so the files run
     // under the 256 MB target — bounded, and one append's worth)
     val stagedBytes = fs.getContentSummary(staging).getLength
-    val nBands = compactionFilesFor(stagedBytes)
+    val nBands = EpochLayout.compactionFilesFor(stagedBytes)
     bandsLayout(
         Dedup.bandTriplesFromHashes(g, "id", "gram_hashes", bands,
             rowsPerBand)
@@ -1252,11 +831,7 @@ object DedupIndex {
         Seq(col("band"), col("bh")), bands)
       .write.mode("append").partitionBy("epoch", "band")
       .parquet(s"$path/bands")
-    val committed = new org.apache.hadoop.fs.Path(gramsDir,
-      s"epoch=$epoch")
-    fs.mkdirs(gramsDir) // first build: the parent must exist to rename into
-    require(fs.rename(staging, committed),
-      s"failed to commit grams epoch $staging -> $committed")
+    EpochLayout.commit(fs, staging, new Path(gramsDir, s"epoch=$epoch"))
   }
 
   /** Distinct 64-bit shingle hashes — the stored verification set.

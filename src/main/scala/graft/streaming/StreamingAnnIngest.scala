@@ -66,7 +66,7 @@ object StreamingAnnIngest {
     * batches, the loop owns the index, compact recovers its own
     * crashed state first, and the failed epoch replays) — TIERED at
     * `compactMaxEpochBytes` (default one
-    * [[graft.operators.DedupIndex.CompactionFileBytes]], the gate's
+    * [[graft.index.EpochLayout.CompactionFileBytes]], the gate's
     * own default): a full-rewrite pass every N batches would re-read
     * and re-write the whole corpus per cycle, O(corpus²/batch)
     * lifetime I/O; under the tier each byte is rewritten O(log) times
@@ -78,7 +78,7 @@ object StreamingAnnIngest {
       indexPath: String, checkpoint: String,
       driftOut: String = "", compactEvery: Int = 0,
       compactMaxEpochBytes: Long =
-        graft.operators.DedupIndex.CompactionFileBytes): StreamingQuery = {
+        graft.index.EpochLayout.CompactionFileBytes): StreamingQuery = {
     require(compactEvery >= 0,
       s"compactEvery=$compactEvery must be >= 0 (0 = never)")
     vectors.writeStream
@@ -202,7 +202,7 @@ object StreamingAnnIngest {
       s"_compact-${java.util.UUID.randomUUID().toString}")
     spark.read.parquet(closed.map(n => s"$driftOut/$n"): _*)
       .coalesce(1).write.parquet(stage.toString)
-    graft.operators.DedupIndex.writeManifest(fs,
+    graft.index.EpochLayout.writeManifest(fs,
       new Path(stage, "_DIRS"), closed)
     commitDriftStage(fs, root, stage)
   }
@@ -219,7 +219,7 @@ object StreamingAnnIngest {
   private def commitDriftStage(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
       stage: org.apache.hadoop.fs.Path): Unit = {
-    val lines = graft.operators.DedupIndex.readLines(fs,
+    val lines = graft.index.EpochLayout.readLines(fs,
       new org.apache.hadoop.fs.Path(stage, "_DIRS"))
     lines.foreach(n =>
       fs.delete(new org.apache.hadoop.fs.Path(root, n), true))

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.index.EpochLayout
 import graft.operators.DedupIndex
 
 /** Streaming ingest gate over the persisted dedup index — the
@@ -81,7 +82,7 @@ object StreamingDedupGate {
     * the idempotent batch.
     *
     * The gate compacts TIERED (`compactMaxEpochBytes`, default one
-    * [[DedupIndex.CompactionFileBytes]] target file): a repeating
+    * [[EpochLayout.CompactionFileBytes]] target file): a repeating
     * maintenance loop that ran FULL rewrites would re-read and
     * re-write the whole corpus every compactEvery batches — lifetime
     * I/O quadratic in ingest (the r15 verdict's cost model) — while
@@ -92,7 +93,7 @@ object StreamingDedupGate {
   def start(docs: DataFrame, idCol: String, textCol: String,
       indexPath: String, outPath: String, checkpoint: String,
       threshold: Double = 0.5, compactEvery: Int = 0,
-      compactMaxEpochBytes: Long = DedupIndex.CompactionFileBytes)
+      compactMaxEpochBytes: Long = EpochLayout.CompactionFileBytes)
       : StreamingQuery = {
     require(compactEvery >= 0,
       s"compactEvery=$compactEvery must be >= 0 (0 = never)")

@@ -60,7 +60,7 @@ object StreamingEmbedDrift {
     * fast when `scale` does not match the reference's persisted one. */
   def driftAgainst(spark: SparkSession, snapshot: DataFrame,
       refPath: String, scale: Int = 1024): DataFrame = {
-    val ref = spark.read.parquet(refPath)
+    val ref = graft.Tables.parquet(spark, refPath)
     // headOption, not head(): an EMPTY reference table (frozen from an
     // all-null-vector corpus, or a partially-written dir) must fail as
     // a named contract error, not an opaque NoSuchElementException

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.{AnnIndex, DedupIndex, SimilaritySearch}
+import graft.index.EpochLayout
+import graft.operators.{AnnIndex, SimilaritySearch}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -268,7 +269,7 @@ class AnnIndexSpec extends AnyFunSuite {
       .select("id", "v", "cell")
       .repartitionByRange(2, col("cell"), col("id"))
       .write.partitionBy("cell").parquet(stage.toString)
-    DedupIndex.writeManifest(fs, new Path(stage, "_EPOCHS"),
+    EpochLayout.writeManifest(fs, new Path(stage, "_EPOCHS"),
       merged.map(e => s"gen=$gen/epoch=$e"))
     fs.mkdirs(new Path(path, "assignments_compact-incomplete"))
     // the crashed tree PROBES CORRECTLY before anyone recovers it —
@@ -287,7 +288,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // pass) — the age-gated GC leaves it; aged residue is reclaimed
     assert(fs.exists(new Path(path, "assignments_compact-incomplete")))
     fs.setTimes(new Path(path, "assignments_compact-incomplete"),
-      System.currentTimeMillis() - DedupIndex.OrphanGraceMillis - 1000,
+      System.currentTimeMillis() - EpochLayout.OrphanGraceMillis - 1000,
       -1)
     AnnIndex.compact(spark, path, targetFiles = 4)
     assert(Option(fs.globStatus(
@@ -354,7 +355,7 @@ class AnnIndexSpec extends AnyFunSuite {
     def retiredCount(): Int = fs.listStatus(
         new Path(s"$path/assignments/gen=$gen"))
       .count(s => s.isDirectory && fs.exists(
-        new Path(s.getPath, DedupIndex.RetiredMarker)))
+        new Path(s.getPath, EpochLayout.RetiredMarker)))
     assert(retiredCount() == 2,
       "both merged epochs must be retained-retired")
     // the PRE-compaction frame executes against its snapshot …
@@ -372,7 +373,7 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.vacuum(spark, path, olderThanMillis = 1L)
     assert(retiredCount() == 2,
       "a graced vacuum must not reclaim epochs a live lease predates")
-    val leases = new Path(path, DedupIndex.ReadersDir)
+    val leases = new Path(path, EpochLayout.ReadersDir)
     assert(fs.exists(leases) && fs.listStatus(leases).nonEmpty)
     // zero grace is the forced path: reclaims regardless of leases
     AnnIndex.vacuum(spark, path)
@@ -410,7 +411,7 @@ class AnnIndexSpec extends AnyFunSuite {
       .write.partitionBy("cell").parquet(mcStage.toString)
     assert(fs.rename(mcStage,
       new Path(s"$path/assignments/gen=$gen/epoch=midcommit")))
-    DedupIndex.writeManifest(fs,
+    EpochLayout.writeManifest(fs,
       new Path(s"$path/assignments/gen=$gen/epoch=midcommit/_EPOCHS"),
       old.map(e => s"gen=$gen/epoch=$e"))
     // a probe in the window: every merged id exists TWICE on disk —
@@ -463,7 +464,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // the old generation was retained (marked) — vacuum reclaims it
     val fs = hadoopFs(path)
     assert(fs.exists(new Path(s"$path/quantizer-$genBefore/" +
-      DedupIndex.RetiredMarker)))
+      EpochLayout.RetiredMarker)))
     AnnIndex.vacuum(spark, path)
     assert(!fs.exists(new Path(s"$path/quantizer-$genBefore")) &&
       !fs.exists(new Path(s"$path/assignments/gen=$genBefore")),
@@ -517,7 +518,7 @@ class AnnIndexSpec extends AnyFunSuite {
       "a never-committed generation must be invisible to probes")
     AnnIndex.compact(spark, path, retainRetired = true)
     assert(fs.exists(new Path(s"$path/quantizer-$ghost/" +
-        DedupIndex.RetiredMarker)),
+        EpochLayout.RetiredMarker)),
       "recovery must retire a generation that is neither current nor " +
         "retired")
     AnnIndex.vacuum(spark, path)
@@ -534,7 +535,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(fs.exists(orphanGen),
       "young quantizer-less gen residue must survive (age gate)")
     fs.setTimes(orphanGen, System.currentTimeMillis() -
-      DedupIndex.OrphanGraceMillis - 60000L, -1)
+      EpochLayout.OrphanGraceMillis - 60000L, -1)
     AnnIndex.compact(spark, path, retainRetired = true)
     assert(!fs.exists(orphanGen),
       "aged quantizer-less gen residue must be reclaimed")
@@ -544,7 +545,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // rename
     val cur = new Path(path, AnnIndex.CurrentPointer)
     val tmpP = new Path(path, AnnIndex.CurrentPointer + ".tmp")
-    val content = DedupIndex.readLines(fs, cur).head
+    val content = EpochLayout.readLines(fs, cur).head
     val out = fs.create(tmpP, true)
     out.write(content.getBytes("UTF-8")); out.close()
     fs.delete(cur, false)

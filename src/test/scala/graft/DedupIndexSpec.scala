@@ -1,5 +1,6 @@
 package graft
 
+import graft.index.EpochLayout
 import graft.operators.{Dedup, DedupIndex}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -478,16 +479,16 @@ class DedupIndexSpec extends AnyFunSuite {
       "per file, min 1, scaling files AND rewrite parallelism with " +
       "the index") {
     val mb = 1024L * 1024
-    assert(DedupIndex.compactionFilesFor(0L) == 1)
-    assert(DedupIndex.compactionFilesFor(1L) == 1)
-    assert(DedupIndex.compactionFilesFor(256 * mb) == 1)
-    assert(DedupIndex.compactionFilesFor(256 * mb + 1) == 2)
+    assert(EpochLayout.compactionFilesFor(0L) == 1)
+    assert(EpochLayout.compactionFilesFor(1L) == 1)
+    assert(EpochLayout.compactionFilesFor(256 * mb) == 1)
+    assert(EpochLayout.compactionFilesFor(256 * mb + 1) == 2)
     // 100 TB -> ~400k files / 400k-way rewrite, where any constant
     // would mean TB-sized files and a handful of tasks
-    assert(DedupIndex.compactionFilesFor(100L * 1024 * 1024 * mb)
+    assert(EpochLayout.compactionFilesFor(100L * 1024 * 1024 * mb)
       == 409600)
     intercept[IllegalArgumentException] {
-      DedupIndex.compactionFilesFor(-1L)
+      EpochLayout.compactionFilesFor(-1L)
     }
     // the default (targetFiles = 0) path actually engages the planner
     val path = tmp()
@@ -584,7 +585,7 @@ class DedupIndexSpec extends AnyFunSuite {
     val fs = hadoopFs(path)
     val retiredDirs = fs.listStatus(new Path(s"$path/grams"))
       .filter(s => s.isDirectory && fs.exists(
-        new Path(s.getPath, DedupIndex.RetiredMarker)))
+        new Path(s.getPath, EpochLayout.RetiredMarker)))
     assert(retiredDirs.length == 3,
       s"expected the 3 merged epochs retained-retired, got " +
         s"${retiredDirs.length}")
@@ -598,7 +599,7 @@ class DedupIndexSpec extends AnyFunSuite {
     DedupIndex.vacuum(spark, path, olderThanMillis = 3600000L)
     assert(fs.listStatus(new Path(s"$path/grams")).count(s =>
       s.isDirectory && fs.exists(new Path(s.getPath,
-        DedupIndex.RetiredMarker))) == 3,
+        EpochLayout.RetiredMarker))) == 3,
       "an hour-long grace must retain just-retired epochs")
     DedupIndex.vacuum(spark, path)
     assert(fs.listStatus(new Path(s"$path/grams")).count(_.getPath
@@ -880,12 +881,12 @@ class DedupIndexSpec extends AnyFunSuite {
       "orphan band rows only mint duplicate candidates probe dedups")
     DedupIndex.compact(spark, path) // default path vacuums immediately
     assert(fs.exists(orphan) && !fs.exists(
-        new Path(orphan, DedupIndex.RetiredMarker)),
+        new Path(orphan, EpochLayout.RetiredMarker)),
       "a young orphan could be an in-flight append's bands — the " +
         "age-gated GC must leave it alone")
     // age it past the grace: now it is unambiguous crash residue
     fs.setTimes(orphan, System.currentTimeMillis() -
-      DedupIndex.OrphanGraceMillis - 60000L, -1)
+      EpochLayout.OrphanGraceMillis - 60000L, -1)
     DedupIndex.compact(spark, path)
     assert(!fs.exists(orphan),
       "an aged orphan bands epoch must be retired and vacuumed")
@@ -978,13 +979,13 @@ class DedupIndexSpec extends AnyFunSuite {
     val planned = DedupIndex.probe(spark, path, batch(), "doc_id",
       "text", threshold = 0.5)
     val truth = rows(planned)
-    val leases = new Path(path, DedupIndex.ReadersDir)
+    val leases = new Path(path, EpochLayout.ReadersDir)
     assert(fs.exists(leases) && fs.listStatus(leases).nonEmpty,
       "a probe must leave a plan-time lease")
     DedupIndex.compact(spark, path, retainRetired = true)
     def retiredCount(): Int = fs.listStatus(new Path(s"$path/grams"))
       .count(s => s.isDirectory && fs.exists(
-        new Path(s.getPath, DedupIndex.RetiredMarker)))
+        new Path(s.getPath, EpochLayout.RetiredMarker)))
     assert(retiredCount() == 2)
     Thread.sleep(30)
     // a mis-set grace (1 ms — far under the probe's lifetime): the
@@ -999,7 +1000,7 @@ class DedupIndexSpec extends AnyFunSuite {
     // same graced vacuum reaps them and reclaims
     fs.listStatus(leases).foreach(l => fs.setTimes(l.getPath,
       System.currentTimeMillis() -
-        DedupIndex.LeaseHorizonMillis - 60000L, -1))
+        EpochLayout.LeaseHorizonMillis - 60000L, -1))
     DedupIndex.vacuum(spark, path, olderThanMillis = 1L)
     assert(retiredCount() == 0,
       "expired leases must stop blocking the graced reclaim")

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the environment (executors on a cluster do not inherit the driver's
   * environment, so an env read there is a local-only switch), and no
   * code outside `GraftSession` changes the shared session's settings, and
-  * queries read their parquet tables through `Tables`' schema cache. A/B
+  * queries read their parquet tables through `Tables`' schema cache, and
+  * the persisted-index layout is named only by its `graft.index` core. A/B
   * comparisons are made across commits with `python3 perfbench/run.py`. */
 class EngineConfigGateSpec extends AnyFunSuite {
 
@@ -46,6 +47,21 @@ class EngineConfigGateSpec extends AnyFunSuite {
     val found = offenders("src/main/scala", """\bconf\s*\.\s*(set|unset)\b""".r,
       allowed = Set("GraftSession.scala"))
     assert(found.isEmpty, s"session settings changed outside GraftSession: $found")
+  }
+
+  test("only the graft.index core names the persisted-index layout markers") {
+    // one owner for the epoch lifecycle: an operator that spells a marker
+    // itself can drift from the protocol the core keeps
+    val found = offenders("src/main/scala", """"_(RETIRED|READERS|EPOCHS)"""".r)
+      .filterNot(_.startsWith(Paths.get("src/main/scala/graft/index").toString))
+    assert(found.isEmpty, s"name the layout through graft.index.EpochLayout: $found")
+  }
+
+  test("AnnIndex reaches no DedupIndex member") {
+    val src = Files.readString(
+      Paths.get("src/main/scala/graft/operators/AnnIndex.scala"))
+    assert(!src.contains("DedupIndex."),
+      "shared index lifecycle members live in graft.index.EpochLayout")
   }
 
   test("queries read parquet tables only through the Tables schema cache") {

@@ -171,7 +171,7 @@ class StreamingAnnIngestSpec extends AnyFunSuite {
     val stage = new org.apache.hadoop.fs.Path(drift, "_compact-crashed")
     spark.read.parquet(s"$drift/ingest_batch=0", s"$drift/ingest_batch=4")
       .coalesce(1).write.parquet(stage.toString)
-    graft.operators.DedupIndex.writeManifest(fs,
+    graft.index.EpochLayout.writeManifest(fs,
       new org.apache.hadoop.fs.Path(stage, "_DIRS"),
       Seq("ingest_batch=0", "ingest_batch=4"))
     StreamingAnnIngest.compactDriftSeries(spark, drift)

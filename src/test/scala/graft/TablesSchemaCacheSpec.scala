@@ -41,6 +41,28 @@ class TablesSchemaCacheSpec extends AnyFunSuite {
       .sameElements(Seq((1, "a"), (2, "b"))))
   }
 
+  test("a warm driftAgainst reads its unchanged reference without inferring") {
+    val dir = tmp()
+    val vecs = Seq((1L, Seq(0.1, 0.2)), (2L, Seq(0.3, 0.1))).toDF("id", "v")
+    graft.streaming.StreamingEmbedDrift.writeReferenceMoments(vecs, "v",
+      s"$dir/ref")
+    val snapshot = graft.streaming.StreamingEmbedDrift.momentStream(vecs, "v")
+    val jc = JobCounter.attach(spark.sparkContext)
+    try {
+      def jobsOf(body: => Unit): Long = {
+        val before = jc.settled()
+        body
+        (jc.settled() - before).jobs
+      }
+      def drift(): Unit = graft.streaming.StreamingEmbedDrift
+        .driftAgainst(spark, snapshot, s"$dir/ref")
+      val cold = jobsOf(drift())
+      val warm = jobsOf(drift())
+      assert(warm == cold - 1,
+        s"cold ran $cold jobs, warm $warm: the warm call should skip inference")
+    } finally jc.detach()
+  }
+
   test("a table overwritten with a different schema is read with the new schema") {
     val dir = tmp()
     Seq((1, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")

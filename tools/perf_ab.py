@@ -20,10 +20,16 @@ Printed per run: every end-to-end metric, plus the host calibration
 (`host.calib_cpu_s`) and the hypervisor's `steal_share` read from the run's
 artifact (None for a run that failed). Printed per workload, seed and metric: each side's median and
 quartiles, the pairs the head won (by the metric's `better` direction in
-BENCHMARK.json), and whether the medians differ by more than the base's
-interquartile range. With `--trace 1` the runs report the per-layer
-metrics instead; name the ones to summarise with `--metric` (their
-direction is taken as lower-is-better). All runs also go to
+BENCHMARK.json), whether the medians differ by more than the base's
+interquartile range, and the acceptance verdict against the metric's
+relative `bound` in BENCHMARK.json: `WORSE` when the head's median is
+worse than the base's by more than the bound, else `unresolved` when
+either side's interquartile range exceeds the bound (the runs cannot
+tell a change of that size from noise), else `within`. Then the count
+of runs that were not correct, per side. With `--trace 1` the runs
+report the per-layer metrics instead; name the ones to summarise with
+`--metric` (their direction is taken as lower-is-better; they have no
+bound, so their verdict reads `-`). All runs also go to
 DIR/ab-<time>.json.
 """
 import argparse
@@ -107,6 +113,18 @@ def quartiles(xs):
     return q1, med, q3
 
 
+def verdict(bmed, biqr, hmed, hiqr, sign, bound):
+    """Acceptance against a relative bound: WORSE, unresolved or within
+    (see the module doc); `-` for a metric without a bound."""
+    if bound is None or not bmed or not hmed:
+        return "-"
+    if sign * (hmed - bmed) / abs(bmed) < -bound:
+        return "WORSE"
+    if (biqr[1] - biqr[0]) / abs(bmed) > bound or (hiqr[1] - hiqr[0]) / abs(hmed) > bound:
+        return "unresolved"
+    return "within"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--scratch", required=True,
@@ -125,6 +143,7 @@ def main():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
     better = {m["name"]: m["better"] for m in bench["end_to_end"]}
+    bounds = {m["name"]: m["bound"] for m in bench["end_to_end"] if "bound" in m}
     seconds = bench["run_seconds"]
     metrics = a.metric or list(better)
 
@@ -156,7 +175,7 @@ def main():
                   indent=1)
 
     print("\nworkload seed metric: base median [q1, q3] -> head median [q1, q3]"
-          "  head/base  pairs won  beyond base IQR")
+          "  head/base  pairs won  beyond base IQR  verdict")
     for w in workloads:
         for seed in seeds:
             rs = [r for r in runs if r["workload"] == w and r["seed"] == seed]
@@ -178,10 +197,12 @@ def main():
                 beyond = abs(hmed - bmed) > (bq3 - bq1)
                 print(f"{w} {seed} {m}: {bmed:.4g} [{bq1:.4g}, {bq3:.4g}] -> "
                       f"{hmed:.4g} [{hq1:.4g}, {hq3:.4g}]  {ratio:.3f}  "
-                      f"{won}/{len(full)}  {beyond}")
-            bad = [r for r in rs if not r["correct"]]
-            if bad:
-                print(f"{w} {seed}: {len(bad)} runs not correct")
+                      f"{won}/{len(full)}  {beyond}  "
+                      f"{verdict(bmed, (bq1, bq3), hmed, (hq1, hq3), sign, bounds.get(m))}")
+            for side in ("base", "head"):
+                ran = [r for r in rs if r["side"] == side]
+                bad = sum(1 for r in ran if not r["correct"])
+                print(f"{w} {seed} {side}: {bad} of {len(ran)} runs not correct")
     print(f"runs: {log}")
 
 
