@@ -42,13 +42,8 @@ class AnnIndexSpec extends AnyFunSuite {
       .map(_.getPath.getName).toSeq
   }
 
-  private def dataFiles(path: String): Int = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
-      else Seq(f)
-    walk(new java.io.File(s"$path/assignments")).count(f =>
-      !f.getName.startsWith("_") && !f.getName.startsWith("."))
-  }
+  private def dataFiles(path: String): Int =
+    TestFiles.dataFiles(s"$path/assignments").size
 
   private def probed(p: String, k: Int = 10, nprobe: Int = 4) =
     AnnIndex.probe(spark, p, queries, "vec_id", "embedding",
@@ -320,15 +315,8 @@ class AnnIndexSpec extends AnyFunSuite {
       "compaction is pure data movement — probes must not change")
     // a second pass early-returns (single epoch already at plan) —
     // the amortization guard: same file identities, no rewrite
-    def fileIds(): Seq[String] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(s"$path/assignments"))
-        .filter(f => !f.getName.startsWith("_") &&
-          !f.getName.startsWith("."))
-        .map(_.getAbsolutePath).sorted
-    }
+    def fileIds(): Seq[String] =
+      TestFiles.dataFiles(s"$path/assignments").map(_.getAbsolutePath).sorted
     val ids = fileIds()
     AnnIndex.compact(spark, path)
     assert(fileIds() == ids,

@@ -427,13 +427,8 @@ class DedupIndexSpec extends AnyFunSuite {
       .map(_.getPath.getName).toSeq
   }
 
-  private def dataFileCount(path: String): Int = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
-      else Seq(f)
-    walk(new java.io.File(path)).count(f =>
-      !f.getName.startsWith("_") && !f.getName.startsWith("."))
-  }
+  private def dataFileCount(path: String): Int =
+    TestFiles.dataFiles(path).size
 
   test("compact merges many appended epochs into one, shrinks the " +
       "file count, keeps probes byte-identical, and the index still " +
@@ -938,14 +933,8 @@ class DedupIndexSpec extends AnyFunSuite {
         s"$bandsFilesBefore -> $bandsFilesAfter")
     // … and a SECOND pass early-returns (both tables now at plan):
     // no rewrite — the amortization guard still holds
-    def bandFileNames(): Seq[String] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(s"$path/bands")).filter(f =>
-        !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .map(_.getAbsolutePath).sorted
-    }
+    def bandFileNames(): Seq[String] =
+      TestFiles.dataFiles(s"$path/bands").map(_.getAbsolutePath).sorted
     val names = bandFileNames()
     DedupIndex.compact(spark, path)
     assert(bandFileNames() == names,

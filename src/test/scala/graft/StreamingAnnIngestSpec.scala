@@ -185,13 +185,8 @@ class StreamingAnnIngestSpec extends AnyFunSuite {
       "its unmaintained twin") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    def dataFiles(p: String): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(s"$p/assignments")).count(f =>
-        !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    }
+    def dataFiles(p: String): Int =
+      TestFiles.dataFiles(s"$p/assignments").size
     def run(compactEvery: Int): (String, Seq[String]) = {
       val idx = tmp(s"ann_ingest_idx_c$compactEvery")
       AnnIndex.build(emb.where(col("vec_id") % 2 === 0),

@@ -32,13 +32,8 @@ object CompactionBench {
       .repartition(32)
     val path = java.nio.file.Files
       .createTempDirectory("graft_compaction_bench_").toString
-    def fileCount(sub: String): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(s"$path/$sub")).count(f =>
-        !f.getName.startsWith("_") && !f.getName.startsWith("."))
-    }
+    def fileCount(sub: String): Int =
+      graft.TestFiles.dataFiles(s"$path/$sub").size
     val batch = docs.where(col("doc_id") % 5 === 0)
       .select((col("doc_id") + 300000L).as("doc_id"),
         concat(col("text"), lit(" crawl extra tail")).as("text"))

@@ -5,10 +5,10 @@ package graft.tools
   * queries in isolation with the noop sink and dump their
   * `.explain("formatted")` plans for the plans/rNN/ evidence files.
   *
-  * Methodology mirrors Bench exactly — warm pass at sf0.001 (codegen/JIT
-  * outside the timed region), min-of-N at the target SF with cache clears
-  * between reps, `local[$SPARK_GRAFT_CPUS]`, shuffle.partitions = cpus,
-  * AQE on — so numbers here are directly comparable to BENCH_*.json rows.
+  * The warm pass and each timed rep are Bench's own `warm` and
+  * `timeQuery`, on a `GraftSession.local($SPARK_GRAFT_CPUS)` session, so
+  * numbers here are directly comparable to BENCH_*.json rows. Reports
+  * the min of N reps at the target SF.
   *
   * Run: sbt "Test/runMain graft.tools.QueryBench <plansDir> <suffix> <reps> q1,q2,..."
   *   e.g. sbt "Test/runMain graft.tools.QueryBench plans/r17 before 3 q_minhash_pairs,q_dedup_canonical"
@@ -25,7 +25,6 @@ object QueryBench {
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val warmDir = "/root/testdata/sf0.001"
 
     val spark = graft.GraftSession.local(cpus.toInt, "graft-querybench")
 
@@ -33,10 +32,7 @@ object QueryBench {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(plansDir))
 
     names.filter(qs.contains).foreach { name =>
-      spark.sparkContext.setJobDescription(s"$name warm")
-      try qs(name)(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      spark.catalog.clearCache(); graft.operators.Caches.clear()
+      graft.Bench.warm(spark, Seq(name))
 
       // plan dump happens on a fresh frame so persisted intermediates from
       // the warm pass cannot change the captured shape
@@ -52,21 +48,7 @@ object QueryBench {
       }
       spark.catalog.clearCache(); graft.operators.Caches.clear()
 
-      val times = (1 to reps).map { _ =>
-        spark.sparkContext.setJobDescription(s"$name timed")
-        val t0 = System.nanoTime()
-        val ok =
-          try {
-            qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-            true
-          } catch { case e: Throwable =>
-            System.err.println(s"[qbench] $name failed: ${e.getMessage}")
-            false
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache(); graft.operators.Caches.clear()
-        if (ok) sec else -1.0
-      }
+      val times = (1 to reps).map(_ => graft.Bench.timeQuery(spark, name, sfDir))
       val good = times.filter(_ >= 0)
       val min = if (good.isEmpty) -1.0 else good.min
       println(f"QBENCH $name%-28s min=$min%8.3f reps=" +
